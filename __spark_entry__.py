@@ -406,9 +406,9 @@ def q_embedding_norms(spark, sf_dir):
 
 
 def q_knn_all_cells(spark, sf_dir):
-    """Distributed ring-expansion nearest_all (cell grid, all ties) —
-    the large✕large kNN plan, oracle-checked against the SQL min-
-    distance window."""
+    """Distributed cell nearest_all (one bound-then-probe pass, all
+    ties) — the large✕large kNN plan, oracle-checked against the SQL
+    min-distance window."""
     ship_package(spark)
     pts = _cust_points(spark, sf_dir).select(
         F.col("c_custkey").alias("left_id"), F.col("point").alias("geom"))
@@ -416,15 +416,15 @@ def q_knn_all_cells(spark, sf_dir):
         F.col("s_suppkey").alias("right_id"), F.col("point").alias("geom"))
     nn = SK.cell_nearest_all(pts, supp, left_geom="geom", right_geom="geom",
                              left_id="left_id", right_id="right_id",
-                             res=3, max_rings=16, shells_per_round=4)
+                             res=3, max_rings=16)
     return nn.select(F.col("left_id").alias("c_custkey"),
                      F.col("right_id").alias("s_suppkey"))
 
 
 def q_knn_mixed_geoms(spark, sf_dir):
     """General-geometry distributed nearest (r4): customer points vs
-    nation BOXES through the assume_points=False ring-expansion path —
-    cover-seeded shells, ids-only shuffles, grouped batch pair
+    nation BOXES through the assume_points=False path — cover-seeded
+    cell disks, ids-only shuffles, grouped batch pair
     distance (kernel.predicates.batch_distance_one, no per-pair
     Python).  Point-to-axis-box distance has the exact GREATEST
     closed form the oracle reproduces; all ties kept."""
@@ -436,7 +436,7 @@ def q_knn_mixed_geoms(spark, sf_dir):
     nn = SK.cell_nearest_all(pts, boxes, left_geom="geom",
                              right_geom="geom", left_id="left_id",
                              right_id="right_id", res=3, max_rings=16,
-                             shells_per_round=4, assume_points=False)
+                             assume_points=False)
     return (nn.select(F.col("left_id").alias("c_custkey"),
                       F.col("right_id").alias("polygon_id"))
             .orderBy("c_custkey", "polygon_id"))

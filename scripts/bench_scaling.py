@@ -57,7 +57,8 @@ N_PAGES = 24_000_000
 # the same stall protocol qualifies); default stays local[4]/local[16].
 LEVELS = tuple(int(v) for v in os.environ.get(
     "SPARK_GRAFT_SCALING_LEVELS", "4,16").split(","))
-assert len(LEVELS) == 2 and LEVELS[1] == 4 * LEVELS[0], LEVELS
+if len(LEVELS) != 2 or LEVELS[1] != 4 * LEVELS[0]:
+    raise ValueError(f"SPARK_GRAFT_SCALING_LEVELS must be 'N,4N', got {LEVELS}")
 RUNS = {LEVELS[0]: 2, LEVELS[1]: 4}  # timed runs per level per pass
                       # (after 2 warmups); the big leg is cheap and
                       # stall-exposed, so it gets more shots at a

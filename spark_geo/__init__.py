@@ -12,7 +12,7 @@ from-scratch spatial-join + tiling pipeline on top:
 - coarse index: deterministic quad-grid cell ids (``spark_geo.kernel.cell``)
 - joins: broadcast STRtree (small right side) or two-phase
   cell-equi-join + exact refine (large-large), see ``spark_geo.join``
-- kNN: ring-expansion nearest_all with all-ties semantics
+- kNN: broadcast or single-pass cell nearest_all with all-ties semantics
   (``spark_geo.knn``)
 - tiling: raster<->vector per-cell aggregation (``spark_geo.tiles``)
 - pages pipeline: geocode Common-Crawl-style pages, salting,

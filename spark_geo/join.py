@@ -64,6 +64,14 @@ def _collect_right(right, cols, limit, api):
     return rows
 
 
+def _right_limit(max_right_rows, right_lon, right_lat, api):
+    """Collect cap of the lon/lat broadcast APIs; an explicit 0 is a
+    cap, and the right coordinate columns come as a pair or not at all."""
+    if (right_lon is None) != (right_lat is None):
+        raise ValueError(f"{api}: give both right_lon and right_lat, or neither")
+    return BROADCAST_RIGHT_LIMIT if max_right_rows is None else max_right_rows
+
+
 # ---------------------------------------------------------------------------
 # batch-level probe (runs inside the Python worker)
 # ---------------------------------------------------------------------------
@@ -326,8 +334,8 @@ def broadcast_spatial_join(left: DataFrame, right: DataFrame, *,
     if predicate is not None and predicate != "dwithin" and predicate not in PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r}; one of {sorted(k for k in PREDICATES if k)}")
     rows = _collect_right(right, [right_id, right_geom],
-                          max_right_rows or BROADCAST_RIGHT_LIMIT,
-                          "broadcast_spatial_join")
+                          BROADCAST_RIGHT_LIMIT if max_right_rows is None
+                          else max_right_rows, "broadcast_spatial_join")
     ids = np.asarray([r[0] for r in rows], dtype=np.int64)
     geoms = [SG._loads_safe(r[1]) for r in rows]
     tree = STRtree(geoms, leafsize=leafsize)
@@ -374,7 +382,8 @@ def broadcast_lonlat_join(left: DataFrame, right: DataFrame, *,
 
     Output: keep columns + [cell] + right_id.  At 10^12 rows this is
     the plan that matters: one Arrow roundtrip of ~16 bytes/row."""
-    limit = max_right_rows or BROADCAST_RIGHT_LIMIT
+    limit = _right_limit(max_right_rows, right_lon, right_lat,
+                         "broadcast_lonlat_join")
     if right_lon is not None:
         rows = _collect_right(right, [right_id, right_lon, right_lat],
                               limit, "broadcast_lonlat_join")

@@ -37,10 +37,10 @@ def cell_of(lon, lat, res: int):
     bad = np.isnan(lon) | np.isnan(lat)
     lon = np.where(bad, 0.0, lon)
     lat = np.where(bad, 0.0, lat)
-    ix = np.floor((lon + 180.0) / 360.0 * n).astype(np.int64)
-    iy = np.floor((lat + 90.0) / 180.0 * n).astype(np.int64)
-    ix = np.clip(ix, 0, n - 1)
-    iy = np.clip(iy, 0, n - 1)
+    # clip before the int cast, like Catalyst's saturating cast in
+    # st_cell_lonlat: far or infinite coordinates land on the edge cell
+    ix = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
+    iy = np.clip(np.floor((lat + 90.0) / 180.0 * n), 0, n - 1).astype(np.int64)
     cell = (np.int64(res) << _RES_SHIFT) | (iy << _IY_SHIFT) | ix
     return np.where(bad, np.int64(-1), cell)
 

@@ -11,13 +11,11 @@ Semantics from the reference:
 Physical plans:
 - **broadcast** (default): STRtree best-first nearest per Arrow batch
   inside mapInPandas — no shuffle.
-- **cell ring expansion** (large✕large, point✕point): phase 1 probes
-  growing ring shells until each left row sees a first hit at
-  distance d₀; phase 2 probes the full cell disk of radius
-  ceil(d₀/h) — a guaranteed superset of anything within d₀ — and
-  keeps all rows at the exact minimum (tie-complete; this replaces
-  the reference's 1e-6 distance-inflation trick,
-  src/strtree.c:654-695, with an exact bound).
+- **cell kNN** (large✕large): one representative right point per
+  occupied cell bounds each left row's nearest distance by d_ub; one
+  cell disk of radius ceil(d_ub/h) per left row, equi-joined to the
+  right cells, holds every right at the exact minimum, and all rows at
+  that minimum are kept (tie-complete, no driver rounds).
 """
 
 from __future__ import annotations
@@ -26,7 +24,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from .kernel import cell as K_cell
 from .kernel import wkb as K_wkb
@@ -56,8 +53,8 @@ def broadcast_nearest_all(left: DataFrame, right: DataFrame, *,
     """All-ties nearest join; output = left columns + right_id + distance."""
     from .join import BROADCAST_RIGHT_LIMIT, _collect_right
     rows = _collect_right(right, [right_id, right_geom],
-                          max_right_rows or BROADCAST_RIGHT_LIMIT,
-                          "broadcast_nearest_all")
+                          BROADCAST_RIGHT_LIMIT if max_right_rows is None
+                          else max_right_rows, "broadcast_nearest_all")
     ids = np.asarray([r[0] for r in rows], dtype=np.int64)
     geoms = [SG._loads_safe(r[1]) for r in rows]
     tree = STRtree(geoms)
@@ -146,8 +143,10 @@ def _nearest_all_points(xs, ys, txs, tys, tpos, max_distance):
     span = max(xmax - xmin, ymax - ymin, 1e-300)
     n_side = int(np.clip(np.sqrt(m), 1, 1 << 15))
     cw = span / n_side
-    tix = np.clip(((txs - xmin) / cw).astype(np.int64), 0, n_side - 1)
-    tiy = np.clip(((tys - ymin) / cw).astype(np.int64), 0, n_side - 1)
+    # clip in the float domain: a probe far outside the grid must not
+    # reach a float -> int64 cast that is out of range
+    tix = np.clip((txs - xmin) / cw, 0, n_side - 1).astype(np.int64)
+    tiy = np.clip((tys - ymin) / cw, 0, n_side - 1).astype(np.int64)
     tcells = tiy * n_side + tix
     order = np.argsort(tcells, kind="stable")
     tcells_s = tcells[order]
@@ -171,8 +170,8 @@ def _nearest_all_points(xs, ys, txs, tys, tpos, max_distance):
     valid = ~(np.isnan(xs) | np.isnan(ys))
     sxs = np.where(valid, xs, 0.0)
     sys_ = np.where(valid, ys, 0.0)
-    gx = np.clip(((sxs - xmin) / cw).astype(np.int64), 0, n_side - 1)
-    gy = np.clip(((sys_ - ymin) / cw).astype(np.int64), 0, n_side - 1)
+    gx = np.clip((sxs - xmin) / cw, 0, n_side - 1).astype(np.int64)
+    gy = np.clip((sys_ - ymin) / cw, 0, n_side - 1).astype(np.int64)
 
     # -- phase 1: ring expansion until the minimum is proven ----------
     best = np.full(n, np.inf)
@@ -303,8 +302,9 @@ def nearest_all_lonlat(left: DataFrame, right: DataFrame, *,
     arrays only (no tree, no Geom objects), removing the per-query
     st_point evaluation job and the object-pickle cost from the
     driver path."""
-    from .join import BROADCAST_RIGHT_LIMIT, _collect_right
-    limit = max_right_rows or BROADCAST_RIGHT_LIMIT
+    from .join import _right_limit, _collect_right
+    limit = _right_limit(max_right_rows, right_lon, right_lat,
+                         "nearest_all_lonlat")
     if right_lon is not None:
         rows = _collect_right(right, [right_id, right_lon, right_lat],
                               limit, "nearest_all_lonlat")
@@ -398,272 +398,269 @@ def nearest(left: DataFrame, right: DataFrame, *,
 
 
 # ---------------------------------------------------------------------------
-# cell ring-expansion kNN (large ✕ large)
+# cell kNN (large ✕ large): bound every row, then probe one cell disk
 # ---------------------------------------------------------------------------
 
 def cell_nearest_all(left: DataFrame, right: DataFrame, *,
                      left_geom: str = "geom", right_geom: str = "geom",
                      left_id: str = "left_id", right_id: str = "right_id",
                      res: int = 7, max_rings: int = 16,
-                     shells_per_round: int = 4,
                      max_distance: float | None = None,
                      assume_points: bool = True) -> DataFrame:
-    """Distributed all-ties nearest via cell ring expansion.
+    """Distributed all-ties nearest in one bound-then-probe pass.
 
-    Phase 1 probes ``shells_per_round`` ring shells per driver round
-    (fewer Spark jobs on sparse data; slight over-probe is harmless —
-    phase 2 recomputes the exact disk anyway).  Returns (left_id,
-    right_id, distance); left rows with no right point within
-    ``max_rings`` cells (or ``max_distance``) are omitted —
-    inner-join semantics like the reference.
+    Returns (left_id, right_id, distance).  A left row is answered when
+    some right geometry lies within ``max_rings`` Chebyshev cells of it
+    at ``res`` (longitude wraps) and within ``max_distance``; the answer
+    is every right row at its exact global minimum distance, which may
+    lie beyond the ring limit.  Other rows are omitted (inner-join
+    semantics like the reference), as are rows with no finite position.
 
-    ``assume_points=True`` is the vectorized point✕point plan (lon/lat
-    doubles only, Catalyst hypot).  ``assume_points=False`` accepts ANY
-    geometries on both sides (reference nearest_all, strtree.py:278):
-    each side explodes its st_cell_cover cells, ring/disk expansion
-    runs per left cover cell, the candidate shuffle carries only ids,
-    and geometries equi-join back for the exact kernel distance.  The
-    disk bound stays exact: a right geom within d0 of a left geom has
-    a point p within d0 of some left point q, so p's cover cell is
-    within ceil(d0/h) Chebyshev cells of q's."""
-    if not assume_points:
-        return _cell_nearest_all_geoms(
-            left, right, left_geom=left_geom, right_geom=right_geom,
-            left_id=left_id, right_id=right_id, res=res,
-            max_rings=max_rings, shells_per_round=shells_per_round,
-            max_distance=max_distance)
+    One driver collect, no caches:
+
+    1. One right crossing decodes (_rid, _rx, _ry, _cell) rows: one per
+       point, or one per ``st_cell_cover`` cell of a geometry carrying
+       its first vertex.  One representative real right point per
+       occupied cell is collected under the broadcast cap (at a coarser
+       parent resolution if the cap is hit) and broadcast.
+    2. One left crossing drops rows with no occupied cell within
+       ``max_rings``, bounds each row's minimum by d_ub, the distance
+       to the nearest representative, and emits the cell disk of radius
+       ceil(min(d_ub, max_distance)/h) around the row's cell (points)
+       or every cover cell (geometries).  Geometries within d have
+       points within d whose cells are within ceil(d/h) of each other,
+       so the disk holds every right row at the minimum.
+    3. One equi-join on cell feeds the distance: Catalyst ``hypot`` for
+       points (``assume_points=True``), else an id-only pair shuffle, a
+       geometry equi-join and the grouped batch distance kernel.  Each
+       pair keeps the Chebyshev ring of its closest cell pair, so the
+       ring limit is exact.  Ties are exact float equality (replacing
+       the reference's 1e-6 distance inflation, src/strtree.c:654-695).
+    """
+    from .join import BROADCAST_RIGHT_LIMIT, _collect_right
     h = 180.0 / (1 << res)  # cell height (deg); width is 2h
     if max_distance is not None:
+        # a right within max_distance is within ceil(max_distance/h) rings
         max_rings = min(max_rings, int(np.ceil(max_distance / h)) + 1)
+    lid_t = left.schema[left_id].dataType.simpleString()
+    rid_t = right.schema[right_id].dataType.simpleString()
 
-    l = left.select(
-        F.col(left_id).alias("_lid"),
-        SG.st_x(F.col(left_geom)).alias("_lx"),
-        SG.st_y(F.col(left_geom)).alias("_ly"),
-    ).where(~F.isnan(F.col("_lx")))
-    r = (right.select(
-        F.col(right_id).alias("_rid"),
-        SG.st_x(F.col(right_geom)).alias("_rx"),
-        SG.st_y(F.col(right_geom)).alias("_ry"))
-        .where(~F.isnan(F.col("_rx")))
-        .withColumn("_cell", SG.st_cell_lonlat(F.col("_rx"), F.col("_ry"), res))
-        .cache())
+    def right_cells(batches):
+        for pdf in batches:
+            prow, px, py, srow, seeds = _decode_seeds(
+                pdf.iloc[:, 1].to_numpy(), res, assume_points)
+            first = np.searchsorted(prow, srow)  # each row's first vertex
+            yield pd.DataFrame({"_rid": pdf.iloc[srow, 0].to_numpy(),
+                                "_rx": px[first], "_ry": py[first],
+                                "_cell": seeds})
 
-    # phase 1: grow ring-shell groups until each left row has a first hit
-    remaining = l
-    first_hits = []  # DataFrames of (_lid, _lx, _ly, _d0)
-    k = 0
-    while k <= max_rings:
-        if remaining.limit(1).count() == 0:
+    r = right.select(right_id, right_geom).mapInPandas(
+        right_cells, f"_rid {rid_t}, _rx double, _ry double, _cell long")
+
+    # a parent cell's representative is still a real right point, so a
+    # coarser table only loosens the bound and the occupancy filter
+    rres = res
+    while True:
+        reps = (r.groupBy(SG.st_cell_parent("_cell", rres).alias("_c"))
+                .agg(F.min(F.struct("_rx", "_ry")).alias("_p")))
+        try:
+            rows = _collect_right(reps, ["_c", "_p._rx", "_p._ry"],
+                                  BROADCAST_RIGHT_LIMIT, "cell_nearest_all")
             break
-        k_hi = min(k + shells_per_round - 1, max_rings)
-        probes = remaining.withColumn(
-            "_cell", F.explode(_shell_range_udf(
-                SG.st_cell_lonlat(F.col("_lx"), F.col("_ly"), res), k, k_hi)))
-        k = k_hi + 1
-        hits = (probes.join(r, "_cell")
-                .withColumn("_d", F.hypot(F.col("_lx") - F.col("_rx"),
-                                          F.col("_ly") - F.col("_ry"))))
-        if max_distance is not None:
-            hits = hits.where(F.col("_d") <= max_distance)
-        d0 = hits.groupBy("_lid", "_lx", "_ly").agg(F.min("_d").alias("_d0"))
-        d0 = d0.cache()
-        if d0.limit(1).count():
-            first_hits.append(d0)
-            remaining = remaining.join(d0.select("_lid"), "_lid", "left_anti")
-    if not first_hits:
-        schema = T.StructType([
-            T.StructField(left_id, T.LongType()),
-            T.StructField(right_id, T.LongType()),
-            T.StructField("distance", T.DoubleType())])
-        return left.sparkSession.createDataFrame([], schema)
+        except ValueError:
+            if rres == 0:
+                raise
+            rres -= 1
+    oix, oiy = K_cell.cell_ixy(np.array([v[0] for v in rows], np.int64))
+    rx, ry = np.array([v[1:] for v in rows], np.float64).reshape(-1, 2).T
+    f = 1 << (res - rres)
+    # occupied bounding box in res cells: no disk needs to reach past it
+    box = ((oix.min() * f, oiy.min() * f, (oix.max() + 1) * f - 1,
+            (oiy.max() + 1) * f - 1) if len(rows) else (0, 0, 0, 0))
+    bc = left.sparkSession.sparkContext.broadcast(
+        (rres, np.sort(oiy * (1 << rres) + oix), rx, ry, box))
+    cap_d = np.inf if max_distance is None else max_distance
 
-    seeds = first_hits[0]
-    for d in first_hits[1:]:
-        seeds = seeds.unionByName(d)
+    def left_disks(batches):
+        rres_l, okeys, rx_l, ry_l, (bx0, by0, bx1, by1) = bc.value
+        tpos = np.arange(len(rx_l), dtype=np.int64)
+        for pdf in batches:
+            n = len(pdf)
+            prow, px, py, srow, seeds = _decode_seeds(
+                pdf.iloc[:, 1].to_numpy(), res, assume_points)
+            keep = np.zeros(n, bool)
+            keep[srow[_near_occupied(seeds, okeys, res, rres_l,
+                                     max_rings)]] = True
+            pk = keep[prow]
+            li, _, dd = _nearest_all_points(px[pk], py[pk], rx_l, ry_l,
+                                            tpos, None)
+            d_ub = np.full(n, np.inf)
+            np.minimum.at(d_ub, prow[pk][li], dd)
+            sk = keep[srow]
+            srow, seeds = srow[sk], seeds[sk]
+            sx, sy = K_cell.cell_ixy(seeds)
+            reach = np.maximum(np.maximum(np.abs(sx - bx0), np.abs(sx - bx1)),
+                               np.maximum(np.abs(sy - by0), np.abs(sy - by1)))
+            ks = np.minimum(np.ceil(np.minimum(d_ub[srow], cap_d) / h),
+                            reach).astype(np.int64)
+            row, cells, ring = _disk_cells(srow, seeds, ks, res)
+            out = {"_lid": pdf.iloc[row, 0].to_numpy()}
+            if assume_points:
+                lx, ly = np.full(n, np.nan), np.full(n, np.nan)
+                lx[prow], ly[prow] = px, py
+                out["_lx"], out["_ly"] = lx[row], ly[row]
+            out["_cell"], out["_ring"] = cells, ring.astype(np.int32)
+            yield pd.DataFrame(out)
 
-    # phase 2: exact disk probe of radius ceil(d0/h) per left row
-    probes = seeds.withColumn(
-        "_cell", F.explode(_disk_udf(
-            SG.st_cell_lonlat(F.col("_lx"), F.col("_ly"), res), F.col("_d0"), res)))
-    cand = (probes.join(r, "_cell")
-            .withColumn("_d", F.hypot(F.col("_lx") - F.col("_rx"),
-                                      F.col("_ly") - F.col("_ry"))))
+    disks = left.select(left_id, left_geom).mapInPandas(
+        left_disks, f"_lid {lid_t}, "
+        + ("_lx double, _ly double, " if assume_points else "")
+        + "_cell long, _ring int")
+    if assume_points:
+        cand = disks.join(r, "_cell").select(
+            "_lid", "_rid", "_ring",
+            F.hypot(F.col("_lx") - F.col("_rx"),
+                    F.col("_ly") - F.col("_ry")).alias("_d"))
+    else:
+        pairs = (disks.join(r.select("_rid", "_cell"), "_cell")
+                 .groupBy("_lid", "_rid").agg(F.min("_ring").alias("_ring")))
+        lg = left.select(F.col(left_id).alias("_lid"),
+                         F.col(left_geom).alias("_lgeom"))
+        rg = right.select(F.col(right_id).alias("_rid"),
+                          F.col(right_geom).alias("_rgeom"))
+        cand = (pairs.join(lg, "_lid").join(rg, "_rid")
+                .mapInPandas(_dist_refine, f"_lid {lid_t}, _rid {rid_t}, "
+                                           "_ring int, _d double")
+                .where(~F.isnan("_d")))
     if max_distance is not None:
         cand = cand.where(F.col("_d") <= max_distance)
     w = Window.partitionBy("_lid")
-    out = (cand.withColumn("_dmin", F.min("_d").over(w))
-           .where(F.col("_d") == F.col("_dmin"))
-           .select(F.col("_lid").alias(left_id), F.col("_rid").alias(right_id),
-                   F.col("_d").alias("distance"))
-           .dropDuplicates([left_id, right_id]))
-    return out
+    return (cand.withColumn("_dmin", F.min("_d").over(w))
+            .withColumn("_rmin", F.min("_ring").over(w))
+            .where((F.col("_d") == F.col("_dmin"))
+                   & (F.col("_rmin") <= max_rings))
+            .select(F.col("_lid").alias(left_id),
+                    F.col("_rid").alias(right_id),
+                    F.col("_d").alias("distance"))
+            .dropDuplicates([left_id, right_id]))
 
 
-def _cell_nearest_all_geoms(left: DataFrame, right: DataFrame, *,
-                            left_geom: str, right_geom: str,
-                            left_id: str, right_id: str,
-                            res: int, max_rings: int,
-                            shells_per_round: int,
-                            max_distance: float | None) -> DataFrame:
-    """General-geometry ring expansion (see cell_nearest_all).  Cites
-    reference strtree.py:278-355 (nearest_all over arbitrary geometry
-    arrays) for the semantics; the physical plan is id-only candidate
-    shuffles + per-pair exact distance after a geometry equi-join."""
-    h = 180.0 / (1 << res)
-    if max_distance is not None:
-        max_rings = min(max_rings, int(np.ceil(max_distance / h)) + 1)
+def _decode_seeds(raw, res: int, points: bool):
+    """WKB column -> probe vertices (prow, px, py) and seed cells
+    (srow, seeds), both ordered by row.  A point is its own probe and
+    seed; a geometry probes with every vertex and seeds every cell of
+    its ``st_cell_cover``.  Rows with no finite position (NULL, empty,
+    malformed, NaN/inf coordinates) get neither."""
+    if points:
+        xs, ys = K_wkb.decode_points(
+            np.asarray([SG._b(v) for v in raw], dtype=object))
+        rows = np.nonzero(np.isfinite(xs) & np.isfinite(ys))[0]
+        return (rows, xs[rows], ys[rows], rows,
+                K_cell.cell_of(xs[rows], ys[rows], res))
+    prow, pts, srow, seeds = [], [], [], []
+    for i, v in enumerate(raw):
+        g = SG._loads_safe(v)
+        c = None if g is None or g.is_empty else g.all_coords()
+        if c is None or not len(c) or not np.isfinite(c).all():
+            continue
+        cov = K_cell.cover_to_res(K_cell.cover(g, res), res)
+        prow.append(np.full(len(c), i, np.int64))
+        pts.append(c)
+        srow.append(np.full(len(cov), i, np.int64))
+        seeds.append(cov)
+    if not prow:
+        e = np.empty(0, np.int64)
+        return e, np.empty(0), np.empty(0), e, e
+    pts = np.concatenate(pts)
+    return (np.concatenate(prow), pts[:, 0], pts[:, 1],
+            np.concatenate(srow), np.concatenate(seeds))
 
-    lg = left.select(F.col(left_id).alias("_lid"),
-                     F.col(left_geom).alias("_lgeom"))
-    rg = right.select(F.col(right_id).alias("_rid"),
-                      F.col(right_geom).alias("_rgeom"))
-    l_cov = (lg.select("_lid",
-                       F.explode(SG.st_cell_cover(F.col("_lgeom"), res))
-                       .alias("_lcell")).cache())
-    r_cells = (rg.select("_rid",
-                         F.explode(SG.st_cell_cover(F.col("_rgeom"), res))
-                         .alias("_cell")).cache())
 
+def _near_occupied(seeds, okeys, res: int, rres: int, rings: int):
+    """True where an occupied cell lies within ``rings`` Chebyshev cells
+    (at ``res``) of the seed cell; longitude wraps, latitude clamps.
+    ``okeys`` are the occupied cells at ``rres`` <= ``res`` as sorted
+    ``iy * 2^rres + ix`` keys.  Ring distance r at res is at most
+    ceil(r / 2^(res - rres)) at rres, so a coarse table gives a
+    conservative test.  Each distinct coarse seed cell checks one key
+    range per stencil row, in blocks so cells ✕ stencil stays bounded."""
+    shift = res - rres
+    n = 1 << rres
+    k = min(-(-rings >> shift), n)  # ceil(rings / 2^shift)
+    sx, sy = K_cell.cell_ixy(seeds)
+    ukeys, inv = np.unique((sy >> shift) * n + (sx >> shift),
+                           return_inverse=True)
+    near = np.zeros(len(ukeys), bool)
+    step = max(1, (1 << 20) // (2 * k + 1))
+    for s in range(0, len(ukeys), step):
+        iy, ix = np.divmod(ukeys[s:s + step], n)
+        yy = iy[:, None] + np.arange(-k, k + 1)[None, :]
+        if 2 * k + 1 >= n:
+            segs = [(np.zeros_like(ix), np.full_like(ix, n - 1))]
+        else:  # the stencil's x range, split where it wraps
+            lo, hi = ix - k, ix + k
+            segs = [(np.maximum(lo, 0), np.minimum(hi, n - 1)),
+                    (np.where(lo < 0, lo + n, 0),
+                     np.where(lo < 0, n - 1, hi - n))]
+        hit = np.zeros(yy.shape, bool)
+        for a, b in segs:
+            cnt = (np.searchsorted(okeys, yy * n + b[:, None], "right")
+                   - np.searchsorted(okeys, yy * n + a[:, None], "left"))
+            hit |= (cnt > 0) & (a <= b)[:, None]
+        near[s:s + step] = (hit & (yy >= 0) & (yy < n)).any(axis=1)
+    return near[inv]
+
+
+def _disk_cells(srow, seeds, ks, res: int):
+    """Every cell within ``ks[i]`` Chebyshev cells of ``seeds[i]``, as
+    (row, cell, ring) with one entry per (row, cell) and ring the
+    wrapped Chebyshev distance to the row's nearest seed.  Seeds with
+    the same radius expand together, chunked so rows ✕ stencil stays
+    bounded (one far seed must not allocate a huge matrix for all
+    rows)."""
+    n = 1 << res
+    sel_parts, cell_parts = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for k in np.unique(ks):
+        sel = np.nonzero(ks == k)[0]
+        step = max(1, (1 << 22) // (2 * int(k) + 1) ** 2)
+        for s in range(0, len(sel), step):
+            part = sel[s:s + step]
+            cells, valid = K_cell.k_ring_batch(seeds[part], int(k))
+            i, j = np.nonzero(valid)
+            sel_parts.append(part[i])
+            cell_parts.append(cells[i, j])
+    si, cells = np.concatenate(sel_parts), np.concatenate(cell_parts)
+    ax, ay = K_cell.cell_ixy(seeds[si])
+    bx, by = K_cell.cell_ixy(cells)
+    dx = np.abs(ax - bx)
+    ring = np.maximum(np.minimum(dx, n - dx), np.abs(ay - by))
+    row = srow[si]
+    order = np.lexsort((ring, cells, row))
+    row, cells, ring = row[order], cells[order], ring[order]
+    first = np.ones(len(row), bool)
+    first[1:] = (row[1:] != row[:-1]) | (cells[1:] != cells[:-1])
+    return row[first], cells[first], ring[first]
+
+
+def _dist_refine(batches):
+    """Grouped exact pair distance over (_lid, _rid, _ring, _lgeom,
+    _rgeom) rows: each distinct left is prepared once per Arrow batch,
+    each right decoded once per group, and the pairs go through the
+    vectorized batch kernel."""
     from .kernel import predicates as K_p
-    dist_schema = T.StructType([
-        T.StructField("_lid", left.schema[left_id].dataType),
-        T.StructField("_rid", right.schema[right_id].dataType),
-        T.StructField("_d", T.DoubleType())])
-
-    def _dist_refine(batches):
-        """Grouped exact pair distance: each DISTINCT left prepared
-        once per Arrow batch, each right decoded once per group, the
-        pairs go through the vectorized batch kernel (r4 — replaces
-        the per-pair st_distance Python loop for non-point operands,
-        VERDICT r3 item 7)."""
-        for pdf in batches:
-            pdf = pdf[pdf["_lid"].notna()].reset_index(drop=True)
-            if not len(pdf):
-                continue
-            lraw = pdf["_lgeom"].to_numpy()
-            rraw = pdf["_rgeom"].to_numpy()
-            codes, uniq = pd.factorize(pdf["_lid"].to_numpy())
-            first = np.zeros(len(uniq), dtype=np.int64)
-            seen, fidx = np.unique(codes, return_index=True)
-            first[seen] = fidx
-            lgeoms = [SG._loads_safe(lraw[i]) for i in first]
-            prep = K_p.prepare_batch_lefts(lgeoms)
-            dvals = np.full(len(pdf), np.nan)
-            for _rid, idx in pdf.groupby("_rid", sort=False).indices.items():
-                gg = SG._loads_safe(rraw[idx[0]])
-                dvals[idx] = K_p.batch_distance_one(prep, codes[idx], gg)
-            pdf = pdf.assign(_d=dvals)
-            yield pdf[["_lid", "_rid", "_d"]]
-
-    def pair_dists(cells):
-        """(_lid, _cell) probes -> exact (_lid, _rid, _d) pairs."""
-        cand = (cells.join(r_cells, "_cell")
-                .select("_lid", "_rid").dropDuplicates(["_lid", "_rid"]))
-        p = cand.join(lg, "_lid").join(rg, "_rid")
-        d = p.mapInPandas(_dist_refine, schema=dist_schema)
-        if max_distance is not None:
-            d = d.where(F.col("_d") <= max_distance)
-        return d.where(~F.isnan("_d"))
-
-    # per-round localCheckpoint (same discipline as text.
-    # connected_components): each round's d0 is materialized once and
-    # its lineage truncated, and `remaining` never accumulates a chain
-    # of left_anti joins that the limit(1).count() probe would replay
-    # in full every round (ADVICE r3).
-    remaining = l_cov
-    seeds = None
-    k = 0
-    while k <= max_rings:
-        if remaining.limit(1).count() == 0:
-            break
-        k_hi = min(k + shells_per_round - 1, max_rings)
-        probes = (remaining.withColumn(
-            "_cell", F.explode(_shell_range_udf(F.col("_lcell"), k, k_hi)))
-            .select("_lid", "_cell").dropDuplicates(["_lid", "_cell"]))
-        k = k_hi + 1
-        d0 = (pair_dists(probes).groupBy("_lid")
-              .agg(F.min("_d").alias("_d0")).localCheckpoint(eager=True))
-        if d0.limit(1).count():
-            seeds = d0 if seeds is None else seeds.unionByName(d0)
-            remaining = (remaining.join(d0.select("_lid"), "_lid",
-                                        "left_anti")
-                         .localCheckpoint(eager=True))
-    if seeds is None:
-        l_cov.unpersist(False)
-        r_cells.unpersist(False)
-        schema = T.StructType([
-            T.StructField(left_id, left.schema[left_id].dataType),
-            T.StructField(right_id, right.schema[right_id].dataType),
-            T.StructField("distance", T.DoubleType())])
-        return left.sparkSession.createDataFrame([], schema)
-
-    # phase 2: exact disk of radius ceil(d0/h) around every left cover
-    # cell — a superset of anything within d0 of the left geometry
-    disk = (l_cov.join(seeds, "_lid")
-            .withColumn("_cell", F.explode(
-                _disk_udf(F.col("_lcell"), F.col("_d0"), res)))
-            .select("_lid", "_cell").dropDuplicates(["_lid", "_cell"]))
-    cand = pair_dists(disk)
-    w = Window.partitionBy("_lid")
-    out = (cand.withColumn("_dmin", F.min("_d").over(w))
-           .where(F.col("_d") == F.col("_dmin"))
-           .select(F.col("_lid").alias(left_id),
-                   F.col("_rid").alias(right_id),
-                   F.col("_d").alias("distance"))
-           .dropDuplicates([left_id, right_id])
-           # materialize, then release the round caches — the operator
-           # is already eager (ring loop), so this adds no extra pass
-           # and the returned frame holds no reference to them
-           .localCheckpoint(eager=True))
-    l_cov.unpersist(False)
-    r_cells.unpersist(False)
-    return out
-
-
-def _shell_range_udf(cell_col, k_lo: int, k_hi: int):
-    """Cells at Chebyshev distance in [k_lo, k_hi] = k_ring(k_hi) minus
-    k_ring(k_lo - 1), batch-vectorized over the Arrow column (r4 —
-    one stencil broadcast per batch, no per-row Python k_ring)."""
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _udf(c: pd.Series) -> pd.Series:
-        cells = c.fillna(-1).to_numpy(dtype=np.int64)
-        outer, ov = K_cell.k_ring_batch(cells, k_hi)
-        if k_lo > 0:
-            inner, iv = K_cell.k_ring_batch(cells, k_lo - 1)
-            vals = [np.setdiff1d(outer[i][ov[i]], inner[i][iv[i]])
-                    for i in range(len(cells))]
-        else:
-            vals = [np.unique(outer[i][ov[i]]) for i in range(len(cells))]
-        return pd.Series(vals, dtype=object)
-    return _udf(cell_col)
-
-
-def _disk_udf(cell_col, d0_col, res: int):
-    h = 180.0 / (1 << res)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _udf(c: pd.Series, d0: pd.Series) -> pd.Series:
-        cells = c.fillna(-1).to_numpy(dtype=np.int64)
-        ks = np.ceil(d0.fillna(0.0).to_numpy(dtype=np.float64)
-                     / h).astype(np.int64)
-        m = len(cells)
-        vals: list = [None] * m
-        # rows sorted by k and chunked so rows x stencil stays bounded
-        # (one far-away d0 must not allocate a huge matrix for all rows)
-        order = np.argsort(ks)
-        budget = 1 << 22
-        i = 0
-        while i < m:
-            j = i + 1
-            while j < m and (j - i + 1) * \
-                    (2 * int(ks[order[j]]) + 1) ** 2 <= budget:
-                j += 1
-            idx = order[i:j]
-            out, valid = K_cell.k_ring_batch(
-                cells[idx], int(ks[idx].max()), k_per_row=ks[idx])
-            for p, row in enumerate(idx):
-                vals[row] = np.unique(out[p][valid[p]])
-            i = j
-        return pd.Series(vals, dtype=object)
-    return _udf(cell_col, d0_col)
+    for pdf in batches:
+        pdf = pdf[pdf["_lid"].notna()].reset_index(drop=True)
+        if not len(pdf):
+            continue
+        lraw = pdf["_lgeom"].to_numpy()
+        rraw = pdf["_rgeom"].to_numpy()
+        codes, uniq = pd.factorize(pdf["_lid"].to_numpy())
+        first = np.zeros(len(uniq), dtype=np.int64)
+        seen, fidx = np.unique(codes, return_index=True)
+        first[seen] = fidx
+        prep = K_p.prepare_batch_lefts([SG._loads_safe(lraw[i]) for i in first])
+        dvals = np.full(len(pdf), np.nan)
+        for _rid, idx in pdf.groupby("_rid", sort=False).indices.items():
+            gg = SG._loads_safe(rraw[idx[0]])
+            dvals[idx] = K_p.batch_distance_one(prep, codes[idx], gg)
+        yield pdf[["_lid", "_rid", "_ring"]].assign(_d=dvals)

@@ -103,3 +103,27 @@ def test_nan_right_points_ignored_not_poisoning():
     tpos = np.arange(300, dtype=np.int64)
     li, ri, dd = _nearest_all_points(xs, ys, txs, tys, tpos, None)
     assert len(li) >= 2 and 7 not in set(ri.tolist())
+
+
+def test_huge_probe_coordinates_no_cast_warning():
+    """Probes far outside the grid (lon 1e300, +/-inf) are clipped in
+    the float domain before the int cast: no RuntimeWarning, and the
+    answers still match the matrix reference.  cell_of clips the same
+    way, landing such points on the edge cell like st_cell_lonlat."""
+    import warnings
+    from spark_geo.kernel.cell import cell_ixy, cell_of
+    rng = np.random.RandomState(11)
+    txs = rng.uniform(-1, 1, 300)
+    tys = rng.uniform(-1, 1, 300)
+    tpos = np.arange(300, dtype=np.int64)
+    xs = np.array([1e300, -1e300, np.inf, 0.25])
+    ys = np.array([0.0, 1e300, 0.0, 0.5])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        li, ri, dd = _nearest_all_points(xs, ys, txs, tys, tpos, None)
+        ix, iy = cell_ixy(cell_of(xs, ys, 7))
+    assert set(li.tolist()) == {0, 1, 3}  # inf has no finite distance
+    fin = np.isfinite(xs)
+    _check(xs[fin], ys[fin], txs, tys, tpos)
+    assert ix.tolist() == [127, 0, 127, 64]
+    assert iy.tolist() == [64, 127, 64, 64]

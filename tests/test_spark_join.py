@@ -434,3 +434,121 @@ def test_right_lonlat_parity_with_null_rows(spark):
         keep=["left_id"]).select("left_id", "right_id",
                                  "distance").collect())
     assert a == b
+
+
+def _knn_fixture():
+    """Clustered right points with exact duplicates (ties), and left
+    points among them plus hand-placed probes at res 5 (cells 11.25 x
+    5.625 degrees)."""
+    rng = np.random.default_rng(7)
+    rx = np.concatenate([rng.normal(12, 3, 40), rng.normal(-50, 2, 20)])
+    ry = np.concatenate([rng.normal(8, 3, 40), rng.normal(-30, 2, 20)])
+    rx = np.concatenate([rx, rx[:10], [-178.0, 134.05, 100.3]])
+    ry = np.concatenate([ry, ry[:10], [40.3, 40.3, 62.8]])
+    lx = np.concatenate([rng.uniform(-70, 40, 60), [
+        rx[3],    # on a duplicated right point: distance-0 ties
+        100.3,    # nearest (22.5 away) is 4 rings out, another is 3 out
+        -170.0,   # no right within 3 rings
+        -100.0,   # no right within 3 rings
+        178.0,    # within 3 rings only across the antimeridian, and
+                  # its nearest (43.95 away) is 4 rings out
+    ]])
+    ly = np.concatenate([rng.uniform(-45, 30, 60), [ry[3], 40.3, 80.0, -80.0, 40.3]])
+    return lx, ly, rx, ry
+
+
+def _knn_brute(lx, ly, rx, ry, res, rings, md):
+    """All-ties nearest of every left row with some right within
+    ``rings`` wrapped Chebyshev cells (and within ``md``)."""
+    n = 1 << res
+    lix = np.clip(np.floor((lx + 180) / 360 * n), 0, n - 1)
+    liy = np.clip(np.floor((ly + 90) / 180 * n), 0, n - 1)
+    rix = np.clip(np.floor((rx + 180) / 360 * n), 0, n - 1)
+    riy = np.clip(np.floor((ry + 90) / 180 * n), 0, n - 1)
+    d = np.hypot(lx[:, None] - rx[None], ly[:, None] - ry[None])
+    dx = np.abs(lix[:, None] - rix[None])
+    cheb = np.maximum(np.minimum(dx, n - dx), np.abs(liy[:, None] - riy[None]))
+    ok = d <= md if md is not None else np.ones(d.shape, bool)
+    dmin = np.where(ok, d, np.inf).min(axis=1)
+    answered = ((cheb <= rings) & ok).any(axis=1)
+    li, ri = np.nonzero(answered[:, None] & ok & (d == dmin[:, None]))
+    return li, ri, d[li, ri]
+
+
+@pytest.mark.parametrize("assume_points", [True, False])
+@pytest.mark.parametrize("rings,md,cap", [
+    (3, None, None),
+    (3, 30.0, None),    # ring limit tighter than max_distance
+    (16, 4.0, None),
+    (3, None, 5),       # representative table over the cap: coarser cells
+    (3, 30.0, 5),
+])
+def test_cell_nearest_all_matches_brute_force(spark, monkeypatch,
+                                              assume_points, rings, md, cap):
+    """cell_nearest_all ≡ numpy brute force on both paths: rows with no
+    right within max_rings are omitted, a row whose nearest lies beyond
+    the ring limit still gets it when another right is inside, ties and
+    max_distance are exact, a probe at lon 1e300 gets a defined answer,
+    and the call leaves no persisted RDD."""
+    if cap is not None:
+        monkeypatch.setattr(SJ, "BROADCAST_RIGHT_LIMIT", cap)
+    lx, ly, rx, ry = _knn_fixture()
+    if assume_points:
+        # far outside the world: clipped to the edge cell (a geometry
+        # there has no cover cell); every right ties at distance 1e300
+        lx, ly = np.append(lx, 1e300), np.append(ly, 40.3)
+    lids = np.arange(len(lx)) * 2 + 1
+    rids = np.arange(len(rx)) * 3 + 5
+    left = spark.createDataFrame(
+        [(int(i), K_wkb.dumps(Geom.point(x, y)))
+         for i, x, y in zip(lids, lx, ly)], "left_id long, geom binary")
+    right = spark.createDataFrame(
+        [(int(i), K_wkb.dumps(Geom.point(x, y)))
+         for i, x, y in zip(rids, rx, ry)], "right_id long, geom binary")
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    got = SK.cell_nearest_all(left, right, res=5, max_rings=rings,
+                              max_distance=md,
+                              assume_points=assume_points).collect()
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == persisted
+    li, ri, dd = _knn_brute(lx, ly, rx, ry, 5, rings, md)
+    want = {(int(lids[a]), int(rids[b])): d for a, b, d in zip(li, ri, dd)}
+    assert {(r["left_id"], r["right_id"]) for r in got} == set(want)
+    assert len(got) == len(want)
+    for r in got:
+        assert r["distance"] == pytest.approx(want[(r["left_id"], r["right_id"])],
+                                              rel=1e-12, abs=1e-12)
+    if (rings, md) == (3, None):
+        answered = {r["left_id"] for r in got}
+        probes = lids[60:]
+        assert probes[0] in answered and probes[4] in answered
+        assert probes[2] not in answered and probes[3] not in answered
+        near = {r["left_id"]: r["right_id"] for r in got}
+        assert near[probes[1]] == rids[-1] and near[probes[4]] == rids[-2]
+        if assume_points:
+            assert sum(r["left_id"] == probes[5] for r in got) == len(rids)
+
+
+def test_lonlat_join_validates_right_coords(spark):
+    """broadcast_lonlat_join: right_lon and right_lat come as a pair,
+    and an explicit max_right_rows=0 is a cap, not the default."""
+    left = spark.createDataFrame([(1, 0.5, 0.5)], "left_id long, lon double, lat double")
+    right = spark.createDataFrame([(7, 0.0, 0.0)], "right_id long, lon double, lat double")
+    with pytest.raises(ValueError, match="right_lon and right_lat"):
+        SJ.broadcast_lonlat_join(left, right, predicate="dwithin", distance=1.0,
+                                 right_id="right_id", keep=["left_id"], right_lon="lon")
+    with pytest.raises(ValueError, match="exceeds 0 rows"):
+        SJ.broadcast_lonlat_join(left, right, predicate="dwithin", distance=1.0,
+                                 right_id="right_id", keep=["left_id"],
+                                 right_lon="lon", right_lat="lat", max_right_rows=0)
+
+
+def test_nearest_all_lonlat_validates_right_coords(spark):
+    """nearest_all_lonlat: same pair check and explicit-0 cap."""
+    left = spark.createDataFrame([(1, 0.5, 0.5)], "left_id long, lon double, lat double")
+    right = spark.createDataFrame([(7, 0.0, 0.0)], "right_id long, lon double, lat double")
+    with pytest.raises(ValueError, match="right_lon and right_lat"):
+        SK.nearest_all_lonlat(left, right, right_id="right_id", keep=["left_id"],
+                              right_lat="lat")
+    with pytest.raises(ValueError, match="exceeds 0 rows"):
+        SK.nearest_all_lonlat(left, right, right_id="right_id", keep=["left_id"],
+                              right_lon="lon", right_lat="lat", max_right_rows=0)
