@@ -39,6 +39,9 @@ def main(argv=None) -> int:
     if not args.pages and not args.synth_pages:
         print("error: one of --pages or --synth-pages is required", file=sys.stderr)
         return 2
+    if args.num_parts < 1:
+        print("error: --num-parts must be >= 1", file=sys.stderr)
+        return 2
 
     from pyspark.sql import SparkSession
     from . import pipeline as PL

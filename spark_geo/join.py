@@ -381,7 +381,9 @@ def broadcast_lonlat_join(left: DataFrame, right: DataFrame, *,
     the driver should do almost no data work).
 
     Output: keep columns + [cell] + right_id.  At 10^12 rows this is
-    the plan that matters: one Arrow roundtrip of ~16 bytes/row."""
+    the plan that matters: one Arrow roundtrip of ~16 bytes/row plus the
+    keep columns, which the worker gathers with Arrow ``take`` — they
+    never become pandas/Python objects."""
     limit = _right_limit(max_right_rows, right_lon, right_lat,
                          "broadcast_lonlat_join")
     if right_lon is not None:
@@ -405,25 +407,29 @@ def broadcast_lonlat_join(left: DataFrame, right: DataFrame, *,
     src = left.select(*cols)
     fields = [src.schema[c] for c in keep]
     if cell_res is not None:
-        fields.append(T.StructField("cell", T.LongType()))
+        fields.append(T.StructField("cell", T.LongType(), False))
     fields.append(T.StructField(right_id, T.LongType()))
     out_schema = T.StructType(fields)
-    lon_pos, lat_pos = len(keep), len(keep) + 1
+    n_keep = len(keep)
 
     def run(batches):
+        # Arrow in, Arrow out: keep columns are gathered with take(),
+        # so strings never become Python objects
+        import pyarrow as pa
         from .kernel.cell import cell_of
         tree_l, ids_l = bc.value
-        for pdf in batches:
-            xs = pdf.iloc[:, lon_pos].to_numpy(dtype=np.float64, na_value=np.nan)
-            ys = pdf.iloc[:, lat_pos].to_numpy(dtype=np.float64, na_value=np.nan)
+        for b in batches:
+            xs, ys = (b.column(i).to_numpy(zero_copy_only=False)   # NULL -> NaN
+                      .astype(np.float64, copy=False) for i in (n_keep, n_keep + 1))
             li, ri = _probe_batch_points(tree_l, xs, ys, predicate, distance)
-            out = pdf.iloc[li, :len(keep)].reset_index(drop=True)
+            take = pa.array(li, type=pa.int64())
+            out = [b.column(i).take(take) for i in range(n_keep)]
             if cell_res is not None:
-                out["cell"] = cell_of(xs[li], ys[li], cell_res)
-            out[right_id] = ids_l[ri]
-            yield out
+                out.append(pa.array(cell_of(xs[li], ys[li], cell_res), type=pa.int64()))
+            out.append(pa.array(ids_l[ri], type=pa.int64()))
+            yield pa.RecordBatch.from_arrays(out, names=out_schema.fieldNames())
 
-    return src.mapInPandas(run, schema=out_schema)
+    return src.mapInArrow(run, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------

@@ -701,21 +701,25 @@ def batch_header(wkbs):
     0x80000000 or ISO +1000/+3000), whether the top-level type is a
     container (MULTI*/GEOMETRYCOLLECTION — whose recursive attributes
     like has_z need the scalar path), and the parse-ok mask.  Both byte
-    orders and the EWKB SRID flag are accepted; only the first 5 bytes
-    of each row are READ, but each row's length is additionally checked
-    against the minimal body its declared type implies (r6, ADVICE r5:
-    a valid 5-byte header with a truncated body — e.g. a bare
-    b'\\x01\\x01\\x00\\x00\\x00' POINT — must fall to the scalar path so
-    st_type_id/st_geom_type keep the documented on_invalid='ignore'
-    None semantics instead of answering from the header).
+    orders and the EWKB SRID flag are accepted; only the header and the
+    first count of each row are READ, but each row's length is checked
+    against the body its declared type implies — 2-4 doubles for POINT,
+    ``count`` vertices for LINESTRING, ``count`` 5-byte-headed points
+    for MULTIPOINT, a 4-byte count for the rest — so a truncated row
+    (e.g. a bare b'\\x01\\x01\\x00\\x00\\x00' POINT, or a LINESTRING
+    claiming 10 points with no coordinates) falls to the scalar path
+    and st_type_id/st_geom_type keep the on_invalid='ignore' None
+    semantics instead of answering from the header.
     """
     n = len(wkbs)
     lens = np.fromiter((0 if v is None else len(v) for v in wkbs),
                        dtype=np.int64, count=n)
+    # header (5) + optional SRID (4) + first count (4), zero-padded
     buf = b"".join(
-        (b"\xff\0\0\0\0" if v is None or len(v) < 5 else bytes(v[:5]))
+        (b"\xff" + b"\0" * 12 if v is None or len(v) < 5
+         else bytes(v[:13]).ljust(13, b"\0"))
         for v in wkbs)
-    h = np.frombuffer(buf, dtype=np.uint8).reshape(n, 5).astype(np.int64)
+    h = np.frombuffer(buf, dtype=np.uint8).reshape(n, 13).astype(np.int64)
     endian = h[:, 0]
     t_le = h[:, 1] | (h[:, 2] << 8) | (h[:, 3] << 16) | (h[:, 4] << 24)
     t_be = h[:, 4] | (h[:, 3] << 8) | (h[:, 2] << 16) | (h[:, 1] << 24)
@@ -731,11 +735,19 @@ def batch_header(wkbs):
     t = t - zm * 3000 - mo * 2000 - zo * 1000
     z = z | zm | zo
     ok &= (t >= 1) & (t <= 7)
-    # minimal-body check: POINT carries 2-4 doubles, every other type a
-    # 4-byte child/ring/point count; truncated rows go to the scalar
-    # fallback (which maps them to None)
+    # declared-size check: POINT carries 2-4 doubles, LINESTRING count
+    # vertices, MULTIPOINT count points (5-byte header each), every
+    # other type at least its 4-byte count (a row too short for its
+    # count reads 0 from the padding and fails that minimum); truncated
+    # rows go to the scalar fallback (which maps them to None)
     dims = 2 + np.where(zm, 2, (z | mo).astype(np.int64))
-    need = 5 + srid * 4 + np.where(t == 1, 8 * dims, 4)
+    c = np.where(srid[:, None], h[:, 9:13], h[:, 5:9])
+    cnt = np.where(endian == 1,
+                   c[:, 0] | (c[:, 1] << 8) | (c[:, 2] << 16) | (c[:, 3] << 24),
+                   c[:, 3] | (c[:, 2] << 8) | (c[:, 1] << 16) | (c[:, 0] << 24))
+    body = np.select([t == 1, t == 2, t == 4],
+                     [8 * dims, 4 + 8 * dims * cnt, 4 + cnt * (5 + 8 * dims)], 4)
+    need = 5 + srid * 4 + body
     ok &= lens >= need
     t = np.where(ok, t, 0)
     lattice = _OGC_TO_LATTICE_LUT[t]

@@ -9,9 +9,9 @@ Invariant: extracted ``text`` is byte-identical per url — extraction
 is a JVM-side regexp over the html body, and nothing downstream
 rewrites it (verified by ``text_identity_violations``).
 
-Everything before the geometry construction stays JVM-side (regexp
-extraction, casts) so Catalyst can push filters/pruning into the scan;
-only point construction + cell assignment enter Python, Arrow-batched.
+Everything before the probe stays JVM-side (regexp extraction, casts)
+so Catalyst can push filters/pruning into the scan; only the lon/lat
+doubles enter Python, Arrow-batched, for the probe + cell assignment.
 """
 
 from __future__ import annotations
@@ -20,10 +20,10 @@ import json
 import os
 import time
 
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from . import functions as SG
 from . import join as SJ
 from .kernel import wkb as K_wkb
 from .kernel.geom import Geom
@@ -120,11 +120,6 @@ def geocode(df: DataFrame, text_col: str = "text") -> DataFrame:
               .withColumn("lon", F.when(lon != "", lon.cast("double"))))
 
 
-def to_points(df: DataFrame, lon: str = "lon", lat: str = "lat",
-              geom_col: str = "point") -> DataFrame:
-    return df.withColumn(geom_col, SG.st_point(F.col(lon), F.col(lat)))
-
-
 # ---------------------------------------------------------------------------
 # polygon layer (FIXTURES.md §2)
 # ---------------------------------------------------------------------------
@@ -195,28 +190,27 @@ def salt_hot_cells(left: DataFrame, right: DataFrame, hot: DataFrame,
 # flagship job + checkpoint/resume
 # ---------------------------------------------------------------------------
 
+def _page_pairs(pages: DataFrame, layer: DataFrame, res: int,
+                keep: list[str] | None = None) -> DataFrame:
+    """geocode → one lon/lat probe: ``keep`` columns + cell + polygon_id
+    per (tagged page, polygon) hit — the one pair plan behind
+    ``flagship`` and ``run_with_checkpoint``.  No isNotNull filter on
+    lon/lat: Catalyst would push it into the regexp chain and re-run
+    it per row; the probe drops NULL/NaN rows in the worker instead."""
+    return SJ.broadcast_lonlat_join(
+        geocode(pages), layer, lon="lon", lat="lat", predicate="intersects",
+        right_geom="geom", right_id="polygon_id", cell_res=res, keep=keep)
+
+
 def flagship(pages: DataFrame, layer: DataFrame, res: int = 7) -> DataFrame:
     """The headline query: geocode pages → cells + broadcast STRtree
     join to the polygon layer → per-region page counts.
 
     Exactly ONE Python crossing (probe + cell assignment fused in a
-    single mapInPandas over two double columns — ~16 bytes/row through
+    single mapInArrow over two double columns — ~16 bytes/row through
     Arrow; geocode regexes and the final aggregate stay JVM-side), one
-    shuffle (the final groupBy).
-
-    r6 (guide §4.4-shaped fix, measured 1.8x at 6M pages): NO explicit
-    isNotNull filter on the geocoded columns — Catalyst pushes such a
-    filter below the projection by inlining the whole
-    format/regexp-extract chain into the predicate, re-evaluating the
-    expensive expressions up to 3 extra times per row.  The lon/lat
-    probe already drops NULL/NaN rows inside the worker
-    (join._probe_batch_points), so results are identical; untagged
-    rows cost 16 B of Arrow traffic instead of repeated regex work."""
-    pts = geocode(pages)
-    joined = SJ.broadcast_lonlat_join(
-        pts, layer, lon="lon", lat="lat", predicate="intersects",
-        right_geom="geom", right_id="polygon_id", cell_res=res)
-    return (joined.groupBy("polygon_id")
+    shuffle (the final groupBy)."""
+    return (_page_pairs(pages, layer, res).groupBy("polygon_id")
             .agg(F.count(F.lit(1)).alias("n_pages"),
                  F.countDistinct("cell").alias("n_cells")))
 
@@ -224,46 +218,46 @@ def flagship(pages: DataFrame, layer: DataFrame, res: int = 7) -> DataFrame:
 def run_with_checkpoint(pages: DataFrame, layer: DataFrame, out_dir: str,
                         res: int = 7, num_parts: int = 64,
                         key_col: str = "url") -> dict:
-    """Resumable flagship run with per-partition lineage + metrics.
+    """Resumable flagship run with per-bucket lineage + metrics.
 
-    - rows are bucketed by ``pmod(xxhash64(url), num_parts)``
-    - a manifest (JSON) records completed buckets; a rerun anti-joins
-      against it and processes only the remainder
-    - per-bucket metrics rows (count, wall time) land in
-      ``out_dir/metrics.jsonl``
-    - output written with dynamic partition overwrite so a re-run of
-      an interrupted bucket is idempotent."""
-    spark = pages.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    - rows are bucketed by ``pmod(xxhash64(url), num_parts)``; the
+      flagship's pair plan (one Python crossing over lon/lat doubles)
+      writes ``part_id, url, lang, cell, polygon_id`` with a per-write
+      dynamic partition overwrite, so re-running an interrupted bucket
+      is idempotent and the session config is left alone
+    - ``manifest.json`` records completed buckets (zero-row ones too);
+      a rerun processes only the remainder.  It is replaced atomically
+      via ``.tmp`` + ``os.replace``; a leftover ``.tmp`` is ignored
+    - per-bucket row counts, read from the parquet footers on the
+      driver (no re-read job; ``out_dir`` must be local), and the run's
+      wall time are appended to ``metrics.jsonl``."""
+    if num_parts < 1:
+        raise ValueError(f"num_parts must be >= 1, got {num_parts}")
     manifest_path = os.path.join(out_dir, "manifest.json")
-    done: list[int] = []
+    done: set[int] = set()
     if os.path.exists(manifest_path):
         with open(manifest_path) as f:
-            done = json.load(f)["completed_parts"]
-    work = pages.withColumn("part_id", F.pmod(F.xxhash64(key_col), F.lit(num_parts)))
-    if done:
-        work = work.where(~F.col("part_id").isin(done))
+            done = set(json.load(f)["completed_parts"])
+    processed = sorted(set(range(num_parts)) - done)
+    data_dir = os.path.join(out_dir, "data")
     t0 = time.time()
-    pts = to_points(geocode(work)).where(F.col("lon").isNotNull())
-    pts = pts.withColumn("cell", SG.st_cell_lonlat(F.col("lon"), F.col("lat"), res))
-    joined = SJ.broadcast_spatial_join(
-        pts.select("part_id", "url", "lang", "cell", "point"), layer,
-        predicate="intersects", left_geom="point", right_geom="geom",
-        right_id="polygon_id")
-    (joined.drop("point")
-     .write.mode("overwrite").partitionBy("part_id")
-     .parquet(os.path.join(out_dir, "data")))
+    if processed:
+        work = pages.withColumn("part_id", F.pmod(F.xxhash64(key_col), F.lit(num_parts)))
+        if done:
+            work = work.where(F.col("part_id").isin(processed))
+        (_page_pairs(work, layer, res, keep=["part_id", "url", "lang"])
+         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy("part_id").parquet(data_dir))
     elapsed = time.time() - t0
-    stats = (spark.read.parquet(os.path.join(out_dir, "data"))
-             .groupBy("part_id").count().collect())
-    processed = sorted(int(r["part_id"]) for r in stats if int(r["part_id"]) not in done)
     with open(os.path.join(out_dir, "metrics.jsonl"), "a") as f:
-        for r in stats:
-            if int(r["part_id"]) in processed:
-                f.write(json.dumps({"part_id": int(r["part_id"]),
-                                    "rows": r["count"],
-                                    "run_elapsed_sec": elapsed}) + "\n")
-    with open(manifest_path, "w") as f:
-        json.dump({"completed_parts": sorted(set(done) | set(processed))}, f)
+        for k in processed:
+            d = os.path.join(data_dir, f"part_id={k}")
+            rows = (pads.dataset(d, format="parquet").count_rows()
+                    if os.path.isdir(d) else 0)
+            f.write(json.dumps({"part_id": k, "rows": rows,
+                                "run_elapsed_sec": elapsed}) + "\n")
+    with open(manifest_path + ".tmp", "w") as f:
+        json.dump({"completed_parts": sorted(done | set(processed))}, f)
+    os.replace(manifest_path + ".tmp", manifest_path)
     return {"processed_parts": processed, "elapsed_sec": elapsed,
             "resumed_from": len(done)}

@@ -86,6 +86,7 @@ def test_cli_parser():
     with pytest.raises(SystemExit):
         p.parse_args(["--synth-pages", "100"])  # missing --out
     assert main(["--out", "/tmp/x"]) == 2  # neither --pages nor --synth-pages
+    assert main(["--synth-pages", "10", "--out", "/tmp/x", "--num-parts", "0"]) == 2
 
 
 def test_stream_sessionize_stateful(spark, tmp_path):

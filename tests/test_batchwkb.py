@@ -241,6 +241,43 @@ def test_batch_header_truncated_body_not_ok():
     assert ok2.all()
 
 
+_SHORT_BODIES = [
+    b"\x01\x02\x00\x00\x00\x0a\x00\x00\x00",      # LINESTRING, 10 pts, no coords
+    b"\x00\x00\x00\x00\x02\x00\x00\x00\x0a",      # same, big-endian
+    b"\x01\x02\x00\x00\x00\x02\x00\x00\x00" + b"\x00" * 24,  # 1.5 of 2 pts
+    b"\x01\x04\x00\x00\x00\x02\x00\x00\x00"       # MULTIPOINT, 2 claimed,
+    + W.dumps(from_wkt("POINT(1 2)")),                  # 1 present
+    b"\x00\x00\x00\x00\x04\x00\x00\x00\x01",      # MULTIPOINT, big-endian
+]
+
+
+def test_batch_header_declared_size():
+    """A LINESTRING/MULTIPOINT whose declared count needs more bytes than
+    the row holds is not ok (the scalar decode rejects it too); complete
+    encodings in every byte order / SRID / Z variant stay ok."""
+    for b in _SHORT_BODIES:
+        with pytest.raises(Exception):
+            W.loads(b)
+    _, _, _, ok = BW.batch_header(_SHORT_BODIES)
+    assert not ok.any()
+    from spark_geo.kernel.geom import Geom
+    ls = from_wkt("LINESTRING(0 0,1 1,2 3)")
+    ls.srid = 4326
+    mp = from_wkt("MULTIPOINT(0 0,1 1)")
+    mp.srid = 3857
+    lz = Geom(1, coords=np.array([[0.0, 0.0], [1.0, 1.0]]), has_z=True,
+              zs=np.array([5.0, 6.0]))
+    good = [W.dumps_ext(ls, include_srid=True),
+            W.dumps_ext(ls, byte_order=0),
+            W.dumps_ext(mp, include_srid=True),
+            W.dumps_ext(mp, byte_order=0),
+            W.dumps_ext(lz, output_dimension=3),
+            W.dumps(from_wkt("MULTIPOINT EMPTY"))]
+    lat, _, _, ok = BW.batch_header(good)
+    assert ok.all()
+    assert [int(x) for x in lat] == [W.loads(b).type_id for b in good]
+
+
 def test_batch_is_empty_nan_x_finite_y():
     """ADVICE r5: loads' empty-point rule is BOTH coords NaN; a point
     with x=NaN,y=finite is non-empty (poisoned coordinate)."""

@@ -113,6 +113,19 @@ def test_type_and_dump(spark):
     assert [r["w"] for r in parts] == ["POINT (0 0)", "POINT (1 2)", "POINT (1 1)"]
 
 
+def test_type_of_short_body_is_none(spark):
+    """LINESTRING/MULTIPOINT rows whose declared count overruns the row
+    answer like the scalar on_invalid='ignore' path: type id -1 (the
+    None geometry's id) and type name None, not the header's type."""
+    short = [b"\x01\x02\x00\x00\x00\x0a\x00\x00\x00",  # LINESTRING, 10 pts
+             b"\x00\x00\x00\x00\x04\x00\x00\x00\x02"   # MULTIPOINT (XDR),
+             + b"\x00\x00\x00\x00\x01" + b"\x00" * 16]    # 2 claimed, 1 present
+    df = spark.createDataFrame([(b,) for b in short], "g binary")
+    got = df.select(SG.st_type_id("g").alias("i"),
+                    SG.st_geom_type("g").alias("t")).collect()
+    assert [(r["i"], r["t"]) for r in got] == [(-1, None)] * len(short)
+
+
 def test_constructive_cols(spark):
     df = spark.createDataFrame([("POINT (1 1)",)], "wkt string") \
         .withColumn("g", SG.st_from_wkt("wkt"))

@@ -1,7 +1,9 @@
 """Tile aggregation + pages pipeline tests (flagship path, text
 byte-identity invariant, checkpoint/resume, salting)."""
 
+import json
 import os
+import shutil
 
 import numpy as np
 import pytest
@@ -118,3 +120,100 @@ def test_checkpoint_resume(spark, pages, tmp_path):
     data = spark.read.parquet(os.path.join(out, "data"))
     fresh = PL.flagship(pages, layer, res=6)
     assert data.count() == fresh.agg(F.sum("n_pages")).first()[0]
+
+
+def _pairs(spark, out):
+    rows = (spark.read.parquet(os.path.join(out, "data"))
+            .select("part_id", "url", "cell", "polygon_id").collect())
+    return sorted(tuple(r) for r in rows)
+
+
+def test_checkpoint_resume_matches_uninterrupted(spark, pages, tmp_path):
+    """A crash that lost the last buckets' manifest entries and
+    directories and left a torn ``manifest.json.tmp`` behind: the resume
+    rewrites exactly those buckets, and the output equals an
+    uninterrupted run's pair for pair."""
+    layer = PL.make_world_layer(spark)
+    out, ref = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    PL.run_with_checkpoint(pages, layer, ref, res=6, num_parts=8)
+    PL.run_with_checkpoint(pages, layer, out, res=6, num_parts=8)
+    data = os.path.join(out, "data")
+    assert spark.read.parquet(data).columns == ["url", "lang", "cell", "polygon_id",
+                                                "part_id"]
+    mpath = os.path.join(out, "manifest.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    dropped = m["completed_parts"][-3:]
+    m["completed_parts"] = m["completed_parts"][:-3]
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    for k in dropped:
+        shutil.rmtree(os.path.join(data, f"part_id={k}"))
+    with open(mpath + ".tmp", "w") as f:
+        f.write('{"completed_parts": [0, 1')
+    r = PL.run_with_checkpoint(pages, layer, out, res=6, num_parts=8)
+    assert r["processed_parts"] == dropped and r["resumed_from"] == 5
+    assert _pairs(spark, out) == _pairs(spark, ref)
+    with open(mpath) as f:
+        assert json.load(f)["completed_parts"] == list(range(8))
+    assert not os.path.exists(mpath + ".tmp")
+    with open(os.path.join(out, "metrics.jsonl")) as f:
+        metrics = [json.loads(line) for line in f]
+    counts = {k: n for k, n in spark.read.parquet(data).groupBy("part_id").count().collect()}
+    assert {m["part_id"]: m["rows"] for m in metrics} == counts
+
+
+def test_checkpoint_zero_row_buckets_done(spark, pages, tmp_path):
+    """Buckets that get no rows are recorded as done too, so a rerun
+    has nothing left to do."""
+    layer = PL.make_world_layer(spark)
+    out = str(tmp_path / "ckpt")
+    few = pages.where(F.col("url").rlike("/page/[0-2]$"))
+    r1 = PL.run_with_checkpoint(few, layer, out, res=6, num_parts=16)
+    assert r1["processed_parts"] == list(range(16))
+    with open(os.path.join(out, "metrics.jsonl")) as f:
+        rows = {m["part_id"]: m["rows"] for m in map(json.loads, f)}
+    assert sum(rows.values()) == 3 and list(rows.values()).count(0) >= 13
+    r2 = PL.run_with_checkpoint(few, layer, out, res=6, num_parts=16)
+    assert r2["processed_parts"] == [] and r2["resumed_from"] == 16
+
+
+def test_checkpoint_leaves_session_conf(spark, pages, tmp_path):
+    """The dynamic overwrite is a per-write option; the session's own
+    partitionOverwriteMode is left as the caller set it."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        PL.run_with_checkpoint(pages.limit(50), PL.make_world_layer(spark),
+                               str(tmp_path / "ckpt"), res=6, num_parts=2)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, before)
+
+
+@pytest.mark.parametrize("num_parts", [0, -1])
+def test_checkpoint_rejects_bad_num_parts(spark, pages, tmp_path, num_parts):
+    with pytest.raises(ValueError, match="num_parts"):
+        PL.run_with_checkpoint(pages, PL.make_world_layer(spark),
+                               str(tmp_path / "ckpt"), num_parts=num_parts)
+    assert not os.path.exists(tmp_path / "ckpt")
+
+
+def test_page_pairs_plan_shape(spark, pages):
+    """Flagship and checkpoint share one pair plan: a single Python
+    crossing (the lon/lat probe's map node), no row-wise Python UDF, and no
+    Filter that re-evaluates the geocode regexp (a pushed isNotNull)."""
+    import re
+    layer = PL.make_world_layer(spark)
+    work = (pages.withColumn("part_id", F.pmod(F.xxhash64("url"), F.lit(8)))
+            .where(F.col("part_id").isin([1, 2])))
+    keep = ["part_id", "url", "lang"]
+    for df, cols in ((PL._page_pairs(pages, layer, 6), []),
+                     (PL._page_pairs(work, layer, 6, keep=keep), keep)):
+        assert df.columns == cols + ["cell", "polygon_id"]
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"\b(MapInPandas|MapInArrow|PythonMapInArrow)\b", plan)) == 1, plan
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+        for line in plan.splitlines():
+            assert not (re.search(r"\bFilter\b", line) and "regexp_extract" in line), plan
