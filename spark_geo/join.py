@@ -6,14 +6,16 @@ strtree.py:135-228: left rows with None/empty geometry omitted,
 candidates from envelope overlap, exact predicate refine with the
 probe geometry prepared once):
 
-1. **broadcast** (small right side): build the STRtree once on the
-   driver, ``sc.broadcast`` it, probe each left Arrow batch inside
-   ``mapInPandas`` — zero shuffle, the Spark analogue of
-   query_bulk-per-batch.  Point probes take a fully vectorized
-   two-phase path: bbox candidates from the tree, then ONE
-   ray-casting PIP call per distinct candidate polygon over all its
-   candidate points (the per-batch "prepare once" of
-   reference src/strtree.c:286).
+1. **broadcast** (small right side): collect it once on the driver
+   into one ``_BroadcastSide`` (point coordinates or an STRtree),
+   ``sc.broadcast`` it, and probe each left Arrow batch inside ONE
+   ``mapInArrow`` runner — zero shuffle, the Spark analogue of
+   query_bulk-per-batch.  Every broadcast join and kNN, with WKB or
+   lon/lat probes, runs through that one path.  Point probes take a
+   fully vectorized two-phase path: envelope candidates from the CSR
+   grid (kernel.grid), then ONE ray-casting PIP call per distinct
+   candidate polygon over all its candidate points (the per-batch
+   "prepare once" of reference src/strtree.c:286).
 
 2. **cell equi-join** (large ✕ large): both sides keyed by quad-grid
    cells (points: 1 cell; polygons: exploded cover), Catalyst
@@ -35,13 +37,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from .kernel import cell as K_cell
+from .kernel import grid as K_grid
 from .kernel import measure as K_m
 from .kernel import predicates as K_p
 from .kernel import wkb as K_wkb
+from .kernel.geom import Geom
 from .kernel.strtree import PREDICATES, STRtree
 from . import functions as SG
-
-_POINT_FAST_PREDICATES = {"intersects", "within", "covered_by", "dwithin", "touches"}
 
 # Hard cap on the rows a DIRECT broadcast API will collect to the
 # driver (r6, VERDICT r5 item 4): the auto-picker (spatial_join)
@@ -50,6 +52,11 @@ _POINT_FAST_PREDICATES = {"intersects", "within", "covered_by", "dwithin", "touc
 # instead of an actionable error.  The cap is enforced by collecting
 # AT MOST limit+1 rows (no extra count job).
 BROADCAST_RIGHT_LIMIT = 5_000_000
+
+# predicates that hold between two points exactly when they coincide;
+# every other predicate (touches, overlaps, crosses) never holds
+_COINCIDE = {"intersects", "within", "covered_by", "contains", "covers",
+             "contains_properly"}
 
 
 def _collect_right(right, cols, limit, api):
@@ -64,81 +71,128 @@ def _collect_right(right, cols, limit, api):
     return rows
 
 
-def _right_limit(max_right_rows, right_lon, right_lat, api):
-    """Collect cap of the lon/lat broadcast APIs; an explicit 0 is a
-    cap, and the right coordinate columns come as a pair or not at all."""
-    if (right_lon is None) != (right_lat is None):
-        raise ValueError(f"{api}: give both right_lon and right_lat, or neither")
-    return BROADCAST_RIGHT_LIMIT if max_right_rows is None else max_right_rows
-
-
 # ---------------------------------------------------------------------------
-# batch-level probe (runs inside the Python worker)
+# the broadcast side and the probe batch (both used inside the worker)
 # ---------------------------------------------------------------------------
 
-def _probe_batch_points(tree: STRtree, xs, ys, predicate, distance):
-    """Vectorized two-phase probe for point batches.
+class _BroadcastSide:
+    """The right side of every broadcast join and kNN, built once on the
+    driver and broadcast as one object: ``ids`` plus either the finite
+    coordinates ``xs``/``ys`` (at positions ``pos`` into ``ids``) of an
+    all-point side, or an STRtree (``tree``)."""
 
-    Phase 1: per-point envelope candidates from the tree.
-    Phase 2: group candidate pairs by tree geometry, one vectorized
-    kernel call per geometry (ray-cast PIP / distance)."""
-    n = len(xs)
-    pad = distance if predicate == "dwithin" else 0.0
-    cand = _point_candidates(tree, xs, ys, pad)
-    if cand is None:
-        cand_l, cand_r = [], []
-        for i in range(n):
-            x, y = xs[i], ys[i]
-            if np.isnan(x):
-                continue
-            pos = tree._query_box(x - pad, y - pad, x + pad, y + pad)
-            if len(pos):
-                cand_l.append(np.full(len(pos), i, dtype=np.int64))
-                cand_r.append(pos)
-        if not cand_l:
-            return np.empty(0, np.int64), np.empty(0, np.int64)
-        cl = np.concatenate(cand_l)
-        cr = np.concatenate(cand_r)
-    else:
-        cl, cr = cand
-    if not len(cl):
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    if predicate is None:
-        return cl, tree._idx[cr]
-    # all-point tree: ONE vectorized hypot over the candidate pairs
-    # replaces the argsort + per-tree-geometry Python loop (r6, guide
-    # §4.2 — the loop's per-geometry dispatch dominated dwithin joins
-    # against point layers).  Semantics identical to
-    # point_predicate_mask on a point geometry: distance <= d for
-    # dwithin, vertex coincidence (<= 1e-12) for intersects/within/
-    # covered_by, never True for touches.
-    tp = _tree_point_coords(tree)
-    if tp is not None:
-        txs, tys = tp
-        d = np.hypot(xs[cl] - txs[cr], ys[cl] - tys[cr])
-        if predicate == "dwithin":
-            keep = d <= distance
-        elif predicate in ("intersects", "within", "covered_by"):
-            keep = d <= 1e-12
-        else:  # touches: a point never touches a point
-            keep = np.zeros(len(cl), dtype=bool)
-        return cl[keep], tree._idx[cr[keep]]
-    order = np.argsort(cr, kind="stable")
-    cl, cr = cl[order], cr[order]
-    uniq, starts = np.unique(cr, return_index=True)
-    ends = np.append(starts[1:], len(cr))
-    keep_l, keep_r = [], []
-    for u, s, e in zip(uniq, starts, ends):
-        g = tree._geoms[tree._idx[u]]
-        px, py = xs[cl[s:e]], ys[cl[s:e]]
-        m = point_predicate_mask(g, px, py, predicate, distance)
-        hit = np.nonzero(m)[0]
-        if len(hit):
-            keep_l.append(cl[s:e][hit])
-            keep_r.append(np.full(len(hit), tree._idx[u], dtype=np.int64))
-    if not keep_l:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    return np.concatenate(keep_l), np.concatenate(keep_r)
+    def __init__(self, ids, tree: STRtree | None = None, xs=None, ys=None):
+        self.ids, self.tree = ids, tree
+        if tree is None:
+            pos = np.arange(len(xs))
+        elif getattr(tree, "_points_only", False) or all(
+                tree._geoms[i].type_id == 0 for i in tree._idx):
+            # point items have degenerate envelopes: the coordinates are
+            # the boxes' min corners
+            xs, ys, pos = tree._boxes[:, 0], tree._boxes[:, 1], tree._idx
+            self.tree = None
+        if self.tree is None:
+            # a point with no finite position can never match or be nearest
+            ok = np.isfinite(xs) & np.isfinite(ys)
+            self.xs, self.ys, self.pos = xs[ok], ys[ok], pos[ok]
+        self._grid = self._point_tree = None  # worker-side caches
+
+    @staticmethod
+    def check_predicate(predicate, distance):
+        """Driver-side validation, so a bad call fails before any job."""
+        if predicate != "dwithin" and predicate not in PREDICATES:
+            raise ValueError(f"unknown predicate {predicate!r}; one of "
+                             f"{sorted(k for k in PREDICATES if k)} or 'dwithin'")
+        if predicate == "dwithin" and distance is None:
+            raise ValueError("distance parameter is required with dwithin predicate")
+
+    @classmethod
+    def collect(cls, right, api, right_id, right_geom, right_lon=None,
+                right_lat=None, max_right_rows=None) -> "_BroadcastSide":
+        """Collect ``right_id`` and the WKB ``right_geom`` or the DOUBLE
+        pair ``right_lon``/``right_lat`` (then no Geom objects are built
+        or pickled) under the broadcast cap; an explicit 0 is a cap."""
+        if (right_lon is None) != (right_lat is None):
+            raise ValueError(f"{api}: give both right_lon and right_lat, or neither")
+        limit = BROADCAST_RIGHT_LIMIT if max_right_rows is None else max_right_rows
+        if right_lon is None:
+            rows = _collect_right(right, [right_id, right_geom], limit, api)
+            return cls(np.asarray([r[0] for r in rows], dtype=np.int64),
+                       STRtree([SG._loads_safe(r[1]) for r in rows]))
+        rows = _collect_right(right, [right_id, right_lon, right_lat], limit, api)
+        xs, ys = (np.fromiter((np.nan if r[i] is None else r[i] for r in rows),
+                              np.float64, count=len(rows)) for i in (1, 2))
+        return cls(np.asarray([r[0] for r in rows], dtype=np.int64), xs=xs, ys=ys)
+
+    def geom_tree(self) -> STRtree:
+        """STRtree for the general-geometry paths; an all-point side
+        builds it once per worker, when a non-point batch needs it."""
+        if self.tree is not None:
+            return self.tree
+        if self._point_tree is None:
+            geoms = [None] * (int(self.pos.max(initial=-1)) + 1)
+            for p, x, y in zip(self.pos.tolist(), self.xs.tolist(), self.ys.tolist()):
+                geoms[p] = Geom.point(x, y)
+            self._point_tree = STRtree(geoms)
+        return self._point_tree
+
+    def query(self, probe: "_Probe", predicate, distance):
+        """query_bulk over one probe batch -> (row, position) arrays.
+        Point batches take grid candidates, then one ``hypot`` against
+        an all-point side, or one vectorized kernel call per candidate
+        geometry (the per-batch "prepare once" of src/strtree.c:286)."""
+        if not probe.points:
+            pairs = self.geom_tree().query_bulk(probe.geoms(), predicate=predicate,
+                                                distance=distance)
+            return pairs[0], pairs[1]
+        pad = distance if predicate == "dwithin" else 0.0
+        if self._grid is None or self._grid.pad != pad:
+            boxes = self.tree._boxes if self.tree is not None else \
+                np.column_stack([self.xs, self.ys, self.xs, self.ys])
+            self._grid = K_grid.BoxGrid(boxes, pad)
+        xs, ys = probe.xs, probe.ys
+        cl, cr = self._grid.candidates(xs, ys)
+        pos = self.tree._idx if self.tree is not None else self.pos
+        if predicate is None:
+            return cl, pos[cr]
+        if self.tree is None:
+            d = np.hypot(xs[cl] - self.xs[cr], ys[cl] - self.ys[cr])
+            if predicate == "dwithin":
+                keep = d <= distance
+            else:  # vertex coincidence, like point_predicate_mask
+                keep = (d <= 1e-12) & (predicate in _COINCIDE)
+            return cl[keep], pos[cr[keep]]
+        order = np.argsort(cr, kind="stable")
+        cl, cr = cl[order], cr[order]
+        uniq, starts = np.unique(cr, return_index=True)
+        ends = np.append(starts[1:], len(cr))
+        keep = np.zeros(len(cl), dtype=bool)
+        for u, s, e in zip(uniq, starts, ends):
+            g = self.tree._geoms[pos[u]]
+            keep[s:e] = point_predicate_mask(g, xs[cl[s:e]], ys[cl[s:e]],
+                                             predicate, distance)
+        return cl[keep], pos[cr[keep]]
+
+
+class _Probe:
+    """One Arrow batch as probe rows: a WKB column ``raw`` (object
+    array of bytes / None) or lon/lat doubles.  ``xs``/``ys`` are NaN
+    where a row is NULL or not a point; ``points`` says whether every
+    non-NULL row is a point."""
+
+    def __init__(self, raw=None, xs=None, ys=None):
+        self.raw, self.points = raw, raw is None
+        if raw is not None:
+            xs, ys = K_wkb.decode_points(raw)
+            self.points = bool(np.all(np.isnan(xs) == np.equal(raw, None)))
+        self.xs, self.ys = xs, ys
+
+    def geoms(self):
+        """The decoded geometries the general-geometry paths need."""
+        if self.raw is not None:
+            return [SG._loads_safe(v) for v in self.raw]
+        return [None if np.isnan(x) or np.isnan(y) else Geom.point(x, y)
+                for x, y in zip(self.xs.tolist(), self.ys.tolist())]
 
 
 def point_predicate_mask(g, px, py, predicate, distance=None):
@@ -148,6 +202,13 @@ def point_predicate_mask(g, px, py, predicate, distance=None):
     broadcast probe and the cell-join refine."""
     if predicate == "dwithin":
         return K_m.points_to_geom_dist(px, py, g) <= distance
+    miss = np.zeros(len(px), dtype=bool)
+    if predicate in ("contains", "covers", "contains_properly"):
+        # a point covers g only if every vertex of g coincides with it
+        # (vertices spread wider, or NaN, cannot all coincide)
+        gv = K_m.vertices(g)
+        return _coincide(px, py, gv).all(axis=1) \
+            if np.ptp(gv, axis=0).max() <= 2e-12 else miss
     if g.type_id in (3, 6, 7) or g.rings or any(
             p.type_id in (3,) for p in g.parts):
         inside, boundary = K_p.points_in_polygon(px, py, g)
@@ -157,203 +218,108 @@ def point_predicate_mask(g, px, py, predicate, distance=None):
             return inside
         if predicate == "touches":
             return boundary
-        return np.zeros(len(px), dtype=bool)
+        return miss
     segs = K_m.segments(g)
     if len(segs):
         on_line = K_m.points_to_segments_dist(px, py, segs) <= 1e-12
         if predicate in ("intersects", "covered_by"):
             return on_line
+        at_end = _coincide(px, py, K_p._line_boundary_points(g)).any(axis=1)
         if predicate == "within":
-            bpts = K_p._line_boundary_points(g)
-            m = on_line.copy()
-            if len(bpts):
-                d = np.hypot(px[:, None] - bpts[None, :, 0],
-                             py[:, None] - bpts[None, :, 1])
-                m &= ~(d <= 1e-12).any(axis=1)
-            return m
-        if predicate == "touches":
-            bpts = K_p._line_boundary_points(g)
-            m = np.zeros(len(px), dtype=bool)
-            if len(bpts):
-                d = np.hypot(px[:, None] - bpts[None, :, 0],
-                             py[:, None] - bpts[None, :, 1])
-                m = (d <= 1e-12).any(axis=1)
-            return m
-        return np.zeros(len(px), dtype=bool)
+            return on_line & ~at_end
+        return at_end if predicate == "touches" else miss
     # point tree geometry
-    gv = K_m.vertices(g)
-    d = np.hypot(px[:, None] - gv[None, :, 0], py[:, None] - gv[None, :, 1])
-    eq = (d <= 1e-12).any(axis=1)
-    return eq if predicate in ("intersects", "within", "covered_by") else \
-        np.zeros(len(px), dtype=bool)
+    eq = _coincide(px, py, K_m.vertices(g)).any(axis=1)
+    return eq if predicate in ("intersects", "within", "covered_by") else miss
 
 
-def _tree_point_coords(tree: STRtree):
-    """(txs, tys) per tree ITEM POSITION when every indexed geometry is
-    a single non-empty point, else None; cached on the (per-worker,
-    broadcast-deserialized) tree object.  Point items have degenerate
-    envelopes, so the coordinates are the boxes' min corners — no
-    geometry walk needed beyond the one-time type check."""
-    if getattr(tree, "_points_only", False):
-        return ((tree._boxes[:, 0], tree._boxes[:, 1])
-                if len(tree._idx) else None)
-    cached = getattr(tree, "_point_coords_cache", None)
-    if cached is not None:
-        return cached[0]
-    coords = None
-    if len(tree._idx):
-        all_pts = all(
-            (g := tree._geoms[i]).type_id == 0 and not g.is_empty
-            and g.coords is not None and len(g.coords) == 1
-            for i in tree._idx)
-        if all_pts:
-            coords = (tree._boxes[:, 0], tree._boxes[:, 1])
-    tree._point_coords_cache = (coords,)
-    return coords
-
-
-def _tree_cell_index(tree: STRtree, pad: float):
-    """Cell-bucketed envelope index over the tree items, cached on the
-    (per-worker, broadcast-deserialized) tree object.  Maps quad-grid
-    cell -> candidate item positions; candidate lookup for a whole
-    point batch is then two vectorized searchsorted calls instead of an
-    O(items × points) bbox sweep — this is what keeps the probe
-    memory-bandwidth-light and lets it scale with cores."""
-    key = ("cellidx", round(float(pad), 9))
-    cached = getattr(tree, "_cell_index_cache", None)
-    if cached is not None and cached[0] == key:
-        return cached[1]
-    b = tree._boxes
-    if not len(b):
-        return None
-    # pick the FINEST resolution whose per-item cell fan-out stays
-    # within budget: finer cells mean fewer items per cell, so each
-    # probe point gathers fewer false candidates — candidate volume
-    # (the gather's memory traffic, the scaling bottleneck) drops
-    # roughly linearly with cell area until the fan-out cap bites
-    w = np.median(b[:, 2] - b[:, 0]) + 2 * pad
-    h = np.median(b[:, 3] - b[:, 1]) + 2 * pad
-    span = max(min(360.0, max(w * 2, 1e-9)), min(180.0, max(h, 1e-9)) * 2)
-    res = int(np.clip(np.floor(np.log2(360.0 / span)) + 3, 0, 14))
-    from .kernel.cell import MAX_RES  # noqa: F401  (res bounded above)
-    while True:
-        n_side = 1 << res
-        ix0 = np.clip(np.floor((b[:, 0] - pad + 180.0) / 360.0 * n_side), 0, n_side - 1).astype(np.int64)
-        ix1 = np.clip(np.floor((b[:, 2] + pad + 180.0) / 360.0 * n_side), 0, n_side - 1).astype(np.int64)
-        iy0 = np.clip(np.floor((b[:, 1] - pad + 90.0) / 180.0 * n_side), 0, n_side - 1).astype(np.int64)
-        iy1 = np.clip(np.floor((b[:, 3] + pad + 90.0) / 180.0 * n_side), 0, n_side - 1).astype(np.int64)
-        counts = (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
-        if counts.sum() <= 64 * len(b) or res == 0:
-            break
-        res -= 1
-    cells_l, pos_l = [], []
-    for u in range(len(b)):
-        xs_r = np.arange(ix0[u], ix1[u] + 1)
-        ys_r = np.arange(iy0[u], iy1[u] + 1)
-        cc = (ys_r[:, None] * np.int64(n_side) + xs_r[None, :]).ravel()
-        cells_l.append(cc)
-        pos_l.append(np.full(len(cc), u, dtype=np.int64))
-    cells = np.concatenate(cells_l)
-    pos = np.concatenate(pos_l)
-    order = np.argsort(cells, kind="stable")
-    index = (res, cells[order], pos[order])
-    tree._cell_index_cache = (key, index)
-    return index
-
-
-def _point_candidates(tree: STRtree, xs, ys, pad: float):
-    """Vectorized candidate (point_row, item_pos) pairs via the cell
-    index + exact envelope filter.  Returns None when a per-point tree
-    walk is the better plan (no items)."""
-    idx = _tree_cell_index(tree, pad)
-    if idx is None:
-        return None
-    res, cells_sorted, pos_sorted = idx
-    n_side = 1 << res
-    ix = np.clip(np.floor((np.nan_to_num(xs, nan=1e9) + 180.0) / 360.0 * n_side),
-                 0, n_side - 1).astype(np.int64)
-    iy = np.clip(np.floor((np.nan_to_num(ys, nan=1e9) + 90.0) / 180.0 * n_side),
-                 0, n_side - 1).astype(np.int64)
-    pc = iy * np.int64(n_side) + ix
-    pc[np.isnan(xs)] = -1
-    lo = np.searchsorted(cells_sorted, pc, side="left")
-    hi = np.searchsorted(cells_sorted, pc, side="right")
-    counts = hi - lo
-    total = int(counts.sum())
-    if total == 0:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    # int32 gather indices: half the memory traffic of int64 (the
-    # gather dominates the probe's DRAM footprint at high parallelism);
-    # fall back to int64 above 2^31 candidates/positions — a silent
-    # wrap would return wrong pairs instead of failing loudly
-    gdt = np.int32 if (total <= np.iinfo(np.int32).max
-                       and len(pos_sorted) <= np.iinfo(np.int32).max) else np.int64
-    cl = np.repeat(np.arange(len(xs), dtype=gdt), counts)
-    starts = np.repeat(lo.astype(gdt), counts)
-    csum = (np.cumsum(counts) - counts).astype(gdt)
-    intra = np.arange(total, dtype=gdt) - np.repeat(csum, counts)
-    cr = pos_sorted[starts + intra]
-    # exact envelope filter (cells over-approximate)
-    b = tree._boxes
-    px, py = xs[cl], ys[cl]
-    keep = (px >= b[cr, 0] - pad) & (px <= b[cr, 2] + pad) \
-        & (py >= b[cr, 1] - pad) & (py <= b[cr, 3] + pad)
-    return cl[keep], cr[keep]
+def _coincide(px, py, v):
+    """(points, vertices) mask: point within 1e-12 of vertex."""
+    return np.hypot(px[:, None] - v[None, :, 0], py[:, None] - v[None, :, 1]) <= 1e-12
 
 
 def probe_batch(tree: STRtree, wkbs, predicate=None, distance=None):
-    """query_bulk over one Arrow batch of WKB geometries -> (row_pos,
-    tree_item_index) arrays.  Point batches go fully vectorized."""
-    arr = np.asarray([None if v is None else (v if isinstance(v, bytes) else bytes(v))
-                      for v in wkbs], dtype=object)
-    xs, ys = K_wkb.decode_points(arr)
-    all_points = bool(np.all(np.isnan(xs) == np.array([v is None for v in arr])))
-    if all_points and (predicate in _POINT_FAST_PREDICATES or predicate is None):
-        return _probe_batch_points(tree, xs, ys, predicate, distance)
-    geoms = [SG._loads_safe(v) for v in arr]
-    pairs = tree.query_bulk(geoms, predicate=predicate, distance=distance)
-    return pairs[0], pairs[1]
+    """query_bulk over one batch of WKB geometries -> (row_pos,
+    tree_item_index) arrays — the broadcast joins' per-batch probe on a
+    bare tree.  Point batches go fully vectorized."""
+    raw = np.asarray([SG._b(v) for v in wkbs], dtype=object)
+    return _BroadcastSide(None, tree).query(_Probe(raw), predicate, distance)
 
 
 # ---------------------------------------------------------------------------
-# broadcast STRtree join
+# the one broadcast plan: every broadcast join and kNN runs through it
 # ---------------------------------------------------------------------------
+
+def _run_broadcast(left: DataFrame, side: _BroadcastSide, op, *, right_id,
+                   geom=None, lonlat=None, keep=None, cell_res=None,
+                   with_distance=False) -> DataFrame:
+    """One ``mapInArrow`` over ``left`` with ``side`` broadcast; per
+    Arrow batch, ``op(side, probe)`` -> (row, right id, distance|None)
+    arrays.  Probes come from the WKB column ``geom`` (output: every
+    left column) or the DOUBLE pair ``lonlat`` (output: the ``keep``
+    columns).  Output columns are gathered with Arrow ``take`` — they
+    never become pandas/Python objects — then [``cell`` at
+    ``cell_res``] + ``right_id`` [+ ``distance``]."""
+    if geom is not None:
+        src, keep, probe = left, range(len(left.columns)), [left.columns.index(geom)]
+    else:
+        keep = keep or []
+        src = left.select(*keep, *lonlat)
+        keep, probe = range(len(keep)), [len(keep), len(keep) + 1]
+    fields = [src.schema.fields[i] for i in keep]
+    if cell_res is not None:
+        fields.append(T.StructField("cell", T.LongType(), False))
+    fields.append(T.StructField(right_id, T.LongType()))
+    if with_distance:
+        fields.append(T.StructField("distance", T.DoubleType()))
+    out_schema = T.StructType(fields)
+    bc = src.sparkSession.sparkContext.broadcast(side)
+
+    def run(batches):
+        import pyarrow as pa
+        side_l = bc.value  # deserialized once per worker
+        for b in batches:
+            cols = [b.column(i).to_numpy(zero_copy_only=False) for i in probe]
+            pr = _Probe(*cols) if len(cols) == 1 else _Probe(  # NULL -> NaN
+                xs=cols[0].astype(np.float64, copy=False),
+                ys=cols[1].astype(np.float64, copy=False))
+            li, rids, dd = op(side_l, pr)
+            take = pa.array(li, type=pa.int64())
+            out = [b.column(i).take(take) for i in keep]
+            if cell_res is not None:
+                out.append(pa.array(K_cell.cell_of(pr.xs[li], pr.ys[li], cell_res),
+                                    type=pa.int64()))
+            out.append(pa.array(rids, type=pa.int64()))
+            if with_distance:
+                out.append(pa.array(dd, type=pa.float64()))
+            yield pa.RecordBatch.from_arrays(out, names=out_schema.fieldNames())
+
+    return src.mapInArrow(run, schema=out_schema)
+
+
+def _join_op(predicate, distance):
+    def op(side, probe):
+        li, ri = side.query(probe, predicate, distance)
+        return li, side.ids[ri], None
+    return op
+
 
 def broadcast_spatial_join(left: DataFrame, right: DataFrame, *,
                            predicate: str = "intersects",
                            left_geom: str = "geom", right_geom: str = "geom",
                            right_id: str = "right_id",
                            distance: float | None = None,
-                           leafsize: int = 10,
                            max_right_rows: int | None = None) -> DataFrame:
     """Inner spatial join, right side broadcast as an STRtree.
 
     Output = all left columns + ``right_id``.  Join the result back to
     ``right`` (a broadcast hash join — it is small by construction) to
     attach more right columns."""
-    if predicate is not None and predicate != "dwithin" and predicate not in PREDICATES:
-        raise ValueError(f"unknown predicate {predicate!r}; one of {sorted(k for k in PREDICATES if k)}")
-    rows = _collect_right(right, [right_id, right_geom],
-                          BROADCAST_RIGHT_LIMIT if max_right_rows is None
-                          else max_right_rows, "broadcast_spatial_join")
-    ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-    geoms = [SG._loads_safe(r[1]) for r in rows]
-    tree = STRtree(geoms, leafsize=leafsize)
-    bc = left.sparkSession.sparkContext.broadcast((tree, ids))
-
-    out_schema = T.StructType(left.schema.fields + [T.StructField(right_id, T.LongType())])
-    geom_pos = left.columns.index(left_geom)
-
-    def run(batches):
-        tree_l, ids_l = bc.value  # deserialized once per worker
-        for pdf in batches:
-            li, ri = probe_batch(tree_l, pdf.iloc[:, geom_pos].to_numpy(),
-                                 predicate=predicate, distance=distance)
-            out = pdf.iloc[li].reset_index(drop=True)
-            out[right_id] = ids_l[ri]
-            yield out
-
-    return left.mapInPandas(run, schema=out_schema)
+    _BroadcastSide.check_predicate(predicate, distance)
+    side = _BroadcastSide.collect(right, "broadcast_spatial_join", right_id,
+                                  right_geom, max_right_rows=max_right_rows)
+    return _run_broadcast(left, side, _join_op(predicate, distance),
+                          right_id=right_id, geom=left_geom)
 
 
 def broadcast_lonlat_join(left: DataFrame, right: DataFrame, *,
@@ -369,67 +335,27 @@ def broadcast_lonlat_join(left: DataFrame, right: DataFrame, *,
                           right_lat: str | None = None) -> DataFrame:
     """Point-probe join straight from lon/lat DOUBLE columns — the
     minimal-data-movement plan for the pages pipeline: only the
-    numeric columns named in ``keep`` (+ lon/lat) cross the Python
-    boundary, WKB encoding is skipped entirely, and the cell id is
-    computed in the same crossing (``cell_res``).
+    columns named in ``keep`` (+ lon/lat) cross the Python boundary,
+    WKB encoding is skipped entirely, and the cell id is computed in
+    the same crossing (``cell_res``).  Pairs are identical to
+    ``broadcast_spatial_join`` over ``st_point(lon, lat)``.
 
     ``right_lon``/``right_lat`` (r6): when the RIGHT side is also
     points, collect its coordinate doubles instead of WKB — the
-    broadcast then carries three numpy arrays, not a list of Python
-    geometry objects, which removes the per-query job that evaluated
-    st_point and the 10k-object pickle from the driver path (guide §5:
-    the driver should do almost no data work).
+    broadcast then carries numpy arrays, not a list of Python geometry
+    objects, which removes the per-query job that evaluated st_point
+    and the 10k-object pickle from the driver path (guide §5: the
+    driver should do almost no data work).
 
     Output: keep columns + [cell] + right_id.  At 10^12 rows this is
     the plan that matters: one Arrow roundtrip of ~16 bytes/row plus the
-    keep columns, which the worker gathers with Arrow ``take`` — they
-    never become pandas/Python objects."""
-    limit = _right_limit(max_right_rows, right_lon, right_lat,
-                         "broadcast_lonlat_join")
-    if right_lon is not None:
-        rows = _collect_right(right, [right_id, right_lon, right_lat],
-                              limit, "broadcast_lonlat_join")
-        ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-        rx = np.fromiter((np.nan if r[1] is None else r[1]
-                          for r in rows), np.float64, count=len(rows))
-        ry = np.fromiter((np.nan if r[2] is None else r[2]
-                          for r in rows), np.float64, count=len(rows))
-        tree = STRtree.from_points(rx, ry)
-    else:
-        rows = _collect_right(right, [right_id, right_geom], limit,
-                              "broadcast_lonlat_join")
-        ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-        geoms = [SG._loads_safe(r[1]) for r in rows]
-        tree = STRtree(geoms)
-    bc = left.sparkSession.sparkContext.broadcast((tree, ids))
-    keep = keep or []
-    cols = keep + [lon, lat]
-    src = left.select(*cols)
-    fields = [src.schema[c] for c in keep]
-    if cell_res is not None:
-        fields.append(T.StructField("cell", T.LongType(), False))
-    fields.append(T.StructField(right_id, T.LongType()))
-    out_schema = T.StructType(fields)
-    n_keep = len(keep)
-
-    def run(batches):
-        # Arrow in, Arrow out: keep columns are gathered with take(),
-        # so strings never become Python objects
-        import pyarrow as pa
-        from .kernel.cell import cell_of
-        tree_l, ids_l = bc.value
-        for b in batches:
-            xs, ys = (b.column(i).to_numpy(zero_copy_only=False)   # NULL -> NaN
-                      .astype(np.float64, copy=False) for i in (n_keep, n_keep + 1))
-            li, ri = _probe_batch_points(tree_l, xs, ys, predicate, distance)
-            take = pa.array(li, type=pa.int64())
-            out = [b.column(i).take(take) for i in range(n_keep)]
-            if cell_res is not None:
-                out.append(pa.array(cell_of(xs[li], ys[li], cell_res), type=pa.int64()))
-            out.append(pa.array(ids_l[ri], type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(out, names=out_schema.fieldNames())
-
-    return src.mapInArrow(run, schema=out_schema)
+    keep columns."""
+    _BroadcastSide.check_predicate(predicate, distance)
+    side = _BroadcastSide.collect(right, "broadcast_lonlat_join", right_id,
+                                  right_geom, right_lon, right_lat, max_right_rows)
+    return _run_broadcast(left, side, _join_op(predicate, distance),
+                          right_id=right_id, lonlat=(lon, lat), keep=keep,
+                          cell_res=cell_res)
 
 
 # ---------------------------------------------------------------------------
@@ -705,6 +631,10 @@ def spatial_join(left: DataFrame, right: DataFrame, *,
     """Plan chooser: broadcast STRtree when the right side is small
     (counted once — at 100 TB the layer cardinality is metadata),
     else the two-phase cell join."""
+    if strategy not in ("auto", "broadcast", "cell"):
+        raise ValueError(f"unknown strategy {strategy!r}; one of "
+                         "'auto', 'broadcast', 'cell'")
+    _BroadcastSide.check_predicate(predicate, distance)
     if strategy == "auto":
         # limit-bounded probe: answers "is it small?" without a full
         # count action over a potentially huge right side

@@ -9,8 +9,10 @@ Semantics from the reference:
   nondeterminism, strtree.py:235-238).
 
 Physical plans:
-- **broadcast** (default): STRtree best-first nearest per Arrow batch
-  inside mapInPandas — no shuffle.
+- **broadcast** (default): join.py's one broadcast path (one
+  ``mapInArrow`` per Arrow batch, no shuffle); points against an
+  all-point side run the grid kernel ``_nearest_all_points``, anything
+  else the STRtree's best-first nearest.
 - **cell kNN** (large✕large): one representative right point per
   occupied cell bounds each left row's nearest distance by d_ub; one
   cell disk of radius ceil(d_ub/h) per left row, equi-joined to the
@@ -23,88 +25,46 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql import types as T
 
 from .kernel import cell as K_cell
+from .kernel import grid as K_grid
 from .kernel import wkb as K_wkb
-from .kernel.strtree import STRtree
 from . import functions as SG
+from . import join as SJ
 
 
-def _lowest_id_per_left(li, rids, dd):
-    """Reduce all-ties output to one row per left index, keeping the
-    lowest right id — runs inside the worker, so nearest() needs no
-    post-join shuffle/window at all."""
-    if len(li) == 0:
+def _nearest_op(max_distance, single):
+    """The broadcast runner op of the kNN APIs: all-ties nearest per
+    probe row, or (``single``) one row with the lowest right id — the
+    tie-break runs in the worker, so nearest() needs no shuffle."""
+    def op(side, probe):
+        if probe.points and side.tree is None:
+            li, ri, dd = _nearest_all_points(probe.xs, probe.ys, side.xs, side.ys,
+                                             side.pos, max_distance)
+        else:
+            (li, ri), dd = side.geom_tree().nearest_all(
+                probe.geoms(), max_distance=max_distance, return_distance=True)
+        rids = side.ids[ri]
+        if single:  # lexsort by (row, id): the first row of each run wins
+            order = np.lexsort((rids, li))
+            li, rids, dd = li[order], rids[order], dd[order]
+            first = np.ones(len(li), dtype=bool)
+            first[1:] = li[1:] != li[:-1]
+            li, rids, dd = li[first], rids[first], dd[first]
         return li, rids, dd
-    order = np.lexsort((rids, li))
-    li, rids, dd = li[order], rids[order], dd[order]
-    keep = np.ones(len(li), dtype=bool)
-    keep[1:] = li[1:] != li[:-1]
-    return li[keep], rids[keep], dd[keep]
+    return op
 
 
 def broadcast_nearest_all(left: DataFrame, right: DataFrame, *,
                           left_geom: str = "geom", right_geom: str = "geom",
                           right_id: str = "right_id",
                           max_distance: float | None = None,
-                          max_right_rows: int | None = None,
-                          _single: bool = False) -> DataFrame:
+                          max_right_rows: int | None = None) -> DataFrame:
     """All-ties nearest join; output = left columns + right_id + distance."""
-    from .join import BROADCAST_RIGHT_LIMIT, _collect_right
-    rows = _collect_right(right, [right_id, right_geom],
-                          BROADCAST_RIGHT_LIMIT if max_right_rows is None
-                          else max_right_rows, "broadcast_nearest_all")
-    ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-    geoms = [SG._loads_safe(r[1]) for r in rows]
-    tree = STRtree(geoms)
-    # all-points right side -> fully vectorized distance-matrix path
-    pts = None
-    if len(tree) and len(tree) <= 200_000 and all(
-            geoms[i].type_id == 0 for i in tree._idx):
-        txs = np.asarray([geoms[i].coords[0, 0] for i in tree._idx])
-        tys = np.asarray([geoms[i].coords[0, 1] for i in tree._idx])
-        pts = (txs, tys, tree._idx.copy())
-    bc = left.sparkSession.sparkContext.broadcast((tree, ids, pts))
-    out_schema = T.StructType(left.schema.fields + [
-        T.StructField(right_id, T.LongType()),
-        T.StructField("distance", T.DoubleType()),
-    ])
-    geom_pos = left.columns.index(left_geom)
-
-    def run(batches):
-        tree_l, ids_l, pts_l = bc.value
-        for pdf in batches:
-            raw = pdf.iloc[:, geom_pos].to_numpy()
-            if pts_l is not None:
-                arr = np.asarray([None if v is None else
-                                  (v if isinstance(v, bytes) else bytes(v))
-                                  for v in raw], dtype=object)
-                xs, ys = K_wkb.decode_points(arr)
-                nulls = np.array([v is None for v in arr])
-                if bool(np.all(np.isnan(xs) == nulls)):
-                    li, ri, dd = _nearest_all_points(xs, ys, *pts_l, max_distance)
-                    rids = ids_l[ri]
-                    if _single:
-                        li, rids, dd = _lowest_id_per_left(li, rids, dd)
-                    out = pdf.iloc[li].reset_index(drop=True)
-                    out[right_id] = rids
-                    out["distance"] = dd
-                    yield out
-                    continue
-            geoms_b = [SG._loads_safe(v) for v in raw]
-            pairs, dists = tree_l.nearest_all(geoms_b, max_distance=max_distance,
-                                              return_distance=True)
-            li, rids = pairs[0], ids_l[pairs[1]]
-            if _single:
-                li, rids, dists = _lowest_id_per_left(
-                    np.asarray(li), np.asarray(rids), np.asarray(dists))
-            out = pdf.iloc[li].reset_index(drop=True)
-            out[right_id] = rids
-            out["distance"] = dists
-            yield out
-
-    return left.mapInPandas(run, schema=out_schema)
+    side = SJ._BroadcastSide.collect(right, "broadcast_nearest_all", right_id,
+                                     right_geom, max_right_rows=max_right_rows)
+    return SJ._run_broadcast(left, side, _nearest_op(max_distance, False),
+                             right_id=right_id, geom=left_geom, with_distance=True)
 
 
 def _nearest_all_points(xs, ys, txs, tys, tpos, max_distance):
@@ -152,26 +112,21 @@ def _nearest_all_points(xs, ys, txs, tys, tpos, max_distance):
     tcells_s = tcells[order]
     txs_s, tys_s, tpos_s = txs[order], tys[order], tpos[order]
 
-    def gather(cells, rix):
-        """flat (cell, probe_row) pairs -> per-candidate (probe_row,
-        sorted-item index) via two searchsorted calls (the same
-        candidate expansion as join._point_candidates)."""
-        lo = np.searchsorted(tcells_s, cells, side="left")
-        hi = np.searchsorted(tcells_s, cells, side="right")
-        counts = hi - lo
-        tot = int(counts.sum())
-        if tot == 0:
-            return np.empty(0, np.int64), np.empty(0, np.int64)
-        starts = np.repeat(lo, counts)
-        csum = np.cumsum(counts) - counts
-        intra = np.arange(tot, dtype=np.int64) - np.repeat(csum, counts)
-        return np.repeat(rix, counts), starts + intra
-
     valid = ~(np.isnan(xs) | np.isnan(ys))
     sxs = np.where(valid, xs, 0.0)
     sys_ = np.where(valid, ys, 0.0)
     gx = np.clip((sxs - xmin) / cw, 0, n_side - 1).astype(np.int64)
     gy = np.clip((sys_ - ymin) / cw, 0, n_side - 1).astype(np.int64)
+
+    def probe(rr, dx, dy, ok=True):
+        """(probe_row, sorted item, distance) over the cells at offsets
+        (dx, dy) from the cells of rows ``rr``, where ``ok``."""
+        cx = gx[rr][:, None] + dx[None, :]
+        cy = gy[rr][:, None] + dy[None, :]
+        okc = (cx >= 0) & (cx < n_side) & (cy >= 0) & (cy < n_side) & ok
+        prow, item = K_grid.gather(tcells_s, (cy * n_side + cx)[okc],
+                                   np.repeat(rr, okc.sum(axis=1)))
+        return prow, item, np.hypot(xs[prow] - txs_s[item], ys[prow] - tys_s[item])
 
     # -- phase 1: ring expansion until the minimum is proven ----------
     best = np.full(n, np.inf)
@@ -189,14 +144,8 @@ def _nearest_all_points(xs, ys, txs, tys, tpos, max_distance):
                                   np.full(len(mid), k, np.int64)])
             sdy = np.concatenate([np.full(len(e), k, np.int64),
                                   np.full(len(e), -k, np.int64), mid, mid])
-        cx = gx[rows][:, None] + sdx[None, :]
-        cy = gy[rows][:, None] + sdy[None, :]
-        okc = (cx >= 0) & (cx < n_side) & (cy >= 0) & (cy < n_side)
-        prow, item = gather((cy * n_side + cx)[okc],
-                            np.repeat(rows, okc.sum(axis=1)))
-        if len(item):
-            d = np.hypot(xs[prow] - txs_s[item], ys[prow] - tys_s[item])
-            np.minimum.at(best, prow, d)
+        prow, _, d = probe(rows, sdx, sdy)
+        np.minimum.at(best, prow, d)
         done = best[rows] <= k * cw
         if max_distance is not None:
             done |= (k * cw) > max_distance
@@ -226,23 +175,13 @@ def _nearest_all_points(xs, ys, txs, tys, tpos, max_distance):
         e = np.arange(-kk, kk + 1, dtype=np.int64)
         ddx = np.repeat(e, 2 * kk + 1)
         ddy = np.tile(e, 2 * kk + 1)
-        rr = rows[sel]
-        cx = gx[rr][:, None] + ddx[None, :]
-        cy = gy[rr][:, None] + ddy[None, :]
-        okc = (cx >= 0) & (cx < n_side) & (cy >= 0) & (cy < n_side)
-        okc &= np.maximum(np.abs(ddx), np.abs(ddy))[None, :] \
-            <= kf[sel][:, None]
-        prow, item = gather((cy * n_side + cx)[okc],
-                            np.repeat(rr, okc.sum(axis=1)))
-        if len(item):
-            d = np.hypot(xs[prow] - txs_s[item], ys[prow] - tys_s[item])
-            tie = d == best[prow]
-            lefts.append(prow[tie])
-            rights.append(tpos_s[item[tie]])
-            dists.append(d[tie])
+        prow, item, d = probe(rows[sel], ddx, ddy, np.maximum(
+            np.abs(ddx), np.abs(ddy))[None, :] <= kf[sel][:, None])
+        tie = d == best[prow]
+        lefts.append(prow[tie])
+        rights.append(tpos_s[item[tie]])
+        dists.append(d[tie])
         i = j
-    if not lefts:
-        return (np.empty(0, np.int64),) * 2 + (np.empty(0),)
     li = np.concatenate(lefts)
     ri = np.concatenate(rights)
     dd = np.concatenate(dists)
@@ -284,8 +223,7 @@ def nearest_all_lonlat(left: DataFrame, right: DataFrame, *,
                        keep: list[str] | None = None,
                        max_right_rows: int | None = None,
                        right_lon: str | None = None,
-                       right_lat: str | None = None,
-                       _single: bool = False) -> DataFrame:
+                       right_lat: str | None = None) -> DataFrame:
     """All-ties nearest straight from lon/lat DOUBLE columns — the
     broadcast_lonlat_join analogue for kNN (r6, guide §2.3/§4.1): only
     the ``keep`` columns + 16 B of lon/lat doubles cross the Python
@@ -293,77 +231,14 @@ def nearest_all_lonlat(left: DataFrame, right: DataFrame, *,
     are identical to broadcast_nearest_all over st_point(lon, lat)
     (the WKB point round-trip is coordinate-exact).
 
-    Output: keep columns + right_id + distance.  Falls back to probing
-    the STRtree with point geometries when the right side is not
-    all-points.
-
-    ``right_lon``/``right_lat`` (r6): collect the right side's
-    coordinate doubles instead of WKB — the broadcast carries numpy
-    arrays only (no tree, no Geom objects), removing the per-query
-    st_point evaluation job and the object-pickle cost from the
-    driver path."""
-    from .join import _right_limit, _collect_right
-    limit = _right_limit(max_right_rows, right_lon, right_lat,
-                         "nearest_all_lonlat")
-    if right_lon is not None:
-        rows = _collect_right(right, [right_id, right_lon, right_lat],
-                              limit, "nearest_all_lonlat")
-        ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-        rx = np.fromiter((np.nan if r[1] is None else r[1]
-                          for r in rows), np.float64, count=len(rows))
-        ry = np.fromiter((np.nan if r[2] is None else r[2]
-                          for r in rows), np.float64, count=len(rows))
-        kp = np.nonzero(~(np.isnan(rx) | np.isnan(ry)))[0]
-        tree = None
-        pts = (rx[kp], ry[kp], kp.astype(np.int64))
-    else:
-        rows = _collect_right(right, [right_id, right_geom], limit,
-                              "nearest_all_lonlat")
-        ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-        geoms = [SG._loads_safe(r[1]) for r in rows]
-        tree = STRtree(geoms)
-        pts = None
-        if len(tree) and all(geoms[i].type_id == 0 for i in tree._idx):
-            txs = np.asarray([geoms[i].coords[0, 0] for i in tree._idx])
-            tys = np.asarray([geoms[i].coords[0, 1] for i in tree._idx])
-            pts = (txs, tys, tree._idx.copy())
-    bc = left.sparkSession.sparkContext.broadcast((tree, ids, pts))
-    keep = keep or []
-    src = left.select(*(keep + [lon, lat]))
-    fields = [src.schema[c] for c in keep]
-    fields.append(T.StructField(right_id, T.LongType()))
-    fields.append(T.StructField("distance", T.DoubleType()))
-    out_schema = T.StructType(fields)
-    lon_pos, lat_pos = len(keep), len(keep) + 1
-
-    def run(batches):
-        from .kernel.geom import Geom
-        tree_l, ids_l, pts_l = bc.value
-        for pdf in batches:
-            xs = pdf.iloc[:, lon_pos].to_numpy(dtype=np.float64,
-                                               na_value=np.nan)
-            ys = pdf.iloc[:, lat_pos].to_numpy(dtype=np.float64,
-                                               na_value=np.nan)
-            if pts_l is not None:
-                li, ri, dd = _nearest_all_points(xs, ys, *pts_l,
-                                                 max_distance)
-                rids = ids_l[ri]
-            else:
-                probes = [None if np.isnan(x) else Geom.point(x, y)
-                          for x, y in zip(xs, ys)]
-                pairs, dd = tree_l.nearest_all(
-                    probes, max_distance=max_distance,
-                    return_distance=True)
-                li, rids = np.asarray(pairs[0]), ids_l[pairs[1]]
-                dd = np.asarray(dd)
-            if _single:
-                li, rids, dd = _lowest_id_per_left(li, rids, dd)
-            out = pdf.iloc[li, :len(keep)].reset_index(drop=True)
-            out[right_id] = rids
-            out["distance"] = dd
-            yield out
-
-    return src.mapInPandas(run, schema=out_schema)
+    Output: keep columns + right_id + distance.  A right side that is
+    not all points is probed through its STRtree with point geometries.
+    ``right_lon``/``right_lat``: as in ``join.broadcast_lonlat_join``."""
+    side = SJ._BroadcastSide.collect(right, "nearest_all_lonlat", right_id, right_geom,
+                                     right_lon, right_lat, max_right_rows)
+    return SJ._run_broadcast(left, side, _nearest_op(max_distance, False),
+                             right_id=right_id, lonlat=(lon, lat), keep=keep,
+                             with_distance=True)
 
 
 def nearest_lonlat(left: DataFrame, right: DataFrame, *,
@@ -375,11 +250,11 @@ def nearest_lonlat(left: DataFrame, right: DataFrame, *,
                    right_lat: str | None = None) -> DataFrame:
     """nearest() from lon/lat doubles: one row per left row, lowest
     right-id tie-break inside the worker — zero exchanges, no WKB."""
-    return nearest_all_lonlat(left, right, lon=lon, lat=lat,
-                              right_geom=right_geom, right_id=right_id,
-                              max_distance=max_distance, keep=keep,
-                              right_lon=right_lon, right_lat=right_lat,
-                              _single=True)
+    side = SJ._BroadcastSide.collect(right, "nearest_lonlat", right_id, right_geom,
+                                     right_lon, right_lat)
+    return SJ._run_broadcast(left, side, _nearest_op(max_distance, True),
+                             right_id=right_id, lonlat=(lon, lat), keep=keep,
+                             with_distance=True)
 
 
 def nearest(left: DataFrame, right: DataFrame, *,
@@ -389,12 +264,12 @@ def nearest(left: DataFrame, right: DataFrame, *,
     """nearest(): one row per left row, lowest-right-id tie-break.
 
     The tie-break happens INSIDE the broadcast worker (one lexsort per
-    Arrow batch) — the physical plan is a single mapInPandas over the
+    Arrow batch) — the physical plan is a single mapInArrow over the
     left side with ZERO exchanges, vs the previous per-row-id window
     that shuffled the whole joined output."""
-    return broadcast_nearest_all(left, right, left_geom=left_geom,
-                                 right_geom=right_geom, right_id=right_id,
-                                 max_distance=max_distance, _single=True)
+    side = SJ._BroadcastSide.collect(right, "nearest", right_id, right_geom)
+    return SJ._run_broadcast(left, side, _nearest_op(max_distance, True),
+                             right_id=right_id, geom=left_geom, with_distance=True)
 
 
 # ---------------------------------------------------------------------------
@@ -437,7 +312,6 @@ def cell_nearest_all(left: DataFrame, right: DataFrame, *,
        ring limit is exact.  Ties are exact float equality (replacing
        the reference's 1e-6 distance inflation, src/strtree.c:654-695).
     """
-    from .join import BROADCAST_RIGHT_LIMIT, _collect_right
     h = 180.0 / (1 << res)  # cell height (deg); width is 2h
     if max_distance is not None:
         # a right within max_distance is within ceil(max_distance/h) rings
@@ -464,8 +338,8 @@ def cell_nearest_all(left: DataFrame, right: DataFrame, *,
         reps = (r.groupBy(SG.st_cell_parent("_cell", rres).alias("_c"))
                 .agg(F.min(F.struct("_rx", "_ry")).alias("_p")))
         try:
-            rows = _collect_right(reps, ["_c", "_p._rx", "_p._ry"],
-                                  BROADCAST_RIGHT_LIMIT, "cell_nearest_all")
+            rows = SJ._collect_right(reps, ["_c", "_p._rx", "_p._ry"],
+                                     SJ.BROADCAST_RIGHT_LIMIT, "cell_nearest_all")
             break
         except ValueError:
             if rres == 0:

@@ -53,7 +53,7 @@ def stream_region_counts(pages_stream: DataFrame, layer: DataFrame,
                          res: int = 7, window: str = "10 minutes",
                          watermark: str = "30 minutes") -> DataFrame:
     """Streaming spatial join: the broadcast-STRtree probe works
-    unchanged on a stream (mapInPandas is stream-capable), then
+    unchanged on a stream (mapInArrow is stream-capable), then
     event-time windowed per-region counts."""
     from . import join as SJ
     pts = PL.geocode(pages_stream).where(F.col("lon").isNotNull())

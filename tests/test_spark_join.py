@@ -552,3 +552,109 @@ def test_nearest_all_lonlat_validates_right_coords(spark):
     with pytest.raises(ValueError, match="exceeds 0 rows"):
         SK.nearest_all_lonlat(left, right, right_id="right_id", keep=["left_id"],
                               right_lon="lon", right_lat="lat", max_right_rows=0)
+
+
+def _parity_fixture(spark):
+    """Left points with NULL lon/lat rows and a NULL string column, some
+    on right points, polygon edges and vertices; right points (given as
+    WKB and as lon/lat) with a duplicate for ties, and a polygon layer."""
+    lrows = [(0, "a", 1.0, 1.0), (1, None, 2.0, 2.0), (2, "c", 3.0, 1.5),
+             (3, "d", None, 1.0), (4, None, 1.0, None), (5, "f", 5.0, 5.0),
+             (6, "g", 4.0, 2.0), (7, "h", 0.5, 3.5), (8, None, None, None),
+             (9, "j", 2.0, 0.0)]
+    left = spark.createDataFrame(
+        [(i, t, x, y, None if x is None or y is None else K_wkb.dumps(Geom.point(x, y)))
+         for i, t, x, y in lrows],
+        "left_id long, tag string, lon double, lat double, geom binary")
+    prow = [(10, 1.0, 1.0), (11, 2.0, 2.0), (12, 2.0, 2.0), (13, 4.5, 2.5),
+            (14, 0.0, 4.0), (15, None, 3.0)]
+    points = spark.createDataFrame(
+        [(i, x, y, None if x is None else K_wkb.dumps(Geom.point(x, y)))
+         for i, x, y in prow], "right_id long, lon double, lat double, geom binary")
+    polys = spark.createDataFrame(
+        [(20, K_wkb.dumps(Geom.box(0, 0, 3, 3))),
+         (21, K_wkb.dumps(Geom.polygon([(2, 0), (4, 2), (2, 2), (2, 0)]))),
+         (22, K_wkb.dumps(Geom.linestring([(0, 3.5), (1, 3.5)])))],
+        "right_id long, geom binary")
+    return left, points, polys
+
+
+def test_broadcast_apis_parity(spark):
+    """The WKB and lon/lat forms of every broadcast join and kNN give
+    the same rows (keep columns included) on points-as-WKB,
+    points-as-lon/lat and polygon right sides — in particular coincident
+    points under contains/covers, which the lon/lat probe used to miss."""
+    left, points, polys = _parity_fixture(spark)
+    wleft = left.select("left_id", "tag", "geom")
+    keep = ["left_id", "tag"]
+
+    def rows(df, cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    jcols = ["left_id", "tag", "right_id"]
+    for pred, dist in [("intersects", None), ("within", None), ("covered_by", None),
+                       ("dwithin", 1.2), ("touches", None), ("contains", None),
+                       ("covers", None)]:
+        for right, as_lonlat in ((points, True), (polys, False)):
+            want = rows(SJ.broadcast_spatial_join(wleft, right, predicate=pred,
+                                                  distance=dist), jcols)
+            got = rows(SJ.broadcast_lonlat_join(left, right, predicate=pred,
+                                                distance=dist, keep=keep), jcols)
+            assert got == want, (pred, as_lonlat)
+            if as_lonlat:
+                got = rows(SJ.broadcast_lonlat_join(left, right, predicate=pred,
+                                                    distance=dist, keep=keep,
+                                                    right_lon="lon", right_lat="lat"),
+                           jcols)
+                assert got == want, (pred, "right lon/lat")
+            if pred in ("contains", "covers") and as_lonlat:
+                assert want == [(0, "a", 10), (1, None, 11), (1, None, 12)], pred
+                cell = SJ.cell_spatial_join(wleft, right.where("geom IS NOT NULL"),
+                                            predicate=pred, res=4, left_is_points=True)
+                assert _pairs(cell) == [(r[0], r[2]) for r in want], pred
+    kcols = jcols + ["distance"]
+    for right, as_lonlat in ((points, True), (polys, False)):
+        extra = [dict(right_lon="lon", right_lat="lat")] if as_lonlat else []
+        want = rows(SK.broadcast_nearest_all(wleft, right), kcols)
+        assert {r[0] for r in want} == {0, 1, 2, 5, 6, 7, 9}
+        for kw in [{}] + extra:
+            assert rows(SK.nearest_all_lonlat(left, right, keep=keep, **kw), kcols) == want
+        want = rows(SK.nearest(wleft, right), kcols)
+        assert len(want) == 7
+        for kw in [{}] + extra:
+            assert rows(SK.nearest_lonlat(left, right, keep=keep, **kw), kcols) == want
+
+
+def test_broadcast_apis_one_arrow_crossing(spark):
+    """Each broadcast API plans as exactly one mapInArrow node over the
+    left side: no mapInPandas and no row-wise Python UDF node."""
+    import re
+    left, points, _ = _parity_fixture(spark)
+    wleft = left.select("left_id", "tag", "geom")
+    for df in (SJ.broadcast_spatial_join(wleft, points),
+               SJ.broadcast_lonlat_join(left, points, keep=["left_id"], cell_res=5),
+               SK.broadcast_nearest_all(wleft, points),
+               SK.nearest_all_lonlat(left, points, keep=["left_id"]),
+               SK.nearest_lonlat(left, points, right_lon="lon", right_lat="lat"),
+               SK.nearest(wleft, points)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"\b(PythonMapInArrow|MapInArrow)\b", plan)) == 1, plan
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, plan
+
+
+def test_broadcast_join_validates_on_driver(spark):
+    """dwithin without a distance, an unknown predicate and an unknown
+    strategy raise ValueError when the join is built, not in a worker."""
+    left, points, _ = _parity_fixture(spark)
+    wleft = left.select("left_id", "geom")
+    for call in (
+            lambda: SJ.broadcast_spatial_join(wleft, points, predicate="dwithin"),
+            lambda: SJ.broadcast_lonlat_join(left, points, predicate="dwithin"),
+            lambda: SJ.spatial_join(wleft, points, predicate="dwithin",
+                                    strategy="broadcast"),
+            lambda: SJ.broadcast_lonlat_join(left, points, predicate="nearby")):
+        with pytest.raises(ValueError, match="distance parameter|unknown predicate"):
+            call()
+    with pytest.raises(ValueError, match="unknown strategy"):
+        SJ.spatial_join(wleft, points, strategy="Broadcast")
