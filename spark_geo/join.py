@@ -17,11 +17,13 @@ probe geometry prepared once):
    candidate polygon over all its candidate points (the per-batch
    "prepare once" of reference src/strtree.c:286).
 
-2. **cell equi-join** (large ✕ large): both sides keyed by quad-grid
-   cells (points: 1 cell; polygons: exploded cover), Catalyst
-   sort-merge/broadcast equi-join on cell, exact refine, pair dedup.
-   AQE handles runtime skew; pipeline.salt_hot_cells handles
-   persistent hot cells explicitly (north_rule).
+2. **cell equi-join** (large ✕ large): one ``mapInArrow`` per side
+   keys its rows by quad-grid cells (points: 1 cell; geometries: their
+   cover), Catalyst sort-merge/broadcast equi-joins on cell, and one
+   grouped ``mapInArrow`` refines the candidates, each right geometry
+   decoded once per group.  AQE handles runtime skew;
+   pipeline.salt_hot_cells handles persistent hot cells explicitly
+   (north_rule).
 
 At 100 TB scale: strategy 1 is the right plan whenever the polygon
 layer fits in executor memory (admin boundaries, tile grids — the
@@ -31,8 +33,9 @@ Strategy 2 is the fallback for billion-polygon right sides.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
@@ -162,16 +165,11 @@ class _BroadcastSide:
             else:  # vertex coincidence, like point_predicate_mask
                 keep = (d <= 1e-12) & (predicate in _COINCIDE)
             return cl[keep], pos[cr[keep]]
-        order = np.argsort(cr, kind="stable")
-        cl, cr = cl[order], cr[order]
-        uniq, starts = np.unique(cr, return_index=True)
-        ends = np.append(starts[1:], len(cr))
-        keep = np.zeros(len(cl), dtype=bool)
-        for u, s, e in zip(uniq, starts, ends):
-            g = self.tree._geoms[pos[u]]
-            keep[s:e] = point_predicate_mask(g, xs[cl[s:e]], ys[cl[s:e]],
-                                             predicate, distance)
-        return cl[keep], pos[cr[keep]]
+        geoms = self.tree._geoms
+        rows, keep = _point_refine_rows(cr, lambda i: geoms[pos[cr[i]]], xs[cl], ys[cl],
+                                        predicate, distance)
+        rows = rows[keep]
+        return cl[rows], pos[cr[rows]]
 
 
 class _Probe:
@@ -359,8 +357,283 @@ def broadcast_lonlat_join(left: DataFrame, right: DataFrame, *,
 
 
 # ---------------------------------------------------------------------------
-# two-phase cell equi-join
+# the cell plans: one Arrow runner per side, one grouped-refine runner
 # ---------------------------------------------------------------------------
+
+class _Seeds(NamedTuple):
+    """One side batch of ``n`` WKB rows, decoded once: probe vertices
+    (prow, px, py) and seed cells (srow, seeds), both ordered by row.
+    A point is its own probe and seed; a geometry probes with every
+    vertex and seeds every cell of its cover at the join resolution.
+    Rows with no finite position (NULL, empty, malformed, NaN/inf
+    coordinates) get neither."""
+    n: int
+    prow: np.ndarray
+    px: np.ndarray
+    py: np.ndarray
+    srow: np.ndarray
+    seeds: np.ndarray
+
+    def xy(self, rows):
+        """Probe coordinates of ``rows`` (points sides: one per row)."""
+        x, y = np.full(self.n, np.nan), np.full(self.n, np.nan)
+        x[self.prow], y[self.prow] = self.px, self.py
+        return x[rows], y[rows]
+
+
+def _decode_seeds(raw, res: int, points: bool) -> _Seeds:
+    if points:
+        xs, ys = K_wkb.decode_points(raw)
+        rows = np.flatnonzero(np.isfinite(xs) & np.isfinite(ys))
+        return _Seeds(len(raw), rows, xs[rows], ys[rows], rows,
+                      K_cell.cell_of(xs[rows], ys[rows], res))
+    prow, pts, srow, seeds = [], [], [], []
+    for i, v in enumerate(raw):
+        g = SG._loads_safe(v)
+        c = None if g is None or g.is_empty else g.all_coords()
+        if c is None or not len(c) or not np.isfinite(c).all():
+            continue
+        cov = K_cell.cover_to_res(K_cell.cover(g, res), res)
+        prow.append(np.full(len(c), i, np.int64))
+        pts.append(c)
+        srow.append(np.full(len(cov), i, np.int64))
+        seeds.append(cov)
+    if not prow:
+        e = np.empty(0, np.int64)
+        return _Seeds(len(raw), e, np.empty(0), np.empty(0), e, e)
+    pts = np.concatenate(pts)
+    return _Seeds(len(raw), np.concatenate(prow), pts[:, 0], pts[:, 1],
+                  np.concatenate(srow), np.concatenate(seeds))
+
+
+def _disk_cells(srow, seeds, ks, res: int):
+    """Every cell within ``ks[i]`` Chebyshev cells of ``seeds[i]``, as
+    (row, cell, ring) with one entry per (row, cell) and ring the
+    wrapped Chebyshev distance to the row's nearest seed.  Seeds with
+    the same radius expand together, chunked so rows ✕ stencil stays
+    bounded (one far seed must not allocate a huge matrix for all
+    rows)."""
+    n = 1 << res
+    sel_parts, cell_parts = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for k in np.unique(ks):
+        sel = np.nonzero(ks == k)[0]
+        step = max(1, (1 << 22) // (2 * int(k) + 1) ** 2)
+        for s in range(0, len(sel), step):
+            part = sel[s:s + step]
+            cells, valid = K_cell.k_ring_batch(seeds[part], int(k))
+            i, j = np.nonzero(valid)
+            sel_parts.append(part[i])
+            cell_parts.append(cells[i, j])
+    si, cells = np.concatenate(sel_parts), np.concatenate(cell_parts)
+    ax, ay = K_cell.cell_ixy(seeds[si])
+    bx, by = K_cell.cell_ixy(cells)
+    dx = np.abs(ax - bx)
+    ring = np.maximum(np.minimum(dx, n - dx), np.abs(ay - by))
+    row = srow[si]
+    order = np.lexsort((ring, cells, row))
+    row, cells, ring = row[order], cells[order], ring[order]
+    first = np.ones(len(row), bool)
+    first[1:] = (row[1:] != row[:-1]) | (cells[1:] != cells[:-1])
+    return row[first], cells[first], ring[first]
+
+
+def _run_side(df: DataFrame, id_col, geom_col, name, fields, expand, *,
+              res: int, points: bool, carry_geom: bool = False) -> DataFrame:
+    """One ``mapInArrow`` over one side of a cell plan.  Each Arrow
+    batch of (``id_col``, WKB ``geom_col``) is decoded once
+    (``_decode_seeds``: ``decode_points`` -> ``cell_of`` for a points
+    side, ``cover`` -> ``cover_to_res`` for a geometry side), and
+    ``expand(seeds)`` -> (rows, arrays) gives the input row of every
+    output row and its computed ``fields``.  The id (as ``name``) and,
+    with ``carry_geom``, the WKB (as ``_rgeom``) are gathered with
+    Arrow ``take``."""
+    src = df.select(id_col, geom_col)
+    out = [T.StructField(name, src.schema[0].dataType), *fields]
+    if carry_geom:
+        out.append(T.StructField("_rgeom", T.BinaryType()))
+    schema = T.StructType(out)
+
+    def run(batches):
+        import pyarrow as pa
+        for b in batches:
+            geom = b.column(1)
+            rows, arrays = expand(_decode_seeds(
+                geom.to_numpy(zero_copy_only=False), res, points))
+            take = pa.array(rows, type=pa.int64())
+            cols = [b.column(0).take(take), *(pa.array(a) for a in arrays)]
+            if carry_geom:
+                cols.append(geom.take(take))
+            yield pa.RecordBatch.from_arrays(cols, names=schema.fieldNames())
+
+    return src.mapInArrow(run, schema=schema)
+
+
+_CELL = T.StructField("_cell", T.LongType(), False)
+_LXY = [T.StructField("_lx", T.DoubleType(), False),
+        T.StructField("_ly", T.DoubleType(), False)]
+
+
+def _join_cells(res: int, k: int | None, xy: bool):
+    """Side rows of the cell join: one per (row, seed cell), or with
+    ``k`` one per distinct cell within k rings of a seed; ``xy`` adds
+    the point coordinates."""
+    def expand(s: _Seeds):
+        row, cells = s.srow, s.seeds
+        if k is not None:
+            row, cells, _ = _disk_cells(row, cells, np.full(len(cells), k), res)
+        return row, [*s.xy(row), cells] if xy else [cells]
+    return expand
+
+
+def _codes(col):
+    """Arrow column -> int codes, equal for equal values, -1 for NULL."""
+    return col.dictionary_encode().indices.fill_null(-1).to_numpy()
+
+
+def _per_geometry(keys, geom_at, fn, fill):
+    """Group the candidate rows with a non-negative key by key (stable
+    sort) and run ``fn(rows, g)`` once per group, ``g = geom_at(first
+    row)`` fetched or decoded once per group; a group whose geometry is
+    None or empty gets ``fill``.  -> (rows in group order, one value
+    per row of it)."""
+    order = np.argsort(keys, kind="stable")
+    order = order[keys[order] >= 0]
+    k = keys[order]
+    out = np.full(len(order), fill)
+    cut = np.flatnonzero(k[1:] != k[:-1]) + 1
+    for s, e in zip(np.r_[0, cut], np.r_[cut, len(k)]) if len(k) else ():
+        rows = order[s:e]
+        g = geom_at(rows[0])
+        if g is not None and not g.is_empty:
+            out[s:e] = fn(rows, g)
+    return order, out
+
+
+def _point_refine_rows(keys, geom_at, px, py, predicate, distance):
+    """The per-geometry point refine of the broadcast probe and the
+    cell join: one ``point_predicate_mask`` call per candidate geometry
+    over all its candidate points -> (rows in group order, keep mask)."""
+    return _per_geometry(keys, geom_at, lambda rows, g: point_predicate_mask(
+        g, px[rows], py[rows], predicate, distance), False)
+
+
+def _run_refine(cand: DataFrame, op, keep=("_lid", "_rid"),
+                with_distance: bool = False) -> DataFrame:
+    """One ``mapInArrow`` over candidate rows carrying the right WKB
+    ``_rgeom``.  Per Arrow batch, ``op(batch, right codes)`` gives the
+    rows grouped by right (a NULL ``_rid`` dropped) and each one's keep
+    mask, or its distance (NaN: dropped) ``with_distance``.  The
+    ``keep`` columns of the kept rows are gathered with Arrow ``take``
+    [+ ``_d``]."""
+    fields = [cand.schema[c] for c in keep]
+    if with_distance:
+        fields.append(T.StructField("_d", T.DoubleType(), False))
+    schema = T.StructType(fields)
+
+    def run(batches):
+        import pyarrow as pa
+        for b in batches:
+            rows, v = op(b, _codes(b.column("_rid")))
+            ok = ~np.isnan(v) if with_distance else v
+            take = pa.array(rows[ok], type=pa.int64())
+            cols = [b.column(c).take(take) for c in keep]
+            if with_distance:
+                cols.append(pa.array(v[ok], type=pa.float64()))
+            yield pa.RecordBatch.from_arrays(cols, names=schema.fieldNames())
+
+    return cand.mapInArrow(run, schema=schema)
+
+
+def _col(b, name):
+    return b.column(name).to_numpy(zero_copy_only=False)
+
+
+def _right_at(b):
+    """Decode the right WKB of one candidate row (once per group)."""
+    raw = _col(b, "_rgeom")
+    return lambda i: SG._loads_safe(raw[i])
+
+
+def _point_refine(predicate, distance):
+    """Refine op for point lefts carried as ``_lx``/``_ly``; a NULL
+    ``_lid`` is kept, as in the broadcast join."""
+    def op(b, rkeys):
+        return _point_refine_rows(rkeys, _right_at(b), _col(b, "_lx"),
+                                  _col(b, "_ly"), predicate, distance)
+    return op
+
+
+def _prepared_lefts(b, rkeys):
+    """Each distinct ``_lid``'s ``_lgeom`` decoded and prepared once per
+    batch (``prepare_batch_lefts``) -> (left code per row, prep, group
+    keys with -1 where ``_lid`` is NULL)."""
+    codes = _codes(b.column("_lid"))
+    seen, first = np.unique(codes, return_index=True)
+    lraw = _col(b, "_lgeom")
+    prep = K_p.prepare_batch_lefts([SG._loads_safe(lraw[i])
+                                    for i in first[seen >= 0]])
+    return codes, prep, np.where(codes < 0, -1, rkeys)
+
+
+def _geoms_refine(predicate, distance, pattern=None):
+    """Refine op for general left geometries ``_lgeom``.
+
+    Candidates pass a vectorized bbox prefilter, then go through the
+    many-vs-one batch kernel (kernel.predicates.batch_predicate_one —
+    owner-block vectorized, no per-pair Python); predicates without a
+    batch path fall back to the exact scalar kernels over the bbox
+    survivors only.  ``relate_pattern`` gates on the vectorized
+    intersects pass (sound because join patterns must require
+    intersection, _check_join_pattern) and computes the exact DE-9IM
+    matrix only for intersecting pairs."""
+    if predicate == "relate_pattern":
+        from .kernel import relate as K_rel
+        fn = lambda a, g: K_rel.relate_pattern(a, g, pattern)  # noqa: E731
+    elif predicate == "dwithin":
+        fn = lambda a, g: K_p.dwithin(a, g, distance)  # noqa: E731
+    else:
+        fn = PREDICATES[predicate]
+    pad = float(distance) if predicate == "dwithin" else 0.0
+
+    def op(b, rkeys):
+        codes, prep, keys = _prepared_lefts(b, rkeys)
+        lb, lgeoms = prep["bounds"], prep["geoms"]
+
+        def group(rows, g):
+            out = np.zeros(len(rows), dtype=bool)
+            gb = g.bounds()
+            if np.isnan(gb[0]):
+                return out
+            gc = codes[rows]
+            box = lb[gc]
+            alive = ~(np.isnan(box[:, 0])
+                      | (box[:, 2] + pad < gb[0]) | (gb[2] + pad < box[:, 0])
+                      | (box[:, 3] + pad < gb[1]) | (gb[3] + pad < box[:, 1]))
+            if not alive.any():
+                return out
+            sel = gc[alive]
+            gate = "intersects" if predicate == "relate_pattern" else predicate
+            mask = K_p.batch_predicate_one(prep, sel, g, gate, distance)
+            if mask is None or predicate == "relate_pattern":
+                scalar = np.arange(len(sel)) if mask is None else np.flatnonzero(mask)
+                mask = np.zeros(len(sel), dtype=bool)
+                for i in scalar:
+                    a = lgeoms[sel[i]]
+                    mask[i] = a is not None and not a.is_empty and fn(a, g)
+            out[alive] = mask
+            return out
+
+        return _per_geometry(keys, _right_at(b), group, False)
+    return op
+
+
+def _distance_refine(b, rkeys):
+    """Refine op for the general kNN: exact left-right distance through
+    the vectorized ``batch_distance_one``."""
+    codes, prep, keys = _prepared_lefts(b, rkeys)
+    return _per_geometry(keys, _right_at(b), lambda rows, g:
+                         K_p.batch_distance_one(prep, codes[rows], g), np.nan)
+
 
 def cell_spatial_join(left: DataFrame, right: DataFrame, *,
                       predicate: str = "intersects",
@@ -370,7 +643,7 @@ def cell_spatial_join(left: DataFrame, right: DataFrame, *,
                       left_is_points: bool = False,
                       pattern: str | None = None) -> DataFrame:
     """Large✕large spatial join: coarse cell equi-join (Catalyst
-    sort-merge; AQE skew split) + exact refine + pair dedup.
+    sort-merge; AQE skew split) + exact refine.
 
     ``distance`` (dwithin) expands the left cells by k rings with
     k = ceil(d / cell_height) — the cell-grid analogue of the
@@ -387,21 +660,31 @@ def cell_spatial_join(left: DataFrame, right: DataFrame, *,
     only on its survivors, so the scalar work is linear in the number
     of INTERSECTING pairs, not the candidate count.
 
-    The candidate shuffle carries ONLY ids (+16 B of lon/lat doubles on
-    the point path) — never WKB; geometries are equi-joined back by id
-    after the candidate stage, and the refine decodes each right
-    geometry ONCE per group (the broadcast path's per-geometry
-    "prepare" trick) instead of re-parsing WKB per candidate pair.
-    Pair dedup runs on the id-only frame (and, for exploded covers,
-    again after the selective refine), so no full-width exchange ever
-    happens.
+    Plan: one ``mapInArrow`` per side decodes each WKB once and emits
+    its cell rows (``_run_side``), Catalyst equi-joins them on cell, and
+    one grouped ``mapInArrow`` refine decodes each right geometry once
+    per group (the broadcast path's per-geometry "prepare") instead of
+    once per candidate pair (``_run_refine``).  The predicate is
+    validated on the driver.
 
-    ``left_is_points=True`` is an opt-in fast path (single-cell
-    assignment, 16 B lon/lat carried through the candidate shuffle,
-    vectorized point refine) that is only correct when EVERY left
-    geometry is a point — the general default handles any geometry
-    (a polygon left under the point path would silently yield NaN
-    coordinates and drop rows, so correctness must be the default)."""
+    ``left_is_points=True`` (every left geometry a point) is the
+    2-exchange plan: the right's cover rows carry its WKB ``_rgeom``,
+    so the equi-join feeds the refine directly, with 16 B of lon/lat
+    doubles per left row.  Cost model: the right's shuffle carries the
+    WKB once per cover cell instead of once per geometry, while an id
+    join-back would shuffle the candidate ids once more and the WKB
+    once per geometry.  Both plans send one WKB per candidate row into
+    Python, so the extra bytes are those of cover cells with no
+    candidate — small when the left points are dense where the right
+    geometries are, and up to (cover cells / geometry) ✕ the WKB when
+    they are sparse.  dwithin candidates repeat once per shared ring
+    cell, so its hits are deduplicated after the refine.
+
+    The general default handles any geometry (a polygon left under the
+    point path has no point coordinates and drops out, so correctness
+    must be the default).  Its candidate shuffle carries ONLY ids: the
+    (_lid, _rid) pairs are deduplicated, then both geometries are
+    equi-joined back by id for the refine."""
     if predicate == "relate_pattern":
         if left_is_points:
             raise ValueError("relate_pattern uses the general-geometry "
@@ -409,69 +692,33 @@ def cell_spatial_join(left: DataFrame, right: DataFrame, *,
         _check_join_pattern(pattern)
     elif pattern is not None:
         raise ValueError("pattern is only valid with predicate='relate_pattern'")
-    id_fields = [T.StructField("_lid", left.schema[left_id].dataType),
-                 T.StructField("_rid", right.schema[right_id].dataType)]
-    rg = right.select(F.col(right_id).alias("_rid"),
-                      F.col(right_geom).alias("_rgeom"))
-    r = right.select(F.col(right_id).alias("_rid"),
-                     F.explode(SG.st_cell_cover(right[right_geom], res)).alias("_cell"))
-
-    if left_is_points:
-        if distance is None:
-            # points have exactly one cell: no array, no explode — one UDF
-            l = left.select(F.col(left_id).alias("_lid"),
-                            SG.st_x(left[left_geom]).alias("_lx"),
-                            SG.st_y(left[left_geom]).alias("_ly"),
-                            SG.st_cell(left[left_geom], res).alias("_cell"))
-        else:
-            l = left.select(F.col(left_id).alias("_lid"),
-                            SG.st_x(left[left_geom]).alias("_lx"),
-                            SG.st_y(left[left_geom]).alias("_ly"),
-                            F.explode(_left_cells(left[left_geom], res, distance,
-                                                  True)).alias("_cell"))
-        cand = l.join(r, "_cell").select("_lid", "_rid", "_lx", "_ly")
-        if distance is not None:
-            cand = cand.dropDuplicates(["_lid", "_rid"])
-        joined = cand.join(rg, "_rid")
-        refine = _cell_refine_points(predicate, distance,
-                                     T.StructType(id_fields))
-        out = joined.mapInPandas(refine, schema=T.StructType(id_fields))
     else:
-        lcell = F.explode(_left_cells(left[left_geom], res, distance,
-                                      False)).alias("_cell")
-        l = left.select(F.col(left_id).alias("_lid"), lcell)
-        cand = (l.join(r, "_cell").select("_lid", "_rid")
-                .dropDuplicates(["_lid", "_rid"]))
+        _BroadcastSide.check_predicate(predicate, distance)
+    k = int(np.ceil(distance / (180.0 / (1 << res)))) \
+        if predicate == "dwithin" else None
+    r = _run_side(right, right_id, right_geom, "_rid", [_CELL],
+                  _join_cells(res, None, False), res=res, points=False,
+                  carry_geom=left_is_points)
+    l = _run_side(left, left_id, left_geom, "_lid",
+                  [*_LXY, _CELL] if left_is_points else [_CELL],
+                  _join_cells(res, k, left_is_points), res=res,
+                  points=left_is_points)
+    cand = l.join(r, "_cell")
+    if left_is_points:
+        out = _run_refine(cand.select("_lid", "_lx", "_ly", "_rid", "_rgeom"),
+                          _point_refine(predicate, distance))
+        if k is not None:
+            out = out.dropDuplicates(["_lid", "_rid"])
+    else:
+        cand = cand.select("_lid", "_rid").dropDuplicates(["_lid", "_rid"])
         lg = left.select(F.col(left_id).alias("_lid"),
                          F.col(left_geom).alias("_lgeom"))
-        joined = cand.join(rg, "_rid").join(lg, "_lid")
-        refine = _cell_refine_geoms(predicate, distance,
-                                    T.StructType(id_fields), pattern)
-        out = joined.mapInPandas(refine, schema=T.StructType(id_fields))
+        rg = right.select(F.col(right_id).alias("_rid"),
+                          F.col(right_geom).alias("_rgeom"))
+        out = _run_refine(cand.join(rg, "_rid").join(lg, "_lid"),
+                          _geoms_refine(predicate, distance, pattern))
     return out.select(F.col("_lid").alias(left_id),
                       F.col("_rid").alias(right_id))
-
-
-def _cell_refine_points(predicate, distance, schema):
-    """Grouped refine for point✕geometry candidates: decode each right
-    geometry once per batch group, one vectorized kernel call over all
-    its candidate points."""
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            px = pdf["_lx"].to_numpy(dtype=np.float64)
-            py = pdf["_ly"].to_numpy(dtype=np.float64)
-            raw = pdf["_rgeom"].to_numpy()
-            keep = np.zeros(len(pdf), dtype=bool)
-            for _rid, idx in pdf.groupby("_rid", sort=False).indices.items():
-                g = SG._loads_safe(raw[idx[0]])
-                if g is None or g.is_empty:
-                    continue
-                keep[idx] = point_predicate_mask(g, px[idx], py[idx],
-                                                 predicate, distance)
-            yield pdf.loc[keep, ["_lid", "_rid"]]
-    return run
 
 
 _PATTERN_INTERSECTION_SLOTS = (0, 1, 3, 4)  # II, IB, BI, BB
@@ -491,133 +738,6 @@ def _check_join_pattern(pattern):
             "intersect (all of II/IB/BI/BB are F or *); such a join is "
             "satisfiable by arbitrarily distant pairs and cannot be "
             "answered by cell-overlap candidate generation")
-
-
-def _cell_refine_geoms(predicate, distance, schema, pattern=None):
-    """Grouped refine for general geometry candidates.
-
-    Each DISTINCT left geometry is decoded + prepared (vertex/segment
-    stacks) once per Arrow batch; each right geometry once per group.
-    Candidates pass a vectorized bbox prefilter, then `intersects` /
-    `dwithin` go through the many-vs-one batch kernel
-    (kernel.predicates.batch_predicate_one — owner-block vectorized, no
-    per-pair Python); other predicates fall back to the exact scalar
-    kernels over the bbox survivors only.  ``relate_pattern`` gates on
-    the vectorized intersects pass (sound because join patterns must
-    require intersection, _check_join_pattern) and computes the exact
-    DE-9IM matrix only for intersecting pairs."""
-    if predicate == "relate_pattern":
-        from .kernel import relate as K_rel
-        fn = lambda a, g: K_rel.relate_pattern(a, g, pattern)  # noqa: E731
-    else:
-        fn = K_p.dwithin if predicate == "dwithin" else PREDICATES[predicate]
-    pad = float(distance) if predicate == "dwithin" else 0.0
-
-    def run(batches):
-        for pdf in batches:
-            # null _lid would factorize to code -1 and corrupt the
-            # first[]-gather below (ADVICE r3) — such rows can never
-            # satisfy a predicate anyway, drop them up front
-            pdf = pdf[pdf["_lid"].notna()]
-            if not len(pdf):
-                continue
-            pdf = pdf.reset_index(drop=True)
-            rraw = pdf["_rgeom"].to_numpy()
-            lraw = pdf["_lgeom"].to_numpy()
-            codes, uniq_rows = pd.factorize(pdf["_lid"].to_numpy())
-            first = np.zeros(len(uniq_rows), dtype=np.int64)
-            seen, fidx = np.unique(codes, return_index=True)
-            first[seen] = fidx
-            lgeoms = [SG._loads_safe(lraw[i]) for i in first]
-            prep = K_p.prepare_batch_lefts(lgeoms)
-            lb = prep["bounds"]
-            keep = np.zeros(len(pdf), dtype=bool)
-            for _rid, idx in pdf.groupby("_rid", sort=False).indices.items():
-                g = SG._loads_safe(rraw[idx[0]])
-                if g is None or g.is_empty:
-                    continue
-                gc = codes[idx]
-                gb = g.bounds()
-                if np.isnan(gb[0]):
-                    continue
-                b = lb[gc]
-                alive = ~(np.isnan(b[:, 0])
-                          | (b[:, 2] + pad < gb[0]) | (gb[2] + pad < b[:, 0])
-                          | (b[:, 3] + pad < gb[1]) | (gb[3] + pad < b[:, 1]))
-                if not alive.any():
-                    continue
-                sel = gc[alive]
-                if predicate == "relate_pattern":
-                    # batch intersects gate: a join pattern requires
-                    # intersection, so only survivors can match
-                    hits = K_p.batch_predicate_one(prep, sel, g,
-                                                   "intersects")
-                    mask = np.zeros(len(sel), dtype=bool)
-                    for i in np.nonzero(hits)[0]:
-                        a = lgeoms[sel[i]]
-                        if a is not None and not a.is_empty:
-                            mask[i] = fn(a, g)
-                else:
-                    mask = K_p.batch_predicate_one(prep, sel, g, predicate,
-                                                   distance)
-                rows = idx[alive]
-                if mask is not None:
-                    keep[rows] = mask
-                else:
-                    for j, c in zip(rows, sel):
-                        a = lgeoms[c]
-                        if a is None or a.is_empty:
-                            continue
-                        keep[j] = fn(a, g, distance) \
-                            if predicate == "dwithin" else fn(a, g)
-            yield pdf.loc[keep, ["_lid", "_rid"]]
-    return run
-
-
-def _left_cells(geom_col, res, distance, is_points):
-    if distance is None:
-        if is_points:
-            return F.array(SG.st_cell(geom_col, res))
-        return SG.st_cell_cover(geom_col, res)
-    # dwithin: expand by k rings
-    h = 180.0 / (1 << res)
-    k = int(np.ceil(distance / h))
-
-    import pandas as pd  # noqa: F811
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _expand(b: pd.Series) -> pd.Series:
-        # per-geometry cover (decode is inherently per-row), then ONE
-        # batch-vectorized k-ring over the flattened cover cells (r4 —
-        # no per-cell Python k_ring loop)
-        covers, rows = [], []
-        out: list = [None] * len(b)
-        for i, v in enumerate(b):
-            g = SG._loads_safe(v) if v is not None else None
-            if g is None:
-                continue
-            base = K_cell.cover_to_res(K_cell.cover(g, res), res)
-            if len(base):
-                covers.append(np.asarray(base, np.int64))
-                rows.append(np.full(len(base), i, np.int64))
-        if covers:
-            flat = np.concatenate(covers)
-            rix = np.concatenate(rows)
-            ring, valid = K_cell.k_ring_batch(flat, k)
-            counts = np.bincount(rix, minlength=len(b)) * ring.shape[1]
-            ring_rows = np.repeat(rix, ring.shape[1])
-            order = np.argsort(ring_rows, kind="stable")
-            rflat = ring.ravel()[order]
-            vflat = valid.ravel()[order]
-            bounds = np.cumsum(counts)[:-1]
-            for i, (rs, vs) in enumerate(zip(np.split(rflat, bounds),
-                                             np.split(vflat, bounds))):
-                if len(rs):
-                    out[i] = np.unique(rs[vs])
-        return pd.Series(out, dtype=object)
-
-    return _expand(geom_col)
 
 
 def spatial_join(left: DataFrame, right: DataFrame, *,

@@ -23,12 +23,11 @@ Physical plans:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import types as T
 
 from .kernel import cell as K_cell
 from .kernel import grid as K_grid
-from .kernel import wkb as K_wkb
 from . import functions as SG
 from . import join as SJ
 
@@ -293,43 +292,41 @@ def cell_nearest_all(left: DataFrame, right: DataFrame, *,
 
     One driver collect, no caches:
 
-    1. One right crossing decodes (_rid, _rx, _ry, _cell) rows: one per
-       point, or one per ``st_cell_cover`` cell of a geometry carrying
-       its first vertex.  One representative real right point per
-       occupied cell is collected under the broadcast cap (at a coarser
-       parent resolution if the cap is hit) and broadcast.
-    2. One left crossing drops rows with no occupied cell within
-       ``max_rings``, bounds each row's minimum by d_ub, the distance
-       to the nearest representative, and emits the cell disk of radius
-       ceil(min(d_ub, max_distance)/h) around the row's cell (points)
-       or every cover cell (geometries).  Geometries within d have
-       points within d whose cells are within ceil(d/h) of each other,
-       so the disk holds every right row at the minimum.
+    1. One right ``mapInArrow`` (join._run_side) decodes each WKB once
+       into (_rid, _rx, _ry, _cell) rows: one per point, or one per
+       cover cell of a geometry carrying its first vertex.  One
+       representative real right point per occupied cell is collected
+       under the broadcast cap (at a coarser parent resolution if the
+       cap is hit) and broadcast.
+    2. One left ``mapInArrow`` (the same runner) drops rows with no
+       occupied cell within ``max_rings``, bounds each row's minimum by
+       d_ub, the distance to the nearest representative, and emits the
+       cell disk of radius ceil(min(d_ub, max_distance)/h) around the
+       row's cell (points) or every cover cell (geometries).
+       Geometries within d have points within d whose cells are within
+       ceil(d/h) of each other, so the disk holds every right row at
+       the minimum.
     3. One equi-join on cell feeds the distance: Catalyst ``hypot`` for
-       points (``assume_points=True``), else an id-only pair shuffle, a
-       geometry equi-join and the grouped batch distance kernel.  Each
-       pair keeps the Chebyshev ring of its closest cell pair, so the
-       ring limit is exact.  Ties are exact float equality (replacing
-       the reference's 1e-6 distance inflation, src/strtree.c:654-695).
+       points (``assume_points=True``), else an id-only pair shuffle,
+       a geometry equi-join by id and join._run_refine's grouped
+       ``batch_distance_one`` (join._distance_refine).  Each pair keeps
+       the Chebyshev ring of its closest cell pair, so the ring limit
+       is exact.  Ties are exact float equality (replacing the
+       reference's 1e-6 distance inflation, src/strtree.c:654-695).
     """
     h = 180.0 / (1 << res)  # cell height (deg); width is 2h
     if max_distance is not None:
         # a right within max_distance is within ceil(max_distance/h) rings
         max_rings = min(max_rings, int(np.ceil(max_distance / h)) + 1)
-    lid_t = left.schema[left_id].dataType.simpleString()
-    rid_t = right.schema[right_id].dataType.simpleString()
 
-    def right_cells(batches):
-        for pdf in batches:
-            prow, px, py, srow, seeds = _decode_seeds(
-                pdf.iloc[:, 1].to_numpy(), res, assume_points)
-            first = np.searchsorted(prow, srow)  # each row's first vertex
-            yield pd.DataFrame({"_rid": pdf.iloc[srow, 0].to_numpy(),
-                                "_rx": px[first], "_ry": py[first],
-                                "_cell": seeds})
+    def right_cells(s):  # each seed carries its row's first vertex
+        first = np.searchsorted(s.prow, s.srow)
+        return s.srow, [s.px[first], s.py[first], s.seeds]
 
-    r = right.select(right_id, right_geom).mapInPandas(
-        right_cells, f"_rid {rid_t}, _rx double, _ry double, _cell long")
+    r = SJ._run_side(right, right_id, right_geom, "_rid",
+                     [T.StructField("_rx", T.DoubleType(), False),
+                      T.StructField("_ry", T.DoubleType(), False), SJ._CELL],
+                     right_cells, res=res, points=assume_points)
 
     # a parent cell's representative is still a real right point, so a
     # coarser table only loosens the bound and the occupancy filter
@@ -355,41 +352,30 @@ def cell_nearest_all(left: DataFrame, right: DataFrame, *,
         (rres, np.sort(oiy * (1 << rres) + oix), rx, ry, box))
     cap_d = np.inf if max_distance is None else max_distance
 
-    def left_disks(batches):
+    def left_disks(s):
         rres_l, okeys, rx_l, ry_l, (bx0, by0, bx1, by1) = bc.value
-        tpos = np.arange(len(rx_l), dtype=np.int64)
-        for pdf in batches:
-            n = len(pdf)
-            prow, px, py, srow, seeds = _decode_seeds(
-                pdf.iloc[:, 1].to_numpy(), res, assume_points)
-            keep = np.zeros(n, bool)
-            keep[srow[_near_occupied(seeds, okeys, res, rres_l,
-                                     max_rings)]] = True
-            pk = keep[prow]
-            li, _, dd = _nearest_all_points(px[pk], py[pk], rx_l, ry_l,
-                                            tpos, None)
-            d_ub = np.full(n, np.inf)
-            np.minimum.at(d_ub, prow[pk][li], dd)
-            sk = keep[srow]
-            srow, seeds = srow[sk], seeds[sk]
-            sx, sy = K_cell.cell_ixy(seeds)
-            reach = np.maximum(np.maximum(np.abs(sx - bx0), np.abs(sx - bx1)),
-                               np.maximum(np.abs(sy - by0), np.abs(sy - by1)))
-            ks = np.minimum(np.ceil(np.minimum(d_ub[srow], cap_d) / h),
-                            reach).astype(np.int64)
-            row, cells, ring = _disk_cells(srow, seeds, ks, res)
-            out = {"_lid": pdf.iloc[row, 0].to_numpy()}
-            if assume_points:
-                lx, ly = np.full(n, np.nan), np.full(n, np.nan)
-                lx[prow], ly[prow] = px, py
-                out["_lx"], out["_ly"] = lx[row], ly[row]
-            out["_cell"], out["_ring"] = cells, ring.astype(np.int32)
-            yield pd.DataFrame(out)
+        keep = np.zeros(s.n, bool)
+        keep[s.srow[_near_occupied(s.seeds, okeys, res, rres_l, max_rings)]] = True
+        pk = keep[s.prow]
+        li, _, dd = _nearest_all_points(s.px[pk], s.py[pk], rx_l, ry_l,
+                                        np.arange(len(rx_l)), None)
+        d_ub = np.full(s.n, np.inf)
+        np.minimum.at(d_ub, s.prow[pk][li], dd)
+        sk = keep[s.srow]
+        srow, seeds = s.srow[sk], s.seeds[sk]
+        sx, sy = K_cell.cell_ixy(seeds)
+        reach = np.maximum(np.maximum(np.abs(sx - bx0), np.abs(sx - bx1)),
+                           np.maximum(np.abs(sy - by0), np.abs(sy - by1)))
+        ks = np.minimum(np.ceil(np.minimum(d_ub[srow], cap_d) / h),
+                        reach).astype(np.int64)
+        row, cells, ring = SJ._disk_cells(srow, seeds, ks, res)
+        xy = s.xy(row) if assume_points else []
+        return row, [*xy, cells, ring.astype(np.int32)]
 
-    disks = left.select(left_id, left_geom).mapInPandas(
-        left_disks, f"_lid {lid_t}, "
-        + ("_lx double, _ly double, " if assume_points else "")
-        + "_cell long, _ring int")
+    disks = SJ._run_side(left, left_id, left_geom, "_lid",
+                         [*(SJ._LXY if assume_points else []), SJ._CELL,
+                          T.StructField("_ring", T.IntegerType(), False)],
+                         left_disks, res=res, points=assume_points)
     if assume_points:
         cand = disks.join(r, "_cell").select(
             "_lid", "_rid", "_ring",
@@ -402,10 +388,9 @@ def cell_nearest_all(left: DataFrame, right: DataFrame, *,
                          F.col(left_geom).alias("_lgeom"))
         rg = right.select(F.col(right_id).alias("_rid"),
                           F.col(right_geom).alias("_rgeom"))
-        cand = (pairs.join(lg, "_lid").join(rg, "_rid")
-                .mapInPandas(_dist_refine, f"_lid {lid_t}, _rid {rid_t}, "
-                                           "_ring int, _d double")
-                .where(~F.isnan("_d")))
+        cand = SJ._run_refine(pairs.join(lg, "_lid").join(rg, "_rid"),
+                              SJ._distance_refine, keep=("_lid", "_rid", "_ring"),
+                              with_distance=True)
     if max_distance is not None:
         cand = cand.where(F.col("_d") <= max_distance)
     w = Window.partitionBy("_lid")
@@ -417,37 +402,6 @@ def cell_nearest_all(left: DataFrame, right: DataFrame, *,
                     F.col("_rid").alias(right_id),
                     F.col("_d").alias("distance"))
             .dropDuplicates([left_id, right_id]))
-
-
-def _decode_seeds(raw, res: int, points: bool):
-    """WKB column -> probe vertices (prow, px, py) and seed cells
-    (srow, seeds), both ordered by row.  A point is its own probe and
-    seed; a geometry probes with every vertex and seeds every cell of
-    its ``st_cell_cover``.  Rows with no finite position (NULL, empty,
-    malformed, NaN/inf coordinates) get neither."""
-    if points:
-        xs, ys = K_wkb.decode_points(
-            np.asarray([SG._b(v) for v in raw], dtype=object))
-        rows = np.nonzero(np.isfinite(xs) & np.isfinite(ys))[0]
-        return (rows, xs[rows], ys[rows], rows,
-                K_cell.cell_of(xs[rows], ys[rows], res))
-    prow, pts, srow, seeds = [], [], [], []
-    for i, v in enumerate(raw):
-        g = SG._loads_safe(v)
-        c = None if g is None or g.is_empty else g.all_coords()
-        if c is None or not len(c) or not np.isfinite(c).all():
-            continue
-        cov = K_cell.cover_to_res(K_cell.cover(g, res), res)
-        prow.append(np.full(len(c), i, np.int64))
-        pts.append(c)
-        srow.append(np.full(len(cov), i, np.int64))
-        seeds.append(cov)
-    if not prow:
-        e = np.empty(0, np.int64)
-        return e, np.empty(0), np.empty(0), e, e
-    pts = np.concatenate(pts)
-    return (np.concatenate(prow), pts[:, 0], pts[:, 1],
-            np.concatenate(srow), np.concatenate(seeds))
 
 
 def _near_occupied(seeds, okeys, res: int, rres: int, rings: int):
@@ -483,58 +437,3 @@ def _near_occupied(seeds, okeys, res: int, rres: int, rings: int):
             hit |= (cnt > 0) & (a <= b)[:, None]
         near[s:s + step] = (hit & (yy >= 0) & (yy < n)).any(axis=1)
     return near[inv]
-
-
-def _disk_cells(srow, seeds, ks, res: int):
-    """Every cell within ``ks[i]`` Chebyshev cells of ``seeds[i]``, as
-    (row, cell, ring) with one entry per (row, cell) and ring the
-    wrapped Chebyshev distance to the row's nearest seed.  Seeds with
-    the same radius expand together, chunked so rows ✕ stencil stays
-    bounded (one far seed must not allocate a huge matrix for all
-    rows)."""
-    n = 1 << res
-    sel_parts, cell_parts = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
-    for k in np.unique(ks):
-        sel = np.nonzero(ks == k)[0]
-        step = max(1, (1 << 22) // (2 * int(k) + 1) ** 2)
-        for s in range(0, len(sel), step):
-            part = sel[s:s + step]
-            cells, valid = K_cell.k_ring_batch(seeds[part], int(k))
-            i, j = np.nonzero(valid)
-            sel_parts.append(part[i])
-            cell_parts.append(cells[i, j])
-    si, cells = np.concatenate(sel_parts), np.concatenate(cell_parts)
-    ax, ay = K_cell.cell_ixy(seeds[si])
-    bx, by = K_cell.cell_ixy(cells)
-    dx = np.abs(ax - bx)
-    ring = np.maximum(np.minimum(dx, n - dx), np.abs(ay - by))
-    row = srow[si]
-    order = np.lexsort((ring, cells, row))
-    row, cells, ring = row[order], cells[order], ring[order]
-    first = np.ones(len(row), bool)
-    first[1:] = (row[1:] != row[:-1]) | (cells[1:] != cells[:-1])
-    return row[first], cells[first], ring[first]
-
-
-def _dist_refine(batches):
-    """Grouped exact pair distance over (_lid, _rid, _ring, _lgeom,
-    _rgeom) rows: each distinct left is prepared once per Arrow batch,
-    each right decoded once per group, and the pairs go through the
-    vectorized batch kernel."""
-    from .kernel import predicates as K_p
-    for pdf in batches:
-        pdf = pdf[pdf["_lid"].notna()].reset_index(drop=True)
-        if not len(pdf):
-            continue
-        lraw = pdf["_lgeom"].to_numpy()
-        rraw = pdf["_rgeom"].to_numpy()
-        codes, uniq = pd.factorize(pdf["_lid"].to_numpy())
-        first = np.zeros(len(uniq), dtype=np.int64)
-        seen, fidx = np.unique(codes, return_index=True)
-        first[seen] = fidx
-        prep = K_p.prepare_batch_lefts([SG._loads_safe(lraw[i]) for i in first])
-        dvals = np.full(len(pdf), np.nan)
-        for _rid, idx in pdf.groupby("_rid", sort=False).indices.items():
-            gg = SG._loads_safe(rraw[idx[0]])
-            dvals[idx] = K_p.batch_distance_one(prep, codes[idx], gg)
-        yield pdf[["_lid", "_rid", "_ring"]].assign(_d=dvals)

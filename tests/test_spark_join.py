@@ -658,3 +658,105 @@ def test_broadcast_join_validates_on_driver(spark):
             call()
     with pytest.raises(ValueError, match="unknown strategy"):
         SJ.spatial_join(wleft, points, strategy="Broadcast")
+
+
+def test_cell_join_validates_on_driver(spark):
+    """cell_spatial_join, on both paths, raises ValueError for dwithin
+    without a distance and for an unknown predicate when the join is
+    built, not in a worker."""
+    left, points, _ = _parity_fixture(spark)
+    wleft = left.select("left_id", "geom")
+    for left_is_points in (True, False):
+        for kw in (dict(predicate="dwithin"), dict(predicate="nearby"),
+                   dict(predicate="nearby", distance=1.0)):
+            with pytest.raises(ValueError, match="distance parameter|unknown predicate"):
+                SJ.cell_spatial_join(wleft, points, left_is_points=left_is_points, **kw)
+
+
+def test_cell_plans_one_arrow_crossing_per_side(spark):
+    """Every cell plan (cell_spatial_join on the point and general paths
+    and with relate_pattern, cell_nearest_all on both paths) has at most
+    one mapInArrow per input side plus one refine, no pandas or
+    row-wise Python UDF node, and no Python UDF under a Filter.  With
+    both sides shuffled, the point join has exactly two exchanges: one
+    per side of the cell equi-join, none for an id join-back."""
+    import re
+    left, points, polys = _parity_fixture(spark)
+    wleft = left.select("left_id", "geom")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plans = {
+            "points intersects": SJ.cell_spatial_join(wleft, polys, res=4,
+                                                      left_is_points=True),
+            "points dwithin": SJ.cell_spatial_join(wleft, polys, predicate="dwithin",
+                                                   distance=1.0, res=4,
+                                                   left_is_points=True),
+            "general intersects": SJ.cell_spatial_join(wleft, polys, res=4),
+            "relate_pattern": SJ.cell_spatial_join(wleft, polys, res=4,
+                                                   predicate="relate_pattern",
+                                                   pattern="T********"),
+            "knn points": SK.cell_nearest_all(wleft, points.where("geom IS NOT NULL"),
+                                              res=4, max_rings=4),
+            "knn geoms": SK.cell_nearest_all(wleft, polys, res=4, max_rings=4,
+                                             assume_points=False),
+        }
+        for name, df in plans.items():
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert 2 <= len(re.findall(r"\b(PythonMapInArrow|MapInArrow)\b", plan)) <= 3, \
+                (name, plan)
+            for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+                assert node not in plan, (name, plan)
+            for line in plan.splitlines():
+                if re.search(r"\bFilter\b", line):
+                    assert "pythonudf" not in line.lower(), (name, plan)
+            if name == "points intersects":
+                assert len(re.findall(r"\bExchange\b", plan)) == 2, plan
+            # the plans still answer after the rewrite
+            df.collect()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_cell_join_points_parity_degenerate(spark):
+    """cell_spatial_join(left_is_points=True) returns the same pairs as
+    broadcast_spatial_join, without a warning, on degenerate rows: NULL
+    geometries, truncated WKB, NaN/±inf points, a NULL left id, an
+    empty polygon and a polygon across the antimeridian (x 170..190;
+    points past 180 fall in the edge cells)."""
+    import warnings
+    from collections import Counter
+    from spark_geo.kernel.geom import POLYGON
+    pt = lambda x, y: K_wkb.dumps(Geom.point(x, y))  # noqa: E731
+    lrows = [(0, pt(1.0, 1.0)), (1, pt(2.0, 2.0)), (2, pt(3.0, 1.5)),
+             (3, None), (4, pt(1.0, 1.0)[:12]), (5, pt(float("nan"), 1.0)),
+             (6, pt(float("inf"), 5.0)), (7, pt(-float("inf"), 5.0)),
+             (None, pt(2.5, 2.5)), (9, pt(175.0, 5.0)), (10, pt(185.0, 5.0)),
+             (11, pt(190.0, 5.0)), (12, pt(-175.0, 5.0)), (13, pt(0.0, 3.5)),
+             (14, pt(4.0, 2.0)), (15, pt(0.5, 3.5))]
+    left = spark.createDataFrame(lrows, "left_id long, geom binary")
+    rrows = [(20, K_wkb.dumps(Geom.box(0, 0, 3, 3))),
+             (21, K_wkb.dumps(Geom.polygon([(2, 0), (4, 2), (2, 2), (2, 0)]))),
+             (22, K_wkb.dumps(Geom.linestring([(0, 3.5), (1, 3.5)]))),
+             (23, K_wkb.dumps(Geom(POLYGON))),
+             (24, K_wkb.dumps(Geom.polygon([(170, 0), (190, 0), (190, 10),
+                                            (170, 10), (170, 0)]))),
+             (25, None), (26, K_wkb.dumps(Geom.box(5, 5, 6, 6))[:20]),
+             (27, pt(1.0, 1.0)), (28, pt(float("nan"), 2.0))]
+    right = spark.createDataFrame(rrows, "right_id long, geom binary")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        # pyspark's collect leaves its local socket to the collector
+        warnings.simplefilter("ignore", ResourceWarning)
+        for pred, dist in [("intersects", None), ("within", None),
+                           ("covered_by", None), ("touches", None),
+                           ("contains", None), ("covers", None), ("dwithin", 1.5)]:
+            want = Counter(tuple(r) for r in SJ.broadcast_spatial_join(
+                left, right, predicate=pred, distance=dist)
+                .select("left_id", "right_id").collect())
+            got = Counter(tuple(r) for r in SJ.cell_spatial_join(
+                left, right, predicate=pred, distance=dist, res=4,
+                left_is_points=True).collect())
+            assert got == want, pred
+            if pred == "intersects":
+                assert {(None, 20), (9, 24), (10, 24), (11, 24), (0, 27)} <= set(want)
