@@ -517,6 +517,18 @@ def _point_refine_rows(keys, geom_at, px, py, predicate, distance):
         g, px[rows], py[rows], predicate, distance), False)
 
 
+def _join_back(pairs: DataFrame, left: DataFrame, left_id, left_geom,
+               right: DataFrame, right_id, right_geom) -> DataFrame:
+    """``pairs`` of candidate ids (``_lid``, ``_rid``) with both WKBs
+    equi-joined back by id as ``_lgeom`` / ``_rgeom``: the general-
+    geometry refine input, so the candidate shuffle carries ids only."""
+    lg = left.select(F.col(left_id).alias("_lid"),
+                     F.col(left_geom).alias("_lgeom"))
+    rg = right.select(F.col(right_id).alias("_rid"),
+                      F.col(right_geom).alias("_rgeom"))
+    return pairs.join(rg, "_rid").join(lg, "_lid")
+
+
 def _run_refine(cand: DataFrame, op, keep=("_lid", "_rid"),
                 with_distance: bool = False) -> DataFrame:
     """One ``mapInArrow`` over candidate rows carrying the right WKB
@@ -711,11 +723,8 @@ def cell_spatial_join(left: DataFrame, right: DataFrame, *,
             out = out.dropDuplicates(["_lid", "_rid"])
     else:
         cand = cand.select("_lid", "_rid").dropDuplicates(["_lid", "_rid"])
-        lg = left.select(F.col(left_id).alias("_lid"),
-                         F.col(left_geom).alias("_lgeom"))
-        rg = right.select(F.col(right_id).alias("_rid"),
-                          F.col(right_geom).alias("_rgeom"))
-        out = _run_refine(cand.join(rg, "_rid").join(lg, "_lid"),
+        out = _run_refine(_join_back(cand, left, left_id, left_geom,
+                                     right, right_id, right_geom),
                           _geoms_refine(predicate, distance, pattern))
     return out.select(F.col("_lid").alias(left_id),
                       F.col("_rid").alias(right_id))

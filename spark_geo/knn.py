@@ -384,11 +384,8 @@ def cell_nearest_all(left: DataFrame, right: DataFrame, *,
     else:
         pairs = (disks.join(r.select("_rid", "_cell"), "_cell")
                  .groupBy("_lid", "_rid").agg(F.min("_ring").alias("_ring")))
-        lg = left.select(F.col(left_id).alias("_lid"),
-                         F.col(left_geom).alias("_lgeom"))
-        rg = right.select(F.col(right_id).alias("_rid"),
-                          F.col(right_geom).alias("_rgeom"))
-        cand = SJ._run_refine(pairs.join(lg, "_lid").join(rg, "_rid"),
+        cand = SJ._run_refine(SJ._join_back(pairs, left, left_id, left_geom,
+                                            right, right_id, right_geom),
                               SJ._distance_refine, keep=("_lid", "_rid", "_ring"),
                               with_distance=True)
     if max_distance is not None:

@@ -31,7 +31,7 @@ def read_pages(spark: SparkSession, path_or_table: str,
                fmt: str = "auto") -> DataFrame:
     """Read the pages table.  ``fmt``: 'iceberg' | 'parquet' | 'auto'.
 
-    Never apply .cache()/collect here — downstream filters (lang,
+    Never cache or collect here — downstream filters (lang,
     geotag presence) must reach the scan."""
     if fmt == "auto":
         fmt = "iceberg" if (not os.path.exists(path_or_table)

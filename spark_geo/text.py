@@ -22,6 +22,7 @@ from __future__ import annotations
 import json
 import logging
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
@@ -40,76 +41,65 @@ TOKEN_PATTERN = "\\s+"
 DEFAULT_MAX_BUCKET = 10_000
 _DEFAULT_CAP = object()  # sentinel: "use DEFAULT_MAX_BUCKET at call time"
 
-# Caches created by the hot-bucket scans, awaiting release (ADVICE r4:
-# the MEMORY_AND_DISK persist in _drop_hot_buckets outlived the
-# operator that needed it).  Operators that can see their pipeline's
-# end (near_dup_clusters) release their own caches; direct callers of
-# the candidate generators can pass ``caches=[...]`` to own the
-# lifecycle, or call ``release_caches()`` between pipeline stages.
-_LIVE_CACHES: list = []
-
-
-def release_caches() -> int:
-    """Unpersist every signature cache registered by the skew-cap
-    scans; returns the number released.  Safe to call any time after
-    the candidate joins that read the caches have materialized."""
-    n = 0
-    while _LIVE_CACHES:
-        df = _LIVE_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to free
-            pass
-    return n
-
-
-def _release(caches: list) -> None:
-    while caches:
-        try:
-            caches.pop().unpersist()
-        except Exception:
-            pass
+# Lifecycle: an operator owns what it materializes.  A skew-capped
+# candidate generator checkpoints what its hot-bucket scan and its
+# self-join share into the plan it returns (see _drop_hot_buckets),
+# and Spark frees those blocks when the plan is garbage; nothing here
+# persists into the session's CacheManager, so there is no registry
+# and nothing for a caller to release.
 
 
 def _resolve_cap(max_bucket):
     return DEFAULT_MAX_BUCKET if max_bucket is _DEFAULT_CAP else max_bucket
 
 
-def _drop_hot_buckets(stacked: DataFrame, keys: list[str], max_bucket: int,
-                      skew_stats: dict | None, op: str,
-                      caches: list | None = None) -> DataFrame:
-    """Remove members of degenerate LSH buckets before the self-join.
+def _hot_buckets(stacked: DataFrame, keys: list[str], max_bucket: int,
+                 skew_stats: dict | None, op: str) -> list:
+    """The degenerate buckets of ``stacked``: rows of ``keys`` + ``_bsz``
+    for every bucket with more than ``max_bucket`` members.
 
     A bucket with n members emits n^2/2 candidate pairs — at 100 TB a
     single boilerplate-collision bucket with millions of docs IS the
     failure mode of banded LSH (the blowup is the pair OUTPUT, so AQE
     skew-splitting of the join shuffle cannot help).  The hot-key scan
     is one map-side-combinable count aggregate; the hot list itself is
-    tiny (one row per degenerate bucket) so it collects to the driver
-    and anti-joins back as a broadcast.  Dropped buckets are logged and
-    reported via ``skew_stats`` — a drop is visible, never silent."""
-    # the hot scan is an eager driver decision, so persist the
-    # signature pipeline first — otherwise it is computed twice (once
-    # here, again under the anti-join / downstream self-join; ADVICE
-    # r3).  The cache also serves the caller's stacked⋈stacked
-    # candidate self-join, which reads it twice more.
-    from pyspark.storagelevel import StorageLevel
-    stacked = stacked.persist(StorageLevel.MEMORY_AND_DISK)
-    (_LIVE_CACHES if caches is None else caches).append(stacked)
+    tiny (one row per degenerate bucket) so it collects to the driver.
+    Dropped buckets are logged and reported via ``skew_stats`` — a drop
+    is visible, never silent."""
     sizes = stacked.groupBy(*keys).agg(F.count(F.lit(1)).alias("_bsz"))
-    hot = sizes.where(F.col("_bsz") > max_bucket)
-    hot_rows = hot.collect()
+    hot_rows = sizes.where(F.col("_bsz") > max_bucket).collect()
     if skew_stats is not None:
         skew_stats["hot_buckets"] = len(hot_rows)
         skew_stats["dropped_members"] = int(sum(r["_bsz"] for r in hot_rows))
         skew_stats["max_bucket"] = max_bucket
+    if hot_rows:
+        logger.warning(
+            "%s: dropping %d hot bucket(s) (> %d members, %d members total) "
+            "from candidate generation", op, len(hot_rows), max_bucket,
+            sum(r["_bsz"] for r in hot_rows))
+    return hot_rows
+
+
+def _drop_hot_buckets(stacked: DataFrame, keys: list[str], max_bucket: int,
+                      skew_stats: dict | None, op: str) -> DataFrame:
+    """Remove members of degenerate buckets (``_hot_buckets``) before
+    the self-join; the hot list anti-joins back as a broadcast.
+
+    The hot scan is an eager driver decision, so ``stacked`` is
+    materialized once first with an eager ``localCheckpoint``: the
+    scan, the broadcast anti-join and the caller's stacked⋈stacked
+    self-join all read that one materialization instead of re-running
+    the signature pipeline (and its UDFs) three times.  The blocks
+    belong to the returned plan, not to a registry: Spark's
+    ContextCleaner frees them once the plan is unreachable, so there is
+    nothing to release.  The trade is the one ``connected_components``
+    documents: lineage is truncated at the checkpoint, so losing an
+    executor that held a block fails the query instead of recomputing
+    it."""
+    stacked = stacked.localCheckpoint(eager=True)
+    hot_rows = _hot_buckets(stacked, keys, max_bucket, skew_stats, op)
     if not hot_rows:
         return stacked
-    logger.warning(
-        "%s: dropping %d hot bucket(s) (> %d members, %d members total) "
-        "from candidate generation", op, len(hot_rows), max_bucket,
-        sum(r["_bsz"] for r in hot_rows))
     hot_keys = stacked.sparkSession.createDataFrame(
         [tuple(r[k] for k in keys) for r in hot_rows],
         schema=stacked.select(*keys).schema)
@@ -211,8 +201,7 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
                         shingle_size: int | None = None,
                         hash_mode: str = "xxhash64",
                         max_bucket: int | None = _DEFAULT_CAP,
-                        skew_stats: dict | None = None,
-                        caches: list | None = None) -> DataFrame:
+                        skew_stats: dict | None = None) -> DataFrame:
     """Banded LSH candidate pairs — NOTE: buckets hotter than the
     DEFAULT-ON cap (DEFAULT_MAX_BUCKET=10k) are DROPPED from candidate
     generation (recall trade, WARNING-logged; pass max_bucket=None for
@@ -233,44 +222,46 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
     r = n_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, n_hashes, shingle_size,
                              hash_mode=hash_mode)
-    if hash_mode == "md5":
-        band_structs = [F.struct(F.lit(b).alias("band"),
-                                 F.concat_ws("|", *[F.col(f"h{b * r + k}")
-                                                    for k in range(r)])
-                                 .alias("bucket"))
-                        for b in range(bands)]
-    else:
-        band_structs = [F.struct(F.lit(b).alias("band"),
-                                 F.xxhash64(*[F.col(f"h{b * r + k}") for k in range(r)])
-                                 .alias("bucket"))
-                        for b in range(bands)]
-    stacked = (sig.select(F.col(id_col), F.explode(F.array(*band_structs)).alias("bb"))
-               .select(id_col, "bb.band", "bb.bucket"))
+    bucket_of = partial(F.concat_ws, "|") if hash_mode == "md5" else F.xxhash64
+    # One row per doc carrying its per-band bucket vector _b0.._bN.
+    # Each pair is emitted from its FIRST shared band only (r6, guide
+    # §2.3/§2.4): a near-identical pair collides in every band, so the
+    # former union-then-distinct shuffled ~bands x the distinct-pair
+    # volume through a full exchange just to dedup.  With the vector on
+    # every exploded row, a pipelined post-join FILTER keeps only the
+    # first collision and the dedup exchange disappears from the plan.
+    vec = [f"_b{b}" for b in range(bands)]
+    wide = sig.select(F.col(id_col), *[
+        bucket_of(*[F.col(f"h{b * r + k}") for k in range(r)]).alias(c)
+        for b, c in enumerate(vec)])
+    entries = [F.struct(F.lit(b).alias("band"), F.col(c).alias("bucket"))
+               for b, c in enumerate(vec)]
+
+    def stack(w):
+        return (w.select(F.col(id_col), *vec,
+                         F.explode(F.array(*entries)).alias("bb"))
+                .select(id_col, *vec, "bb.band", "bb.bucket")
+                .where(F.col("bucket").isNotNull()))
+
     max_bucket = _resolve_cap(max_bucket)
     if max_bucket:
-        stacked = _drop_hot_buckets(stacked, ["band", "bucket"], max_bucket,
-                                    skew_stats, "lsh_candidate_pairs", caches)
-    # Emit each pair from its FIRST shared band only (r6, guide §2.3/
-    # §2.4): a near-identical pair collides in every band, so the
-    # former union-then-distinct shuffled ~bands x the distinct-pair
-    # volume through a full exchange just to dedup.  Carrying every
-    # doc's per-band bucket vector (tiny: one row per doc) lets a
-    # pipelined post-join FILTER keep only the first collision — the
-    # result SET is identical (null-safe per-band compares reproduce
-    # the hot-bucket drop exactly: a dropped (doc, band) row is null
-    # and never counts as a collision) and the dedup exchange
-    # disappears from the plan.
-    surv = stacked.groupBy(id_col).agg(
-        *[F.max(F.when(F.col("band") == b, F.col("bucket"))).alias(f"_b{b}")
-          for b in range(bands)])
-    entries = [F.struct(F.lit(b).alias("band"),
-                        F.col(f"_b{b}").alias("bucket"))
-               for b in range(bands)]
-    flat = (surv.select(F.col(id_col), *[f"_b{b}" for b in range(bands)],
-                        F.explode(F.array(*entries)).alias("bb"))
-            .select(id_col, *[f"_b{b}" for b in range(bands)],
-                    "bb.band", "bb.bucket")
-            .where(F.col("bucket").isNotNull()))
+        # The per-doc vector is the materialization the hot scan and
+        # the self-join share (same lifetime and lineage trade as
+        # _drop_hot_buckets).  A hot bucket is dropped by nulling its
+        # entry in the vector (an IN over the collected hot list):
+        # null-safe per-band compares then never count it as a
+        # collision, and no anti-join or regroup by doc (a shuffle once
+        # the checkpoint has dropped the doc partitioning) is needed.
+        wide = wide.localCheckpoint(eager=True)
+        hot = _hot_buckets(stack(wide), ["band", "bucket"], max_bucket,
+                           skew_stats, "lsh_candidate_pairs")
+        if hot:
+            wide = wide.select(id_col, *[
+                F.when(~F.col(c).isin([h["bucket"] for h in hot
+                                       if h["band"] == b]),
+                       F.col(c)).alias(c)
+                for b, c in enumerate(vec)])
+    flat = stack(wide)
     x, y = flat.alias("x"), flat.alias("y")
     shared = [F.coalesce(F.col(f"x._b{j}") == F.col(f"y._b{j}"),
                          F.lit(False)) for j in range(bands)]
@@ -366,8 +357,7 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", max_hamming: int = 3,
                       hash_mode: str = "xxhash64",
                       max_bucket: int | None = _DEFAULT_CAP,
-                      skew_stats: dict | None = None,
-                      caches: list | None = None) -> DataFrame:
+                      skew_stats: dict | None = None) -> DataFrame:
     """SimHash near-dup pairs — NOTE: blocks hotter than the
     DEFAULT-ON cap (DEFAULT_MAX_BUCKET=10k) are DROPPED from candidate
     generation (recall trade, WARNING-logged; max_bucket=None for
@@ -385,7 +375,7 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
     max_bucket = _resolve_cap(max_bucket)
     if max_bucket:
         stacked = _drop_hot_buckets(stacked, ["blk", "val"], max_bucket,
-                                    skew_stats, "simhash_near_dups", caches)
+                                    skew_stats, "simhash_near_dups")
     x, y = stacked.alias("x"), stacked.alias("y")
     cand = (x.join(y, (F.col("x.blk") == F.col("y.blk"))
                    & (F.col("x.val") == F.col("y.val"))
@@ -489,8 +479,7 @@ def winnow_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
                            min_shared: int = 2,
                            hash_mode: str = "rolling",
                            max_bucket: int | None = _DEFAULT_CAP,
-                           skew_stats: dict | None = None,
-                           caches: list | None = None) -> DataFrame:
+                           skew_stats: dict | None = None) -> DataFrame:
     """Winnowing candidate pairs — NOTE: fingerprints shared by more
     docs than the DEFAULT-ON cap (DEFAULT_MAX_BUCKET=10k) are DROPPED
     (boilerplate substrings; recall trade, WARNING-logged;
@@ -511,7 +500,7 @@ def winnow_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
     max_bucket = _resolve_cap(max_bucket)
     if max_bucket:
         flat = _drop_hot_buckets(flat, ["fp"], max_bucket,
-                                 skew_stats, "winnow_candidate_pairs", caches)
+                                 skew_stats, "winnow_candidate_pairs")
     a = flat.select(F.col(id_col).alias("da"), "fp")
     b = flat.select(F.col(id_col).alias("db"), "fp")
     return (a.join(b, ["fp"]).where(F.col("da") < F.col("db"))
@@ -635,17 +624,11 @@ def near_dup_clusters(df: DataFrame, id_col: str = "doc_id",
            .agg(F.min(id_col).alias("_rep"),
                 F.min_by(text_col, F.col(id_col)).alias(text_col)))
     rep_docs = rep.select(F.col("_rep").alias(id_col), F.col(text_col))
-    _caches: list = []  # own the hot-scan cache lifecycle (ADVICE r4)
     cand = lsh_candidate_pairs(rep_docs, id_col, text_col, n_hashes, bands,
-                               max_bucket=max_bucket, skew_stats=skew_stats,
-                               caches=_caches)
+                               max_bucket=max_bucket, skew_stats=skew_stats)
     verified = jaccard_pairs(rep_docs, id_col, text_col, threshold,
                              candidates=cand)
     comp = connected_components(verified.select("da", "db"))
-    # connected_components materializes its labels eagerly per round
-    # (localCheckpoint / parquet), so the signature cache behind the
-    # candidate join is no longer reachable from `comp` — release it.
-    _release(_caches)
     # expand back: doc -> its exact-dup representative -> rep's cluster
     doc_rep = (df.select(F.col(id_col), h.alias("_ch"))
                .join(rep.select("_ch", "_rep"), "_ch")

@@ -23,23 +23,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 DEFAULT_MAX_CELL = 100_000
 _DEFAULT_CAP = object()
 
-# Assignment caches created by the ivf_topk skew probe, awaiting
-# release (ADVICE r4 — same lifecycle as text._LIVE_CACHES).
-_LIVE_CACHES: list = []
-
-
-def release_caches() -> int:
-    """Unpersist every IVF assignment cache registered by the skew
-    probe; returns the number released."""
-    n = 0
-    while _LIVE_CACHES:
-        try:
-            _LIVE_CACHES.pop().unpersist()
-            n += 1
-        except Exception:  # session already stopped
-            pass
-    return n
-
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -190,8 +173,7 @@ def ivf_topk(probes: DataFrame, corpus: DataFrame,
              probe_id: str = "probe_id", corpus_id: str = "neighbor_id",
              vec_col: str = "embedding",
              max_cell: int | None = _DEFAULT_CAP,
-             skew_stats: dict | None = None,
-             caches: list | None = None) -> DataFrame:
+             skew_stats: dict | None = None) -> DataFrame:
     """IVF ANN search — NOTE: inverted lists longer than the
     DEFAULT-ON cap (DEFAULT_MAX_CELL=100k) are TRUNCATED
     (deterministic by id; recall trade; pass max_cell=None for
@@ -209,7 +191,13 @@ def ivf_topk(probes: DataFrame, corpus: DataFrame,
     duplicate-embedding mass): ``max_cell`` truncates each inverted
     list to its first ``max_cell`` members (deterministic by id) —
     the standard IVF list-truncation recall trade, logged + reported
-    via ``skew_stats`` so the drop is visible, never silent."""
+    via ``skew_stats`` so the drop is visible, never silent.
+
+    Nothing is cached: the ``skew_stats`` probe is its own eager job,
+    and the query re-evaluates the corpus assignment and its per-cell
+    ranking (Catalyst only, no Python stage) rather than persisting
+    them, so the operator leaves no CacheManager entry and there is
+    nothing for a caller to release."""
     c = ivf_assign(corpus.select(F.col(corpus_id), F.col(vec_col)),
                    centroids, vec_col=vec_col, out_col="_cell") \
         .withColumnRenamed(vec_col, "_cv")
@@ -219,11 +207,6 @@ def ivf_topk(probes: DataFrame, corpus: DataFrame,
         wcell = Window.partitionBy("_cell").orderBy(F.col(corpus_id).asc())
         ranked = c.withColumn("_rk", F.row_number().over(wcell))
         if skew_stats is not None:
-            # the dropped-count probe is an eager job; persist so the
-            # assignment pipeline is not computed twice (ADVICE r3)
-            from pyspark.storagelevel import StorageLevel
-            ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
-            (_LIVE_CACHES if caches is None else caches).append(ranked)
             dropped = ranked.where(F.col("_rk") > max_cell) \
                 .groupBy().count().collect()[0][0]
             skew_stats["dropped_members"] = int(dropped)

@@ -40,8 +40,11 @@ def test_every_query_has_oracle_or_reason(spark):
 
 
 @pytest.mark.parametrize("name", sorted(E.oracle_sql().keys()))
-def test_query_matches_oracle(spark, con, name):
+def test_query_matches_oracle(spark, con, cache_entries, name):
+    before = cache_entries()
     sdf = E.queries()[name](spark, SF_DIR).toPandas()
+    # no query leaves a cache behind in the session
+    assert cache_entries() <= before, f"{name}: left a CacheManager entry"
     odf = con.execute(E.oracle_sql()[name]).df()
     a, b = canon(sdf), canon(odf)
     assert list(a.columns) == list(b.columns)

@@ -402,41 +402,48 @@ def test_connected_components_durable_resume(spark, tmp_path):
     assert mem == out
 
 
-def test_cache_lifecycle_released(spark):
-    """ADVICE r4: the hot-bucket-scan persist must not outlive the
-    operator.  near_dup_clusters owns and releases its caches; direct
-    candidate-generator calls register in the module registry, which
-    release_caches() drains."""
-    TX.release_caches()
-    VX.release_caches()
-    # direct call with a hot bucket -> cache registered
-    rows = [(i, "identical vote mass " + "filler " * 30) for i in range(40)]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    TX.simhash_near_dups(d, max_hamming=3, max_bucket=5).count()
-    assert len(TX._LIVE_CACHES) == 1
-    cached = TX._LIVE_CACHES[0]
-    assert cached.storageLevel.useMemory or cached.storageLevel.useDisk
-    assert TX.release_caches() == 1
-    assert not (cached.storageLevel.useMemory or cached.storageLevel.useDisk)
-    assert len(TX._LIVE_CACHES) == 0
-
-    # near_dup_clusters cleans up after itself (no registry growth,
-    # nothing left persisted from its internal LSH stage)
-    nd_rows = [(i, f"some unique text number {i} with shared prefix "
-                + "boiler " * 10) for i in range(20)]
-    nd = spark.createDataFrame(nd_rows, "doc_id long, text string")
-    TX.near_dup_clusters(nd, threshold=0.5, max_bucket=5).count()
-    assert len(TX._LIVE_CACHES) == 0
-
-    # ivf_topk with skew_stats registers; release drains
+def test_cache_lifecycle_released(spark, cache_entries):
+    """No operator leaves a cache behind: each skew-capped operator,
+    called twice with its cap hit, adds no CacheManager entry, and the
+    second call returns the same rows and ``skew_stats`` as the first
+    (a cache left by the first call would serve, or warn on, the
+    second)."""
+    hot = spark.createDataFrame(
+        [(i, "identical vote mass " + "filler " * 30) for i in range(40)],
+        "doc_id long, text string")
+    shared = spark.createDataFrame(
+        [(i, "shared common tokens everywhere alpha beta gamma delta "
+          + f"unique{i}") for i in range(60)], "doc_id long, text string")
+    boiler = spark.createDataFrame(
+        [(i, "boilerplate header shared by all documents " + str(i))
+         for i in range(30)], "doc_id long, text string")
     emb = [(i, [float(i % 2) + 0.5] * 8) for i in range(12)]
-    pdfp = spark.createDataFrame(emb, "probe_id long, embedding array<float>")
-    cdfc = spark.createDataFrame(emb, "neighbor_id long, embedding array<float>")
-    st = {}
-    VX.ivf_topk(pdfp, cdfc, [[1.5] * 8, [0.5] * 8], k=3, n_probe=1,
-                max_cell=4, skew_stats=st).count()
-    assert len(VX._LIVE_CACHES) == 1
-    assert VX.release_caches() == 1
+    probes = spark.createDataFrame(emb, "probe_id long, embedding array<float>")
+    corpus = spark.createDataFrame(emb, "neighbor_id long, embedding array<float>")
+    calls = {
+        "simhash": lambda st: TX.simhash_near_dups(
+            hot, max_hamming=3, max_bucket=5, skew_stats=st),
+        "lsh": lambda st: TX.lsh_candidate_pairs(
+            shared, n_hashes=32, bands=4, max_bucket=10, skew_stats=st),
+        "winnow": lambda st: TX.winnow_candidate_pairs(
+            boiler, k=8, window=4, min_shared=1, max_bucket=5,
+            skew_stats=st),
+        "near_dup": lambda st: TX.near_dup_clusters(
+            shared, threshold=0.5, max_bucket=10, skew_stats=st),
+        "ivf": lambda st: VX.ivf_topk(
+            probes, corpus, [[1.5] * 8, [0.5] * 8], k=3, n_probe=1,
+            max_cell=4, skew_stats=st),
+    }
+    before = cache_entries()
+    for name, call in calls.items():
+        runs = []
+        for _ in range(2):
+            st = {}
+            rows = sorted(map(tuple, call(st).collect()))
+            runs.append((rows, st))
+            assert cache_entries() == before, name
+        assert runs[0] == runs[1], name
+        assert runs[0][1]["dropped_members"] > 0, name  # the cap was hit
 
 
 def test_winnow_plan_no_inferred_generate_filter(spark):
@@ -459,7 +466,6 @@ def test_winnow_plan_no_inferred_generate_filter(spark):
     pairs = TX.winnow_candidate_pairs(d, k=8, window=4, min_shared=2,
                                       hash_mode="md5", max_bucket=None)
     assert pairs.columns == ["da", "db", "n_shared"]
-    TX.release_caches()
 
 
 def test_tokens_explode_outer_matches_plain(spark):
