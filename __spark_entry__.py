@@ -424,10 +424,11 @@ def q_knn_all_cells(spark, sf_dir):
 def q_knn_mixed_geoms(spark, sf_dir):
     """General-geometry distributed nearest (r4): customer points vs
     nation BOXES through the assume_points=False path — cover-seeded
-    cell disks, ids-only shuffles, grouped batch pair
-    distance (kernel.predicates.batch_distance_one, no per-pair
-    Python).  Point-to-axis-box distance has the exact GREATEST
-    closed form the oracle reproduces; all ties kept."""
+    cell disks, ids-only shuffles, grouped batch pair distance
+    (kernel.batchwkb.batch_distance_one over each batch's decode_runs
+    owner stacks, no per-pair Python).  Point-to-axis-box distance has
+    the exact GREATEST closed form the oracle reproduces; all ties
+    kept."""
     ship_package(spark)
     pts = _cust_points(spark, sf_dir).select(
         F.col("c_custkey").alias("left_id"), F.col("point").alias("geom"))
@@ -844,7 +845,7 @@ def q_cell_join_dwithin(spark, sf_dir):
 def q_cell_join_geoms(spark, sf_dir):
     """Polygon✕polygon two-phase cell join (both sides cell-covered,
     coarse equi-join, vectorized many-vs-one batch refine —
-    kernel.predicates.batch_predicate_one): supplier boxes against
+    kernel.batchwkb.batch_predicate_one): supplier boxes against
     nation boxes, all edges exact lattice values so the DuckDB
     interval-overlap twin is bit-identical (touching edges count:
     intersects includes boundary contact on both sides)."""
@@ -866,7 +867,7 @@ def q_cell_join_geoms(spark, sf_dir):
 def q_cell_join_contains(spark, sf_dir):
     """Containment-family cell join (r4): supplier boxes WITHIN nation
     boxes through the two-phase join's batch containment kernel
-    (kernel.predicates._batch_containment — vectorized exact-negative
+    (kernel.batchwkb._containment — vectorized exact-negative
     filter, scalar verify only on survivors; VERDICT r3 item 3).  Box
     nesting has an exact interval oracle; edge-touching nested boxes
     still count (within allows boundary contact)."""

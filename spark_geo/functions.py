@@ -47,15 +47,7 @@ def _b(v):
     return v if isinstance(v, bytes) else bytes(v)
 
 
-def _loads_safe(v):
-    """Decode WKB; malformed bytes -> None (a poisoned row must not
-    kill a 10^12-row job — mirrors on_invalid='ignore', io.py:27-29)."""
-    if v is None:
-        return None
-    try:
-        return K_wkb.loads(_b(v))
-    except (ValueError, KeyError, IndexError, struct_error):
-        return None
+_loads_safe = K_wkb.loads_safe
 
 
 from struct import error as struct_error  # noqa: E402

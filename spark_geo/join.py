@@ -39,10 +39,12 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from .kernel import batchwkb as K_bw
 from .kernel import cell as K_cell
 from .kernel import grid as K_grid
 from .kernel import measure as K_m
 from .kernel import predicates as K_p
+from .kernel import relate as K_rel
 from .kernel import wkb as K_wkb
 from .kernel.geom import Geom
 from .kernel.strtree import PREDICATES, STRtree
@@ -575,41 +577,36 @@ def _point_refine(predicate, distance):
     return op
 
 
-def _prepared_lefts(b, rkeys):
-    """Each distinct ``_lid``'s ``_lgeom`` decoded and prepared once per
-    batch (``prepare_batch_lefts``) -> (left code per row, prep, group
-    keys with -1 where ``_lid`` is NULL)."""
+def _left_runs(b, rkeys):
+    """Each distinct ``_lid``'s ``_lgeom`` decoded once per batch into
+    one Runs (``batchwkb.decode_canonical``; row = left code) -> (left
+    code per row, Runs, group keys with -1 where ``_lid`` is NULL)."""
     codes = _codes(b.column("_lid"))
     seen, first = np.unique(codes, return_index=True)
     lraw = _col(b, "_lgeom")
-    prep = K_p.prepare_batch_lefts([SG._loads_safe(lraw[i])
-                                    for i in first[seen >= 0]])
-    return codes, prep, np.where(codes < 0, -1, rkeys)
+    R = K_bw.decode_canonical([lraw[i] for i in first[seen >= 0]])
+    return codes, R, np.where(codes < 0, -1, rkeys)
 
 
 def _geoms_refine(predicate, distance, pattern=None):
     """Refine op for general left geometries ``_lgeom``.
 
-    Candidates pass a vectorized bbox prefilter, then go through the
-    many-vs-one batch kernel (kernel.predicates.batch_predicate_one —
-    owner-block vectorized, no per-pair Python); predicates without a
-    batch path fall back to the exact scalar kernels over the bbox
-    survivors only.  ``relate_pattern`` gates on the vectorized
-    intersects pass (sound because join patterns must require
-    intersection, _check_join_pattern) and computes the exact DE-9IM
-    matrix only for intersecting pairs."""
-    if predicate == "relate_pattern":
-        from .kernel import relate as K_rel
-        fn = lambda a, g: K_rel.relate_pattern(a, g, pattern)  # noqa: E731
-    elif predicate == "dwithin":
-        fn = lambda a, g: K_p.dwithin(a, g, distance)  # noqa: E731
-    else:
-        fn = PREDICATES[predicate]
+    Each batch's distinct lefts are decoded once into one Runs; each
+    right group gathers its owner stacks from it.  Candidates pass a
+    vectorized bbox prefilter, then the many-vs-one batch kernel
+    (kernel.batchwkb.batch_predicate_one — owner-block vectorized, no
+    per-pair Python; scalar verify only on the survivors of the
+    containment and intersection-requiring predicates).
+    ``relate_pattern`` gates on the vectorized intersects pass (sound
+    because join patterns must require intersection,
+    _check_join_pattern) and computes the exact DE-9IM matrix only for
+    intersecting pairs."""
+    gate = "intersects" if predicate == "relate_pattern" else predicate
     pad = float(distance) if predicate == "dwithin" else 0.0
 
     def op(b, rkeys):
-        codes, prep, keys = _prepared_lefts(b, rkeys)
-        lb, lgeoms = prep["bounds"], prep["geoms"]
+        codes, R, keys = _left_runs(b, rkeys)
+        lb = R.stacks()[4]
 
         def group(rows, g):
             out = np.zeros(len(rows), dtype=bool)
@@ -624,14 +621,10 @@ def _geoms_refine(predicate, distance, pattern=None):
             if not alive.any():
                 return out
             sel = gc[alive]
-            gate = "intersects" if predicate == "relate_pattern" else predicate
-            mask = K_p.batch_predicate_one(prep, sel, g, gate, distance)
-            if mask is None or predicate == "relate_pattern":
-                scalar = np.arange(len(sel)) if mask is None else np.flatnonzero(mask)
-                mask = np.zeros(len(sel), dtype=bool)
-                for i in scalar:
-                    a = lgeoms[sel[i]]
-                    mask[i] = a is not None and not a.is_empty and fn(a, g)
+            mask = K_bw.batch_predicate_one(R, sel, g, gate, distance)
+            if predicate == "relate_pattern":
+                for i in np.flatnonzero(mask):
+                    mask[i] = K_rel.relate_pattern(R.geom(sel[i]), g, pattern)
             out[alive] = mask
             return out
 
@@ -642,9 +635,9 @@ def _geoms_refine(predicate, distance, pattern=None):
 def _distance_refine(b, rkeys):
     """Refine op for the general kNN: exact left-right distance through
     the vectorized ``batch_distance_one``."""
-    codes, prep, keys = _prepared_lefts(b, rkeys)
+    codes, R, keys = _left_runs(b, rkeys)
     return _per_geometry(keys, _right_at(b), lambda rows, g:
-                         K_p.batch_distance_one(prep, codes[rows], g), np.nan)
+                         K_bw.batch_distance_one(R, codes[rows], g), np.nan)
 
 
 def cell_spatial_join(left: DataFrame, right: DataFrame, *,

@@ -10,13 +10,18 @@ never by row count:
 
 - ``decode_runs`` parses a whole column of the engine's canonical WKB
   (little-endian ISO, 2D, types 1-6) in lockstep: one vectorized pass
-  per structural level, a single fancy-indexed byte gather for all
-  coordinates, owner/run index arrays in the style of the join
-  refine's owner stacks (predicates.py:812).  Rows the fast path
-  cannot represent (big-endian, Z/M, SRID flag, GEOMETRYCOLLECTION,
-  malformed) are flagged and handled by the scalar kernels — the
-  batch results are bit-identical to the scalar path by construction
-  (property-tested in tests/test_batchwkb.py).
+  per structural level, one gather per coordinate axis from an
+  unaligned float64 view of the bytes, owner-contiguous run and
+  vertex index arrays.  Rows the fast path cannot represent
+  (big-endian, Z/M, SRID flag, GEOMETRYCOLLECTION, malformed) are
+  flagged and handled by the scalar kernels — the batch results are
+  bit-identical to the scalar path by construction (property-tested
+  in tests/test_batchwkb.py).
+- ``Runs`` is the one owner-stack format of both kernel families:
+  the column kernels below read it row-aligned, and the many-vs-one
+  kernels of the cell-join / cell-kNN general refine
+  (``batch_predicate_one`` / ``batch_distance_one``) gather one right
+  group's owner stacks from it with ``grid.gather``.
 - ``batch_area`` / ``batch_length`` / ``batch_bounds``: per-ring
   shoelace / segment-norm sums via ``np.add.reduceat`` over run
   boundaries (junction terms zeroed), per-row totals via
@@ -38,9 +43,11 @@ from __future__ import annotations
 
 import numpy as np
 
+from . import grid as G
 from . import measure as M
 from . import predicates as P
 from . import wkb as W
+from .geom import GEOMETRYCOLLECTION, MULTIPOLYGON, POLYGON
 
 _EPS = 1e-12
 _CAP = 1 << 22  # max expanded elements per pair-cross chunk
@@ -61,7 +68,7 @@ class Runs:
     1 linestring, 2 polygon exterior ring, 3 polygon hole ring."""
 
     __slots__ = ("n", "null", "ok", "coords", "cstart", "rlen",
-                 "rowner", "rrole", "_vowner", "_segc",
+                 "rowner", "rrole", "_vowner", "_segc", "_stk", "_geoms",
                  "u8", "offs", "lens", "rtype", "vbyte")
 
     def __init__(self, n, null, ok, coords, cstart, rlen, rowner, rrole,
@@ -76,6 +83,8 @@ class Runs:
         self.rtype, self.vbyte = rtype, vbyte
         self._vowner = None
         self._segc = None
+        self._stk = None
+        self._geoms = {}
 
     # -- derived per-owner stacks (built lazily, cached) -------------
 
@@ -99,10 +108,57 @@ class Runs:
                 junc = self.cstart[1:] - 1
                 keep[junc] = False
                 keep &= erole[:-1] >= 1
-                segs = np.hstack([c[:-1][keep], c[1:][keep]])
-                self._segc = (segs, self.vowner()[:-1][keep],
-                              erole[:-1][keep])
+                i = np.flatnonzero(keep)
+                self._segc = (_seg_rows(c, i), self.vowner()[i], erole[i])
         return self._segc
+
+    def stacks(self):
+        """(verts, vowner, psegs, powner, bounds) of the many-vs-one
+        kernels: the vertices as ``Geom.all_coords`` gives them (an
+        empty point's NaN placeholder dropped, loads' both-NaN rule),
+        the segments of polygon rings with >= 4 vertices (the even-odd
+        parity stack), each with its owner row, and per-row bounds as
+        ``Geom.bounds()`` gives them (NaN-propagating; rows decode_runs
+        cannot represent take them from their Geom)."""
+        if self._stk is None:
+            c, vo = self.coords, self.vowner()
+            keep = ~(np.repeat(self.rrole == 0, self.rlen)
+                     & np.isnan(c[:, 0]) & np.isnan(c[:, 1]))
+            v, vo = (c, vo) if keep.all() else (c[keep], vo[keep])
+            ring = np.repeat((self.rrole >= 2) & (self.rlen >= 4), self.rlen)
+            ring[self.cstart + self.rlen - 1] = False  # a run's last vertex
+            i = np.flatnonzero(ring)
+            cnt = np.bincount(vo, minlength=self.n)
+            has = cnt > 0
+            at = (np.cumsum(cnt) - cnt)[has]
+            bounds = np.full((self.n, 4), np.nan)
+            bounds[has, :2] = np.minimum.reduceat(v, at)
+            bounds[has, 2:] = np.maximum.reduceat(v, at)
+            for r in np.flatnonzero(~self.ok & ~self.null):
+                g = self.geom(r)
+                if g is not None:
+                    bounds[r] = g.bounds()
+            self._stk = (v, vo, _seg_rows(c, i), self.vowner()[i], bounds)
+        return self._stk
+
+    def geom(self, i):
+        """Row ``i`` decoded from its own bytes into a Geom (None when
+        NULL or malformed), once per row."""
+        if i not in self._geoms:
+            self._geoms[i] = W.loads_safe(
+                self.u8[self.offs[i]:self.offs[i] + self.lens[i]])
+        return self._geoms[i]
+
+
+def _seg_rows(c: np.ndarray, i: np.ndarray) -> np.ndarray:
+    """(len(i), 4) segments ``c[i] -> c[i + 1]`` of (m, 2) coords,
+    copied as complex pairs: a column ``hstack`` of large (m, 2) arrays
+    is several times slower."""
+    cz = np.ascontiguousarray(c).view(np.complex128).ravel()
+    out = np.empty((len(i), 2), dtype=np.complex128)
+    out[:, 0] = cz[i]
+    out[:, 1] = cz[i + 1]
+    return out.view(np.float64)
 
 
 def decode_runs(wkbs) -> Runs:
@@ -285,7 +341,7 @@ def decode_runs(wkbs) -> Runs:
             j += 1
 
     # -- assemble, drop runs of rows that later went bad, sort by
-    #    owner, gather coordinates in ONE fancy-indexed read ---------
+    #    owner, gather coordinates from one float64 view ------------
     if rs:
         run_start = np.concatenate(rs)
         run_len = np.concatenate(rl)
@@ -304,8 +360,12 @@ def decode_runs(wkbs) -> Runs:
     tot = int(run_len.sum())
     if tot:
         base = np.repeat(run_start, run_len) + _group_arange(run_len) * 16
-        bidx = (base[:, None] + np.arange(16, dtype=np.int64)).ravel()
-        coords = u8[bidx].view("<f8").reshape(tot, 2)
+        # one unaligned float64 view of the byte buffer: element k is
+        # the double at byte k, so x and y are one gather each
+        f8 = np.ndarray((len(u8) - 7,), dtype="<f8", buffer=u8, strides=(1,))
+        coords = np.empty((tot, 2))
+        coords[:, 0] = f8[base]
+        coords[:, 1] = f8[base + 8]
     else:
         base = np.empty(0, dtype=np.int64)
         coords = np.empty((0, 2))
@@ -331,7 +391,7 @@ def _per_run_reduce(values: np.ndarray, cstart: np.ndarray,
 
 def _scalar_fill(wkbs, rows, fn, out):
     for i in rows:
-        out[i] = fn(_loads_or_none(wkbs[i]))
+        out[i] = fn(W.loads_safe(wkbs[i]))
 
 
 def batch_area(wkbs) -> np.ndarray:
@@ -399,7 +459,7 @@ def batch_bounds(wkbs) -> np.ndarray:
             out[has, 3] = hi[has, 1]
     fb = np.nonzero(~R.ok & ~R.null)[0]
     for i in fb:
-        g = _loads_or_none(wkbs[i])
+        g = W.loads_safe(wkbs[i])
         if g is not None:
             out[i] = g.bounds()
     return out
@@ -619,8 +679,8 @@ def pair_intersects(awkbs, bwkbs) -> np.ndarray:
         out &= active
     fb = np.nonzero(~(A.ok & B.ok))[0]
     for i in fb:
-        ga = _loads_or_none(awkbs[i])
-        gb = _loads_or_none(bwkbs[i])
+        ga = W.loads_safe(awkbs[i])
+        gb = W.loads_safe(bwkbs[i])
         out[i] = P.intersects(ga, gb)
     return out
 
@@ -651,8 +711,8 @@ def pair_distance(awkbs, bwkbs) -> np.ndarray:
         out[active] = np.where(hit[active], 0.0, np.sqrt(d2[active]))
     fb = np.nonzero(~(A.ok & B.ok))[0]
     for i in fb:
-        out[i] = M.distance(_loads_or_none(awkbs[i]),
-                            _loads_or_none(bwkbs[i]))
+        out[i] = M.distance(W.loads_safe(awkbs[i]),
+                            W.loads_safe(bwkbs[i]))
     return out
 
 
@@ -677,13 +737,319 @@ def _runs_bounds(R: Runs) -> np.ndarray:
     return np.hstack([lo, hi])
 
 
-def _loads_or_none(b):
-    if b is None:
-        return None
-    try:
-        return W.loads(bytes(b))
-    except Exception:  # malformed rows must not kill the job
-        return None
+# ---------------------------------------------------------------------------
+# many-vs-one kernels (cell-join and cell-kNN general refine)
+# ---------------------------------------------------------------------------
+# Exact vectorized predicates and distance of MANY left rows of one
+# Runs against ONE right Geom ``g``.  The decomposition is exact in 2D
+# because for two non-crossing segment sets the minimum distance is
+# always attained at a vertex of one set against a segment of the
+# other, and two geometries with non-touching boundaries are either
+# disjoint or one is entirely inside the other (so a single vertex
+# witnesses containment):
+#
+#   intersects(a, g) = any a-vertex within EPS of g          (A)
+#                    | any a-segment touches any g-segment   (B)
+#                    | any g-vertex strictly inside poly(a)  (C)
+#   dwithin(a, g, d) = intersects(a, g)
+#                    | min a-verts -> g        <= d          (D)
+#                    | min g-verts -> a-segs   <= d          (E)
+#
+# A right group's owner stacks are gathered from ``Runs.segs`` /
+# ``Runs.stacks`` with the CSR ``grid.gather`` (positions in ``sel``
+# are the owners).  (A)/(D) are one points_to_geom_dist call over the
+# vertex stack; (B) is ``_seg_contact``; (C) is ``_parity`` per
+# g-vertex (holes and multi-parts compose by XOR exactly as in
+# _ring_even_odd); (E) is ``_owner_min_d2``.  No per-pair Python — the
+# loops run per g-vertex or per owner block, never per candidate pair.
+
+_CONTAINMENT = ("contains", "within", "covers", "covered_by",
+                "contains_properly")
+_NEEDS_INTERSECTS = ("touches", "crosses", "overlaps", "equals")
+
+
+def decode_canonical(wkbs) -> Runs:
+    """``decode_runs``, with rows it cannot represent but ``loads`` can
+    (big-endian, SRID, Z/M) re-encoded once to canonical little-endian
+    2D WKB, so only GEOMETRYCOLLECTION and malformed rows stay ~ok."""
+    R = decode_runs(wkbs)
+    redo = np.flatnonzero(~R.ok & ~R.null)
+    if not len(redo):
+        return R
+    wkbs = list(wkbs)
+    for i in redo:
+        g = W.loads_safe(wkbs[i])
+        if g is not None and g.type_id != GEOMETRYCOLLECTION:
+            wkbs[i] = W.dumps_ext(g, output_dimension=2)
+    return decode_runs(wkbs)
+
+
+def _gather(items, owner, sel):
+    """The items of the rows ``sel`` from an owner-sorted stack ->
+    (stack, position in ``sel`` per item, item count per position)."""
+    pos, k = G.gather(owner, sel)
+    return np.take(items, k, axis=0), pos, np.bincount(pos, minlength=len(sel))
+
+
+def _seg_blocks(counts: np.ndarray, cap: int = 65536):
+    """Contiguous owner ranges whose item totals stay <= cap (each with
+    >= 1 owner) -> yields (owner_lo, owner_hi, item_lo, item_hi)."""
+    n = len(counts)
+    i, pos = 0, 0
+    while i < n:
+        j, tot, p0 = i, 0, pos
+        while j < n and (tot == 0 or tot + counts[j] <= cap):
+            tot += counts[j]
+            pos += counts[j]
+            j += 1
+        yield i, j, p0, pos
+        i = j
+
+
+def _owner_min_reduce(values: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Per-owner min over an owner-contiguous value stack; +inf for
+    zero-count owners.  reduceat runs only over NONEMPTY owners'
+    starts: clamping the out-of-range start of a trailing empty owner
+    would steal the preceding owner's last element."""
+    out = np.full(len(counts), np.inf)
+    nz = counts > 0
+    if nz.any():
+        starts = (np.cumsum(counts) - counts)[nz]
+        out[nz] = np.minimum.reduceat(values, starts)
+    return out
+
+
+def _seg_contact(s, sowner, gsegs, n, proper=False):
+    """bool (n,): the owner has a segment touching (``proper``: properly
+    crossing) a segment of ``gsegs``; chunked seg-cross matrix."""
+    out = np.zeros(n, dtype=bool)
+    step = max(1, 65536 // max(len(gsegs), 1))
+    for lo in range(0, len(s), step):
+        touch, crossing = P._seg_cross_matrix(s[lo:lo + step], gsegs)
+        hit = (crossing if proper else touch).any(axis=1)
+        if hit.any():
+            out |= np.bincount(sowner[lo:lo + step][hit],
+                               minlength=n).astype(bool)
+    return out
+
+
+def _parity(gv, p, powner, n):
+    """Yields per vertex of ``gv`` a bool (n,): the vertex is inside the
+    owner's polygon rings (even-odd ray cast over the owner-sorted
+    ring-segment stack ``p``)."""
+    x1, y1, x2, y2 = p[:, 0], p[:, 1], p[:, 2], p[:, 3]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for gx, gy in gv:
+            cond = (y1 > gy) != (y2 > gy)
+            xint = x1 + (gy - y1) * (x2 - x1) / (y2 - y1)
+            cross = cond & (gx < xint)
+            yield (np.bincount(powner[cross], minlength=n) % 2).astype(bool)
+
+
+def _owner_min_d2(gv, s, counts, blocks):
+    """(n,) per owner: the minimum squared distance from a vertex of
+    ``gv`` to the owner's segments (+inf without segments), evaluated
+    over the owner ``blocks`` of ``_seg_blocks(counts)``."""
+    out = np.full(len(counts), np.inf)
+    px, py = gv[:, 0][:, None], gv[:, 1][:, None]
+    for olo, ohi, ilo, ihi in blocks:
+        if ihi > ilo:
+            d2 = _pt_seg_d2(px, py, s[ilo:ihi]).min(axis=0)
+            out[olo:ohi] = _owner_min_reduce(d2, counts[olo:ohi])
+    return out
+
+
+def batch_predicate_one(R: Runs, sel, g, predicate: str,
+                        distance: float | None = None) -> np.ndarray:
+    """``predicate`` of the left rows ``sel`` of ``R`` against ONE right
+    Geom ``g`` -> bool (len(sel),).
+
+    intersects/dwithin are fully vectorized.  The containment family
+    runs the vectorized exact-negative filter ``_containment``, and
+    touches/crosses/overlaps/equals (which all require intersection)
+    the intersects pass; only their survivors run the exact scalar
+    predicate, so the scalar work is linear in the result size, not the
+    candidate count.  GEOMETRYCOLLECTION and malformed lefts take the
+    scalar predicate.  An unknown predicate raises ValueError."""
+    if predicate not in ("intersects", "dwithin", *_CONTAINMENT,
+                         *_NEEDS_INTERSECTS):
+        raise ValueError(f"no many-vs-one kernel for predicate "
+                         f"{predicate!r}")
+    scalar, args = getattr(P, predicate), \
+        ((distance,) if predicate == "dwithin" else ())
+    out = np.zeros(len(sel), dtype=bool)
+    if g is None or g.is_empty or not len(sel):
+        return out
+    if predicate in _CONTAINMENT:
+        verify = _containment(R, sel, g, predicate)
+    else:
+        out = _contact(R, sel, g, distance if predicate == "dwithin" else None)
+        verify = out.copy() if predicate in _NEEDS_INTERSECTS \
+            else np.zeros(len(sel), dtype=bool)
+    verify |= ~R.ok[sel] & ~R.null[sel]
+    for i in np.flatnonzero(verify):
+        a = R.geom(sel[i])
+        out[i] = a is not None and not a.is_empty and bool(scalar(a, g, *args))
+    return out
+
+
+def _contact(R: Runs, sel, g, distance):
+    """Vectorized intersects (``distance`` None) or dwithin, terms
+    (A)-(E) above."""
+    n = len(sel)
+    out = np.zeros(n, dtype=bool)
+    verts, vown, psegs, pown, _ = R.stacks()
+    dwithin = distance is not None
+    thresh = float(distance) if dwithin else _EPS
+
+    # (A)/(D): vertex stack -> one distance call
+    v, vowner, _ = _gather(verts, vown, sel)
+    if len(v):
+        hit = M.points_to_geom_dist(v[:, 0], v[:, 1], g) <= thresh
+        out |= np.bincount(vowner[hit], minlength=n).astype(bool)
+
+    gsegs, gv = M.segments(g), M.vertices(g)
+    s, sowner, scounts = _gather(*R.segs()[:2], sel)
+    # (B): boundary contact
+    if len(s) and len(gsegs) and not out.all():
+        out |= _seg_contact(s, sowner, gsegs, n)
+
+    # (C): any g-vertex inside a polygonal left
+    p, powner, _ = _gather(psegs, pown, sel)
+    if len(p) and len(gv) and not out.all():
+        for inside in _parity(gv, p, powner, n):
+            out |= inside
+            if out.all():
+                break
+
+    # (E): g-vertices -> left segments.  Also runs for `intersects`
+    # when g has no segments (point / multipoint right): a g-vertex on
+    # a left segment's INTERIOR is invisible to (A) (left vertices
+    # far), (B) (no g segments) and (C) (on-boundary ray casts are
+    # unreliable), so the EPS distance test is the exact witness.
+    if (dwithin or not len(gsegs)) and len(s) and len(gv) \
+            and not out.all():
+        out |= _owner_min_d2(gv, s, scounts,
+                             _seg_blocks(scounts)) <= thresh * thresh
+    return out
+
+
+def batch_distance_one(R: Runs, sel, g) -> np.ndarray:
+    """Exact distance from each left row ``sel`` of ``R`` to ONE right
+    Geom ``g``, vectorized over the owner stacks.  NaN for NULL and
+    empty lefts; GEOMETRYCOLLECTION and malformed lefts take
+    ``measure.distance``.
+
+    Exactness: between non-crossing segment sets the minimum is
+    attained at a vertex-to-segment pair, so min(left-verts→g,
+    g-verts→left-segs) covers it; interior cases (left vertex inside
+    polygonal g via points_to_geom_dist, g vertex inside polygonal
+    left via ring parity) and any segment contact force 0."""
+    n = len(sel)
+    out = np.full(n, np.inf)
+    if n == 0:
+        return out
+    if g is None or g.is_empty:
+        return np.full(n, np.nan)
+    verts, vown, psegs, pown, _ = R.stacks()
+
+    # (1) left vertices -> g (includes 0-inside for polygonal g)
+    v, _, vcounts = _gather(verts, vown, sel)
+    if len(v):
+        d = M.points_to_geom_dist(v[:, 0], v[:, 1], g)
+        out = np.minimum(out, _owner_min_reduce(d, vcounts))
+
+    gsegs, gv = M.segments(g), M.vertices(g)
+    s, sowner, scounts = _gather(*R.segs()[:2], sel)
+    # (2) g vertices -> left segments
+    if len(s) and len(gv):
+        out = np.minimum(out, np.sqrt(
+            _owner_min_d2(gv, s, scounts, _seg_blocks(scounts))))
+
+    # (3a) segment contact -> 0
+    if len(s) and len(gsegs):
+        out[_seg_contact(s, sowner, gsegs, n)] = 0.0
+
+    # (3b) any g vertex inside a polygonal left -> 0
+    p, powner, _ = _gather(psegs, pown, sel)
+    if len(p) and len(gv) and (out > 0).any():
+        for inside in _parity(gv, p, powner, n):
+            out[inside] = 0.0
+            if not (out > 0).any():
+                break
+
+    out[vcounts == 0] = np.nan
+    for i in np.flatnonzero(~R.ok[sel] & ~R.null[sel]):
+        out[i] = M.distance(R.geom(sel[i]), g)
+    return out
+
+
+def _containment(R: Runs, sel, g, predicate: str) -> np.ndarray:
+    """Containment family, left rows ``sel`` vs one right ``g`` -> the
+    candidates the exact scalar predicate must still verify.
+
+    Every variant requires one operand fully inside-or-on the other
+    (the "big" side).  Three vectorized NECESSARY conditions prune the
+    batch — (1) small's bbox nested in big's bbox, (2) every vertex of
+    small covered by big, (3) no proper boundary crossing when big is
+    polygonal (a proper crossing then puts points of small strictly
+    outside big; a lineal big may cover both crossing segments, as a
+    self-crossing line contains itself)."""
+    n = len(sel)
+    left_is_big = predicate in ("contains", "covers", "contains_properly")
+    gb = np.asarray(g.bounds(), dtype=np.float64)
+    verts, vown, psegs, pown, bounds = R.stacks()
+    lb = bounds[sel]
+    eps = _EPS
+    if np.isnan(gb[0]):
+        return np.zeros(n, dtype=bool)
+    valid = ~np.isnan(lb[:, 0])
+    if left_is_big:
+        cand = valid & (lb[:, 0] <= gb[0] + eps) & (lb[:, 1] <= gb[1] + eps) \
+            & (lb[:, 2] >= gb[2] - eps) & (lb[:, 3] >= gb[3] - eps)
+    else:
+        cand = valid & (gb[0] <= lb[:, 0] + eps) & (gb[1] <= lb[:, 1] + eps) \
+            & (gb[2] >= lb[:, 2] - eps) & (gb[3] >= lb[:, 3] - eps)
+    if not cand.any():
+        return cand
+
+    # (3) no proper crossing between left segments and g segments
+    gsegs = M.segments(g)
+    s, sowner, scounts = _gather(*R.segs()[:2], sel)
+    big_poly = (R.rtype[sel] == 3) | (R.rtype[sel] == 6) if left_is_big \
+        else g.type_id in (POLYGON, MULTIPOLYGON)
+    if len(s) and len(gsegs) and np.any(big_poly):
+        cand &= ~(_seg_contact(s, sowner, gsegs, n, proper=True) & big_poly)
+        if not cand.any():
+            return cand
+
+    # (2) every vertex of the SMALL side covered by the BIG side
+    if left_is_big:
+        # g's vertices vs each candidate left: even-odd parity over
+        # the left's polygon-ring stack OR within EPS of the left's
+        # segments (the latter also makes lineal lefts exact — a line
+        # covers a collinear sub-line).  Segment-less lefts (points)
+        # stay undecided here and go straight to the scalar verify.
+        gv = M.vertices(g)
+        p, powner, _ = _gather(psegs, pown, sel)
+        segless = scounts == 0
+        blocks = list(_seg_blocks(scounts))
+        for k, inside in enumerate(_parity(gv, p, powner, n)):
+            if (cand & ~inside & ~segless).any():
+                near = _owner_min_d2(gv[k:k + 1], s, scounts,
+                                     blocks) <= eps * eps
+                cand &= inside | near | segless
+            if not cand.any():
+                break
+    else:
+        # each left's vertices vs g: one vectorized covered call over
+        # the whole stacked vertex array
+        v, vowner, vcounts = _gather(verts, vown, sel)
+        cand &= vcounts > 0
+        if len(v) and cand.any():
+            cov = P._points_covered(v, g)
+            cand &= ~np.bincount(vowner[~cov], minlength=n).astype(bool)
+    return cand
 
 
 # -- header-only column accessors (type / Z / emptiness) ----------------
@@ -839,7 +1205,7 @@ def _canonical_rows(R: Runs) -> np.ndarray:
 def _scalar_rows(wkbs, rows, fn, out):
     from . import construct as _C  # noqa: F401  (callers pass kernels)
     for i in rows:
-        g = _loads_or_none(wkbs[i])
+        g = W.loads_safe(wkbs[i])
         r = fn(g)
         out[i] = None if r is None else W.dumps(r)
 

@@ -79,12 +79,6 @@ def cell_bounds(cell):
     return xmin, ymin, xmin + w, ymin + h
 
 
-def cell_boundary(cell_id: int) -> Geom:
-    """Cell -> box polygon (raster->vector direction of tiling)."""
-    xmin, ymin, xmax, ymax = (float(v) for v in cell_bounds(np.asarray([cell_id])))
-    return Geom.box(xmin, ymin, xmax, ymax)
-
-
 def k_ring(cell_id: int, k: int) -> np.ndarray:
     """All cells within Chebyshev distance k (the kNN expansion ring,
     analogue of the reference's bbox expansion, src/strtree.c:1165-1188).

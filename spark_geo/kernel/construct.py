@@ -795,14 +795,6 @@ def intersection(a: Geom | None, b: Geom | None) -> Geom | None:
     return LO.line_overlay(a, b, "intersection")
 
 
-def _is_axis_box(g: Geom) -> bool:
-    if g.type_id != POLYGON or len(g.rings) != 1 or len(g.rings[0]) != 5:
-        return False
-    xmin, ymin, xmax, ymax = g.bounds()
-    want = {(xmin, ymin), (xmin, ymax), (xmax, ymin), (xmax, ymax)}
-    return {tuple(p) for p in g.rings[0][:-1]} == want
-
-
 def difference(a: Geom | None, b: Geom | None) -> Geom | None:
     """Difference (reference set_operations.py:22-77): fast paths +
     Greiner–Hormann general overlay for polygon operands."""

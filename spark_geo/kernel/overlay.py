@@ -107,13 +107,6 @@ def _edge_intersections(s_nodes, c_nodes):
     return count
 
 
-def _next_vertex(n):
-    m = n.nxt
-    while m.inter:
-        m = m.nxt
-    return m
-
-
 class _Degenerate(Exception):
     pass
 

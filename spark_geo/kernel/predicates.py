@@ -66,13 +66,6 @@ def _ring_segs(ring):
     return np.hstack([ring[:-1], ring[1:]])
 
 
-def points_on_boundary(px, py, g: Geom) -> np.ndarray:
-    segs = M.segments(g)
-    if not len(segs):
-        return np.zeros(len(px), dtype=bool)
-    return M.points_to_segments_dist(px, py, segs) <= _EPS
-
-
 def points_in_polygon(px, py, g: Geom):
     """-> (strict_inside, on_boundary) bool arrays for a POLYGON /
     MULTIPOLYGON / collection-of-polygons geometry."""
@@ -356,33 +349,6 @@ def _segment_split_params(seg, segs) -> np.ndarray:
     if not ts:
         return np.empty(0, dtype=np.float64)
     return np.unique(np.concatenate(ts))
-
-
-def _ring_interior_point(ring: np.ndarray) -> np.ndarray | None:
-    """A point strictly inside the simple polygon bounded by ``ring``
-    (scanline at a y between two distinct vertex ys; midpoint of the
-    widest even-odd inside interval).  None if degenerate."""
-    if len(ring) < 4:
-        return None
-    ys = np.unique(ring[:, 1])
-    if len(ys) < 2:
-        return None
-    # a y strictly between vertex levels avoids horizontal-edge ties
-    yc = (ys[len(ys) // 2 - 1] + ys[len(ys) // 2]) / 2.0
-    x1, y1 = ring[:-1, 0], ring[:-1, 1]
-    x2, y2 = ring[1:, 0], ring[1:, 1]
-    crossing = (y1 > yc) != (y2 > yc)
-    if not crossing.any():
-        return None
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xs = x1[crossing] + (yc - y1[crossing]) * \
-            (x2[crossing] - x1[crossing]) / (y2[crossing] - y1[crossing])
-    xs = np.sort(xs)
-    if len(xs) < 2:
-        return None
-    widths = xs[1::2] - xs[0::2][: len(xs[1::2])]
-    k = int(np.argmax(widths))
-    return np.array([[(xs[2 * k] + xs[2 * k + 1]) / 2.0, yc]])
 
 
 def covers(a: Geom | None, b: Geom | None) -> bool:
@@ -756,421 +722,3 @@ def dwithin(a, b, distance: float) -> bool:
     if _bbox_disjoint(a, b, pad=distance):
         return False
     return bool(M.distance(a, b) <= distance)
-
-
-# ---------------------------------------------------------------------------
-# many-vs-one batch predicates (cell-join general refine)
-# ---------------------------------------------------------------------------
-# Exact vectorized `intersects`/`dwithin` of MANY decoded left
-# geometries against ONE right geometry.  The decomposition is exact in
-# 2D because for two non-crossing segment sets the minimum distance is
-# always attained at a vertex of one set against a segment of the
-# other, and two geometries with non-touching boundaries are either
-# disjoint or one is entirely inside the other (so a single vertex
-# witnesses containment):
-#
-#   intersects(a, g) = any a-vertex within EPS of g          (A)
-#                    | any a-segment touches any g-segment   (B)
-#                    | any g-vertex strictly inside poly(a)  (C)
-#   dwithin(a, g, d) = intersects(a, g)
-#                    | min a-verts -> g        <= d          (D)
-#                    | min g-verts -> a-segs   <= d          (E)
-#
-# (A)/(D) are one points_to_geom_dist call over the owner-sorted vertex
-# stack; (B) is the chunked _seg_cross_matrix with an owner any-reduce;
-# (C) is an even-odd ray cast of g's vertices against the owner-sorted
-# stack of polygon-ring segments (bincount parity per owner — holes and
-# multi-parts compose by XOR exactly as in _ring_even_odd); (E) is a
-# blocked distance matrix with minimum.reduceat per owner.  No per-pair
-# Python anywhere — the loops below run per OWNER-BLOCK (<= 65536
-# segments), not per candidate pair.
-
-
-def prepare_batch_lefts(geoms: list) -> dict:
-    """Per-geometry vertex/segment/polygon-ring-segment arrays, computed
-    ONCE per Arrow batch and reused across every right-group a left
-    geometry is a candidate of."""
-    verts, segs, psegs, bounds = [], [], [], []
-    for g in geoms:
-        if g is None or g.is_empty:
-            verts.append(np.empty((0, 2)))
-            segs.append(np.empty((0, 4)))
-            psegs.append(np.empty((0, 4)))
-            bounds.append((np.nan,) * 4)
-            continue
-        verts.append(M.vertices(g))
-        segs.append(M.segments(g))
-        pr = [_ring_segs(r) for p in _iter_polygons(g)
-              for r in p.rings if len(r) >= 4]
-        psegs.append(np.vstack(pr) if pr else np.empty((0, 4)))
-        bounds.append(g.bounds())
-    return {"verts": verts, "segs": segs, "psegs": psegs,
-            "bounds": np.asarray(bounds, dtype=np.float64),
-            "geoms": list(geoms)}
-
-
-def _owner_stack(arrs: list, sel: np.ndarray):
-    """Stack per-owner arrays for the selected owners -> (stacked,
-    owner_of_item, counts).  Owner ids are positions in ``sel``."""
-    chosen = [arrs[i] for i in sel]
-    counts = np.array([len(a) for a in chosen], dtype=np.int64)
-    if counts.sum() == 0:
-        return np.empty((0, chosen[0].shape[1] if chosen else 2)), \
-            np.empty(0, np.int64), counts
-    stacked = np.vstack([a for a in chosen if len(a)])
-    owners = np.repeat(np.arange(len(sel), dtype=np.int64), counts)
-    return stacked, owners, counts
-
-
-def _seg_blocks(counts: np.ndarray, cap: int = 65536):
-    """Contiguous owner ranges whose item totals stay <= cap (each with
-    >= 1 owner) -> yields (owner_lo, owner_hi, item_lo, item_hi)."""
-    n = len(counts)
-    i, pos = 0, 0
-    while i < n:
-        j, tot, p0 = i, 0, pos
-        while j < n and (tot == 0 or tot + counts[j] <= cap):
-            tot += counts[j]
-            pos += counts[j]
-            j += 1
-        yield i, j, p0, pos
-        i = j
-
-
-def _owner_min_reduce(values: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Per-owner min over an owner-contiguous value stack; +inf for
-    zero-count owners.  reduceat runs only over NONEMPTY owners'
-    starts — clamping the out-of-range start of a trailing empty owner
-    (the previous approach) stole the preceding owner's last element
-    from its reduction range (r4 fix, found by the batch-distance
-    property test)."""
-    n = len(counts)
-    out = np.full(n, np.inf)
-    nz = counts > 0
-    if nz.any():
-        starts = (np.cumsum(counts) - counts)[nz]
-        out[nz] = np.minimum.reduceat(values, starts)
-    return out
-
-
-def batch_predicate_one(prep: dict, sel: np.ndarray, g, predicate: str,
-                        distance: float | None = None) -> np.ndarray | None:
-    """Vectorized predicate of the selected prepared lefts against one
-    right geometry -> bool (len(sel),), or None when ``predicate`` has
-    no batch path (caller falls back to the exact scalar kernels).
-
-    intersects/dwithin are fully vectorized.  The containment family
-    (contains / within / covers / covered_by / contains_properly, r4)
-    runs a vectorized EXACT-NEGATIVE filter (bbox nesting + every
-    vertex of the smaller operand covered + no proper boundary
-    crossing — all necessary conditions) and hands only the survivors
-    to the exact scalar kernels, so the scalar work is linear in the
-    RESULT size, not the candidate count (VERDICT r3 item 3)."""
-    if predicate in _CONTAINMENT_PREDS:
-        return _batch_containment(prep, sel, g, predicate)
-    if predicate in _INTERSECTING_PREDS:
-        # touches/crosses/overlaps/equals all REQUIRE intersects: run
-        # the vectorized intersects pass first, scalar-verify only its
-        # survivors (linear in the intersecting pairs, r4)
-        hits = batch_predicate_one(prep, sel, g, "intersects")
-        fn = _SCALAR_INTERSECTING[predicate]
-        geoms = prep["geoms"]
-        out = np.zeros(len(sel), dtype=bool)
-        for i in np.nonzero(hits)[0]:
-            a = geoms[sel[i]]
-            if a is not None and not a.is_empty:
-                out[i] = fn(a, g)
-        return out
-    if predicate not in ("intersects", "dwithin"):
-        return None
-    n = len(sel)
-    out = np.zeros(n, dtype=bool)
-    if g is None or g.is_empty or n == 0:
-        return out
-    pad = float(distance) if predicate == "dwithin" else 0.0
-
-    # (A)/(D): owner-sorted vertex stack -> one distance call
-    v, vowner, vcounts = _owner_stack(prep["verts"], sel)
-    if len(v):
-        d = M.points_to_geom_dist(v[:, 0], v[:, 1], g)
-        hit = d <= (_EPS if predicate == "intersects" else pad)
-        out |= np.bincount(vowner[hit], minlength=n).astype(bool)
-
-    gsegs = M.segments(g)
-    s, sowner, scounts = _owner_stack(prep["segs"], sel)
-
-    # (B): boundary contact, chunked seg-cross matrix
-    if len(s) and len(gsegs) and not out.all():
-        step = max(1, 65536 // max(len(gsegs), 1))
-        for lo in range(0, len(s), step):
-            touch, _ = _seg_cross_matrix(s[lo:lo + step], gsegs)
-            th = touch.any(axis=1)
-            if th.any():
-                out |= np.bincount(sowner[lo:lo + step][th],
-                                   minlength=n).astype(bool)
-
-    # (C): any g-vertex inside a polygonal left (even-odd parity over
-    # the owner-sorted polygon-ring segment stack)
-    p, powner, pcounts = _owner_stack(prep["psegs"], sel)
-    gv = M.vertices(g)
-    if len(p) and len(gv) and not out.all():
-        x1, y1, x2, y2 = p[:, 0], p[:, 1], p[:, 2], p[:, 3]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for k in range(len(gv)):
-                gx, gy = gv[k, 0], gv[k, 1]
-                cond = (y1 > gy) != (y2 > gy)
-                xint = x1 + (gy - y1) * (x2 - x1) / (y2 - y1)
-                cross = cond & (gx < xint)
-                par = np.bincount(powner[cross], minlength=n) % 2
-                out |= par.astype(bool)
-                if out.all():
-                    break
-
-    # (E): g-vertices -> left segments, blocked per-owner min distance.
-    # Also runs for `intersects` when g has no segments (point /
-    # multipoint right): a g-vertex on a left segment's INTERIOR is
-    # invisible to (A) (left vertices far), (B) (no g segments) and
-    # (C) (on-boundary ray casts are unreliable), so the EPS distance
-    # test is the exact witness.
-    need_e = predicate == "dwithin" or (predicate == "intersects"
-                                        and len(gsegs) == 0)
-    thresh = pad if predicate == "dwithin" else _EPS
-    if need_e and len(s) and len(gv) and not out.all():
-        for olo, ohi, ilo, ihi in _seg_blocks(scounts):
-            blk = s[ilo:ihi]
-            if not len(blk):
-                continue
-            bcounts = scounts[olo:ohi]
-            x1, y1 = blk[:, 0][None, :], blk[:, 1][None, :]
-            dx = blk[:, 2][None, :] - x1
-            dy = blk[:, 3][None, :] - y1
-            len2 = dx * dx + dy * dy
-            safe = np.where(len2 == 0, 1.0, len2)
-            px, py = gv[:, 0][:, None], gv[:, 1][:, None]
-            t = np.clip(((px - x1) * dx + (py - y1) * dy) / safe, 0.0, 1.0)
-            t = np.where(len2 == 0, 0.0, t)
-            dist2 = (px - (x1 + t * dx)) ** 2 + (py - (y1 + t * dy)) ** 2
-            dmin = dist2.min(axis=0)  # min over g's vertices, per segment
-            omin = _owner_min_reduce(dmin, bcounts)
-            ok = omin <= thresh * thresh
-            if ok.any():
-                idx = np.arange(olo, ohi)[ok]
-                out[idx] = True
-    return out
-
-
-def batch_distance_one(prep: dict, sel: np.ndarray, g) -> np.ndarray:
-    """Exact distance from each selected prepared left to ONE right
-    geometry, vectorized over the owner stacks (r4 — VERDICT r3 item
-    7: the general kNN refine ran a per-pair Python loop).  NaN for
-    None/empty lefts.
-
-    Exactness: between non-crossing segment sets the minimum is
-    attained at a vertex-to-segment pair, so min(left-verts→g,
-    g-verts→left-segs) covers it; interior cases (left vertex inside
-    polygonal g via points_to_geom_dist, g vertex inside polygonal
-    left via ring parity) and any segment contact force 0."""
-    n = len(sel)
-    out = np.full(n, np.inf)
-    if n == 0:
-        return out
-    if g is None or g.is_empty:
-        return np.full(n, np.nan)
-
-    # (1) left vertices -> g (includes 0-inside for polygonal g)
-    v, vowner, vcounts = _owner_stack(prep["verts"], sel)
-    if len(v):
-        d = M.points_to_geom_dist(v[:, 0], v[:, 1], g)
-        out = np.minimum(out, _owner_min_reduce(d, vcounts))
-
-    gv = M.vertices(g)
-    gsegs = M.segments(g)
-    s, sowner, scounts = _owner_stack(prep["segs"], sel)
-
-    # (2) g vertices -> left segments, blocked per-owner min
-    if len(s) and len(gv):
-        for olo, ohi, ilo, ihi in _seg_blocks(scounts):
-            blk = s[ilo:ihi]
-            if not len(blk):
-                continue
-            bcounts = scounts[olo:ohi]
-            x1, y1 = blk[:, 0][None, :], blk[:, 1][None, :]
-            dx = blk[:, 2][None, :] - x1
-            dy = blk[:, 3][None, :] - y1
-            len2 = dx * dx + dy * dy
-            safe = np.where(len2 == 0, 1.0, len2)
-            px, py = gv[:, 0][:, None], gv[:, 1][:, None]
-            t = np.clip(((px - x1) * dx + (py - y1) * dy) / safe, 0.0, 1.0)
-            t = np.where(len2 == 0, 0.0, t)
-            dist2 = (px - (x1 + t * dx)) ** 2 + (py - (y1 + t * dy)) ** 2
-            dmin = np.sqrt(dist2.min(axis=0))
-            out[olo:ohi] = np.minimum(out[olo:ohi],
-                                      _owner_min_reduce(dmin, bcounts))
-
-    # (3a) segment contact -> 0
-    if len(s) and len(gsegs):
-        step = max(1, 65536 // max(len(gsegs), 1))
-        for lo in range(0, len(s), step):
-            touch, _ = _seg_cross_matrix(s[lo:lo + step], gsegs)
-            th = touch.any(axis=1)
-            if th.any():
-                hit = np.bincount(sowner[lo:lo + step][th],
-                                  minlength=n).astype(bool)
-                out[hit] = 0.0
-
-    # (3b) any g vertex inside a polygonal left -> 0
-    p, powner, pcounts = _owner_stack(prep["psegs"], sel)
-    if len(p) and len(gv) and (out > 0).any():
-        x1, y1, x2, y2 = p[:, 0], p[:, 1], p[:, 2], p[:, 3]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for k in range(len(gv)):
-                gx, gy = gv[k, 0], gv[k, 1]
-                cond = (y1 > gy) != (y2 > gy)
-                xint = x1 + (gy - y1) * (x2 - x1) / (y2 - y1)
-                cross = cond & (gx < xint)
-                par = (np.bincount(powner[cross], minlength=n)
-                       % 2).astype(bool)
-                out[par] = 0.0
-                if not (out > 0).any():
-                    break
-
-    # empty lefts -> NaN (no vertices at all)
-    has_v = np.array([len(prep["verts"][i]) > 0 for i in sel])
-    out[~has_v] = np.nan
-    return out
-
-
-_CONTAINMENT_PREDS = {"contains", "within", "covers", "covered_by",
-                      "contains_properly"}
-
-_INTERSECTING_PREDS = {"touches", "crosses", "overlaps", "equals"}
-
-_SCALAR_INTERSECTING = {
-    "touches": lambda a, b: touches(a, b),
-    "crosses": lambda a, b: crosses(a, b),
-    "overlaps": lambda a, b: overlaps(a, b),
-    "equals": lambda a, b: equals(a, b),
-}
-
-_SCALAR_CONTAINMENT = {
-    "contains": lambda a, b: contains(a, b),
-    "within": lambda a, b: within(a, b),
-    "covers": lambda a, b: covers(a, b),
-    "covered_by": lambda a, b: covered_by(a, b),
-    "contains_properly": lambda a, b: contains_properly(a, b),
-}
-
-
-def _batch_containment(prep: dict, sel: np.ndarray, g,
-                       predicate: str) -> np.ndarray:
-    """Containment family, many prepared lefts vs one right ``g``.
-
-    Every variant requires one operand fully inside-or-on the other
-    (the "big" side).  Three vectorized NECESSARY conditions prune the
-    batch — (1) small's bbox nested in big's bbox, (2) every vertex of
-    small covered by big, (3) no proper boundary crossing (a proper
-    crossing puts points of small strictly outside big) — then ONLY
-    the survivors run the exact scalar kernel (split-midpoint covers,
-    hole probes, interior-intersection), making the scalar cost linear
-    in the result size."""
-    n = len(sel)
-    out = np.zeros(n, dtype=bool)
-    if g is None or g.is_empty or n == 0:
-        return out
-    left_is_big = predicate in ("contains", "covers", "contains_properly")
-    gb = np.asarray(g.bounds(), dtype=np.float64)
-    lb = prep["bounds"][sel]
-    eps = _EPS
-    if np.isnan(gb[0]):
-        return out
-    valid = ~np.isnan(lb[:, 0])
-    if left_is_big:
-        cand = valid & (lb[:, 0] <= gb[0] + eps) & (lb[:, 1] <= gb[1] + eps) \
-            & (lb[:, 2] >= gb[2] - eps) & (lb[:, 3] >= gb[3] - eps)
-    else:
-        cand = valid & (gb[0] <= lb[:, 0] + eps) & (gb[1] <= lb[:, 1] + eps) \
-            & (gb[2] >= lb[:, 2] - eps) & (gb[3] >= lb[:, 3] - eps)
-    if not cand.any():
-        return out
-
-    gsegs = M.segments(g)
-    s, sowner, scounts = _owner_stack(prep["segs"], sel)
-
-    # (3) no proper crossing between left segments and g segments
-    if len(s) and len(gsegs):
-        step = max(1, 65536 // max(len(gsegs), 1))
-        for lo in range(0, len(s), step):
-            _, proper = _seg_cross_matrix(s[lo:lo + step], gsegs)
-            ph = proper.any(axis=1)
-            if ph.any():
-                cand &= ~np.bincount(sowner[lo:lo + step][ph],
-                                     minlength=n).astype(bool)
-        if not cand.any():
-            return out
-
-    # (2) every vertex of the SMALL side covered by the BIG side
-    if left_is_big:
-        # g's vertices vs each candidate left: even-odd parity over
-        # the left's polygon-ring stack OR within EPS of the left's
-        # segments (the latter also makes lineal lefts exact — a line
-        # covers a collinear sub-line).  Segment-less lefts (points)
-        # stay undecided here and go straight to the scalar verify.
-        gv = M.vertices(g)
-        p, powner, pcounts = _owner_stack(prep["psegs"], sel)
-        segless = scounts == 0
-        if len(gv) and cand.any():
-            px1, py1, px2, py2 = (p[:, i] for i in range(4)) if len(p) \
-                else (np.empty(0),) * 4
-            with np.errstate(divide="ignore", invalid="ignore"):
-                for k in range(len(gv)):
-                    gx, gy = gv[k, 0], gv[k, 1]
-                    if len(p):
-                        pcond = (py1 > gy) != (py2 > gy)
-                        xint = px1 + (gy - py1) * (px2 - px1) / (py2 - py1)
-                        cross = pcond & (gx < xint)
-                        inside = (np.bincount(powner[cross], minlength=n)
-                                  % 2).astype(bool)
-                    else:
-                        inside = np.zeros(n, dtype=bool)
-                    miss = cand & ~inside & ~segless
-                    if miss.any():
-                        near = _near_segs_per_owner(gx, gy, s, sowner,
-                                                    n, eps) \
-                            if len(s) else np.zeros(n, dtype=bool)
-                        cand &= inside | near | segless
-                    if not cand.any():
-                        break
-    else:
-        # each left's vertices vs g: one vectorized covered call over
-        # the whole stacked vertex array
-        v, vowner, vcounts = _owner_stack(prep["verts"], sel)
-        has_v = np.bincount(vowner, minlength=n).astype(bool) \
-            if len(v) else np.zeros(n, dtype=bool)
-        cand &= has_v
-        if len(v) and cand.any():
-            cov = _points_covered(v, g)
-            uncovered = np.bincount(vowner[~cov], minlength=n).astype(bool)
-            cand &= ~uncovered
-
-    # exact scalar verify on the survivors only
-    fn = _SCALAR_CONTAINMENT[predicate]
-    geoms = prep["geoms"]
-    for i in np.nonzero(cand)[0]:
-        a = geoms[sel[i]]
-        if a is None or a.is_empty:
-            continue
-        out[i] = fn(a, g)
-    return out
-
-
-def _near_segs_per_owner(gx, gy, p, powner, n, eps):
-    """bool (n,): owner has a segment within eps of point (gx, gy)."""
-    x1, y1, x2, y2 = p[:, 0], p[:, 1], p[:, 2], p[:, 3]
-    dx, dy = x2 - x1, y2 - y1
-    len2 = dx * dx + dy * dy
-    safe = np.where(len2 == 0, 1.0, len2)
-    t = np.clip(((gx - x1) * dx + (gy - y1) * dy) / safe, 0.0, 1.0)
-    t = np.where(len2 == 0, 0.0, t)
-    d2 = (gx - (x1 + t * dx)) ** 2 + (gy - (y1 + t * dy)) ** 2
-    hit = d2 <= eps * eps
-    return np.bincount(powner[hit], minlength=n).astype(bool)

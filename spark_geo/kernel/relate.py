@@ -33,14 +33,6 @@ def _boundary(g: Geom) -> Geom | None:
     return None if (b is None or b.is_empty) else b
 
 
-def _strict_inside_samples(x: Geom, area: Geom) -> bool:
-    pts = P._sample_points(x)
-    if not len(pts):
-        return False
-    inside, _ = P.points_in_polygon(pts[:, 0], pts[:, 1], area)
-    return bool(inside.any())
-
-
 def _on_lines(x_pts: np.ndarray, lines: Geom) -> np.ndarray:
     segs = M.segments(lines)
     if not len(segs) or not len(x_pts):

@@ -225,6 +225,18 @@ def loads(b: bytes | None) -> Geom | None:
     return g
 
 
+def loads_safe(b) -> Geom | None:
+    """``loads`` that answers None for NULL and malformed bytes (a
+    poisoned row must not kill a 10^12-row job — mirrors
+    on_invalid='ignore', reference io.py:27-29)."""
+    if b is None:
+        return None
+    try:
+        return loads(b)
+    except (ValueError, KeyError, IndexError, struct.error):
+        return None
+
+
 def _dec(b: bytes, off: int):
     if off + 5 > len(b):
         raise ValueError("WKB truncated")

@@ -309,7 +309,8 @@ def cell_nearest_all(left: DataFrame, right: DataFrame, *,
     3. One equi-join on cell feeds the distance: Catalyst ``hypot`` for
        points (``assume_points=True``), else an id-only pair shuffle,
        a geometry equi-join by id and join._run_refine's grouped
-       ``batch_distance_one`` (join._distance_refine).  Each pair keeps
+       ``batchwkb.batch_distance_one`` over each batch's decode_runs
+       owner stacks (join._distance_refine).  Each pair keeps
        the Chebyshev ring of its closest cell pair, so the ring limit
        is exact.  Ties are exact float equality (replacing the
        reference's 1e-6 distance inflation, src/strtree.c:654-695).

@@ -556,9 +556,10 @@ def connected_components(pairs: DataFrame, src: str = "da", dst: str = "db",
                 state = json.load(f)
         if state is not None:
             labels = spark.read.parquet(
-                os.path.join(checkpoint_dir, f"cc_labels_r{state['round']}"))
+                os.path.join(checkpoint_dir, f"cc_labels_r{state['round']}")
+            ).select("node", "component")
             if state.get("converged"):
-                return labels.select("node", "component")
+                return labels
             start = state["round"]
         else:
             labels_path = os.path.join(checkpoint_dir, "cc_labels_r0")
@@ -583,16 +584,15 @@ def connected_components(pairs: DataFrame, src: str = "da", dst: str = "db",
         prop = (edges.join(labels, edges["_s"] == labels["node"])
                 .groupBy(F.col("_d").alias("node"))
                 .agg(F.min("component").alias("_nbr_min")))
-        new_labels = persist(
+        # the changed flag is computed and materialized with the new
+        # label, so detecting the fixpoint needs no join back to the
+        # previous round's labels
+        least = F.least("component", F.coalesce("_nbr_min", "component"))
+        labels = persist(
             labels.join(prop, "node", "left")
-            .select("node",
-                    F.least("component", F.coalesce("_nbr_min", "component"))
-                    .alias("component")), rnd)
-        changed = (new_labels.join(labels.withColumnRenamed("component", "_old"),
-                                   "node")
-                   .where(F.col("component") != F.col("_old"))
-                   .limit(1).count())
-        labels = new_labels
+            .select("node", least.alias("component"),
+                    (least < F.col("component")).alias("_changed")), rnd)
+        changed = labels.where("_changed").limit(1).count()
         done(False, rnd)
         if changed == 0:
             converged = True

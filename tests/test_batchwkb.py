@@ -393,3 +393,33 @@ def test_batch_constructive_matches_scalar(batch_fn, scalar_fn):
     for i, b in enumerate(col):
         want = _scalar_wkb(fn, b)
         assert got[i] == want, (scalar_fn, i, got[i], want)
+
+
+_MALFORMED = {
+    "null": None,
+    "bytearray": bytearray(b"\x01\x01\x00\x00\x00\x00\x00"),
+    "truncated_header": b"\x01\x02\x00",
+    "truncated_coords": b"\x01\x02\x00\x00\x00\x03\x00\x00\x00" + b"\0" * 20,
+    "unknown_type": b"\x01\x63\x00\x00\x00" + b"\0" * 16,
+    "huge_count": b"\x01\x06\x00\x00\x00\xff\xff\xff\xff" + b"\0" * 16,
+}
+
+
+@pytest.mark.parametrize("raw", list(_MALFORMED.values()), ids=list(_MALFORMED))
+def test_malformed_rows_answer_none(raw):
+    """One tolerant loader behind the column UDFs and the batch kernels:
+    a malformed row answers None / False / NaN and never raises."""
+    import pandas as pd
+    from spark_geo import functions as SG
+    from spark_geo.kernel.geom import Geom
+    assert W.loads_safe(raw) is None
+    # column UDF body (scalar path) and a batch column kernel
+    assert SG.st_num_coordinates.func(pd.Series([raw], dtype=object)).isna().all()
+    assert np.isnan(BW.batch_area([raw])[0])
+    assert not BW.pair_intersects([raw], [raw])[0]
+    # many-vs-one refine kernels
+    R = BW.decode_canonical([raw])
+    box = Geom.box(-1, -1, 1, 1)
+    for pred in ("intersects", "within", "touches"):
+        assert not BW.batch_predicate_one(R, np.arange(1), box, pred)[0]
+    assert np.isnan(BW.batch_distance_one(R, np.arange(1), box)[0])

@@ -8,10 +8,12 @@ point_polygon_testdata — points (i, i) i=0..5 vs box(2,2,4,4)
 import numpy as np
 import pytest
 
+from spark_geo.kernel import batchwkb as BW
 from spark_geo.kernel import measure as M
 from spark_geo.kernel import predicates as P
+from spark_geo.kernel import wkb as W
 from spark_geo.kernel import wkt
-from spark_geo.kernel.geom import Geom
+from spark_geo.kernel.geom import GEOMETRYCOLLECTION, LINESTRING, POINT, Geom
 
 BOX = Geom.box(2, 2, 4, 4)
 POINTS = [Geom.point(i, i) for i in range(6)]
@@ -278,11 +280,33 @@ def test_is_valid_reason_multipolygon_with_empty_part():
     assert U.is_valid_reason(bad) != "Valid Geometry"
 
 
+def _exotic_wkbs(a, b):
+    """Left rows decode_runs cannot read as they are, built from two
+    geometries: big-endian, EWKB SRID, ISO Z, a GEOMETRYCOLLECTION, a
+    truncated row, POINT EMPTY and NULL."""
+    with_srid = W.loads(W.dumps(a))
+    with_srid.srid = 4326
+    v = M.vertices(b)
+    z = Geom(LINESTRING, v.copy(), has_z=True, zs=np.full(len(v), 2.5))
+    return [W.dumps_ext(a, byte_order=0), W.dumps(with_srid), W.dumps(z),
+            W.dumps(Geom(GEOMETRYCOLLECTION, parts=[a, b])),
+            W.dumps(b)[:-3], W.dumps(Geom(POINT)), None]
+
+
+def _left_rows(lefts, fallback):
+    """The lefts as WKB (round trip) plus the exotic rows, the Runs the
+    refine builds from them, and the Geom each row means to the scalar
+    kernels."""
+    real = [x for x in lefts if x is not None] or [fallback]
+    wkbs = [W.dumps(x) for x in lefts] + _exotic_wkbs(real[0], real[-1])
+    return BW.decode_canonical(wkbs), [W.loads_safe(w) for w in wkbs]
+
+
 def test_batch_predicate_one_matches_scalar():
     """Property: the many-vs-one batch kernel (cell-join refine path)
     agrees with the exact scalar predicates on random mixed geometries
-    (points / lines / convex polys / holed polys), including None."""
-    import numpy as np
+    (points / lines / convex polys / holed polys), including None and
+    the encodings decode_runs cannot read directly."""
     rng = np.random.default_rng(7)
 
     def rand_geom(kind, cx, cy, s):
@@ -314,8 +338,8 @@ def test_batch_predicate_one_matches_scalar():
             lefts[0] = None
         g = rand_geom(int(rng.integers(0, 4)), rng.uniform(-5, 5),
                       rng.uniform(-5, 5), rng.uniform(0.3, 2.5))
-        prep = P.prepare_batch_lefts(lefts)
-        sel = np.arange(nleft)
+        R, geoms = _left_rows(lefts, g)
+        sel = np.arange(len(geoms))
         scalar = {"intersects": P.intersects, "dwithin": P.dwithin,
                   "contains": P.contains, "within": P.within,
                   "covers": P.covers, "covered_by": P.covered_by,
@@ -329,8 +353,8 @@ def test_batch_predicate_one_matches_scalar():
                            ("contains_properly", None),
                            ("touches", None), ("crosses", None),
                            ("overlaps", None), ("equals", None)]:
-            got = P.batch_predicate_one(prep, sel, g, pred, dist)
-            for i, a in enumerate(lefts):
+            got = BW.batch_predicate_one(R, sel, g, pred, dist)
+            for i, a in enumerate(geoms):
                 if a is None:
                     want = False
                 elif pred == "dwithin":
@@ -338,15 +362,17 @@ def test_batch_predicate_one_matches_scalar():
                 else:
                     want = scalar[pred](a, g)
                 assert bool(got[i]) == bool(want), (rep, i, pred, dist)
-    # an unknown predicate still signals scalar fallback
-    assert P.batch_predicate_one(P.prepare_batch_lefts([]), np.arange(0),
-                                 Geom.point(0, 0), "relate") is None
+    # an unknown predicate has no batch path
+    with pytest.raises(ValueError):
+        BW.batch_predicate_one(BW.decode_runs([]), np.arange(0),
+                               Geom.point(0, 0), "relate")
 
 
 def test_batch_distance_one_matches_scalar():
     """Property: the vectorized many-vs-one pair distance equals the
-    scalar kernel on random mixed geometries (r4, kNN refine path)."""
-    import numpy as np
+    scalar kernel on random mixed geometries (kNN refine path),
+    including None and the encodings decode_runs cannot read
+    directly."""
     rng = np.random.default_rng(13)
 
     def rand_geom(kind, cx, cy, s):
@@ -373,9 +399,9 @@ def test_batch_distance_one_matches_scalar():
             lefts[0] = None
         g = rand_geom(int(rng.integers(0, 4)), rng.uniform(-6, 6),
                       rng.uniform(-6, 6), rng.uniform(0.3, 2.5))
-        prep = P.prepare_batch_lefts(lefts)
-        got = P.batch_distance_one(prep, np.arange(nleft), g)
-        for i, a in enumerate(lefts):
+        R, geoms = _left_rows(lefts, g)
+        got = BW.batch_distance_one(R, np.arange(len(geoms)), g)
+        for i, a in enumerate(geoms):
             want = M.distance(a, g) if a is not None else np.nan
             if np.isnan(want):
                 assert np.isnan(got[i]), (rep, i)
@@ -386,7 +412,9 @@ def test_batch_distance_one_matches_scalar():
 def test_batch_containment_nested_boxes():
     """Deterministic containment sweep: nested / touching / crossing /
     disjoint boxes and lineal covers through the batch kernel."""
-    import numpy as np
+    def runs(geoms):
+        return BW.decode_canonical([W.dumps(a) for a in geoms])
+
     lefts = [Geom.box(0, 0, 10, 10),              # contains g
              Geom.box(2, 2, 8, 8),                # equals g's interior? no: within g
              Geom.box(2, 2, 30, 30),              # crosses g
@@ -396,27 +424,31 @@ def test_batch_containment_nested_boxes():
              Geom.linestring([(2, 2), (8, 8)]),   # within g
              None]
     g = Geom.box(2, 2, 8, 8)
-    prep = P.prepare_batch_lefts(lefts)
+    R = runs(lefts)
     sel = np.arange(len(lefts))
     for pred, fn in [("contains", P.contains), ("within", P.within),
                      ("covers", P.covers), ("covered_by", P.covered_by),
                      ("contains_properly", P.contains_properly)]:
-        got = P.batch_predicate_one(prep, sel, g, pred)
+        got = BW.batch_predicate_one(R, sel, g, pred)
         want = [False if a is None else fn(a, g) for a in lefts]
         assert [bool(x) for x in got] == want, pred
     # the holed left (index 4) must NOT contain g (hole inside g's span)
-    got_c = P.batch_predicate_one(prep, sel, g, "contains")
+    got_c = BW.batch_predicate_one(R, sel, g, "contains")
     assert not got_c[4]
     # lineal covers: a line covering a collinear sub-line
     l_lefts = [Geom.linestring([(0, 0), (10, 0)]),
                Geom.linestring([(0, 1), (10, 1)])]
-    lp = P.prepare_batch_lefts(l_lefts)
     sub = Geom.linestring([(2, 0), (7, 0)])
-    got_l = P.batch_predicate_one(lp, np.arange(2), sub, "covers")
+    got_l = BW.batch_predicate_one(runs(l_lefts), np.arange(2), sub, "covers")
     assert bool(got_l[0]) and not bool(got_l[1])
+    # a self-crossing line covers itself although its segments cross
+    # properly: the crossing filter prunes only for a polygonal big side
+    loop = Geom.linestring([(0, 0), (4, 4), (4, 0), (0, 4)])
+    for pred in ("contains", "covers", "within", "covered_by"):
+        assert BW.batch_predicate_one(runs([loop]), np.arange(1), loop,
+                                      pred)[0], pred
     # point lefts go through the undecided->scalar path
     p_lefts = [Geom.point(3, 3), Geom.point(9, 9)]
-    pp = P.prepare_batch_lefts(p_lefts)
-    got_p = P.batch_predicate_one(pp, np.arange(2), Geom.point(3, 3),
-                                  "covers")
+    got_p = BW.batch_predicate_one(runs(p_lefts), np.arange(2),
+                                   Geom.point(3, 3), "covers")
     assert bool(got_p[0]) and not bool(got_p[1])
