@@ -697,6 +697,9 @@ def cell_spatial_join(left: DataFrame, right: DataFrame, *,
         _check_join_pattern(pattern)
     elif pattern is not None:
         raise ValueError("pattern is only valid with predicate='relate_pattern'")
+    elif predicate is None:
+        raise ValueError("predicate=None (bbox-only) is not supported by a "
+                         "cell join; give an exact predicate")
     else:
         _BroadcastSide.check_predicate(predicate, distance)
     k = int(np.ceil(distance / (180.0 / (1 << res)))) \

@@ -101,23 +101,43 @@ def text_identity_violations(df: DataFrame) -> int:
 GEO_PATTERN = r"located at (-?\d+\.\d+),(-?\d+\.\d+)"
 
 
+def _geotags(text):
+    """The first 'located at <lat>,<lon>' geotag of ``text`` as two
+    double expressions (lat, lon), NULL without a tag.  ONE regexp
+    match per row: the full match is split on the comma with plain
+    string ops (group 1/2 of GEO_PATTERN are exactly the
+    comma-separated halves of the match after the 11-char
+    'located at ' prefix)."""
+    m = F.regexp_extract(text, GEO_PATTERN, 0)
+    body = F.substring(m, 12, 2_000_000)        # strip 'located at '
+    lat = F.substring_index(body, ",", 1)
+    lon = F.substring_index(body, ",", -1)
+    return (F.when(lat != "", lat.cast("double")),
+            F.when(lon != "", lon.cast("double")))
+
+
 def geocode(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Extract 'located at <lat>,<lon>' geotags (deterministic regex
     gazetteer per SURVEY.md §2.11); rows without a tag get NULL lat/lon
     and are dropped from joins downstream (inner-join semantics).
+    ``lat``/``lon`` are added (or replaced in place) as by
+    ``withColumn``.
 
-    r6 (guide §1.2 per-task work): ONE regexp evaluation per row — the
-    full match is taken once and split on the comma with plain string
-    ops; the former per-group extraction ran the same Java regex twice
-    per row.  Output values are identical: group 1/2 of GEO_PATTERN
-    are exactly the comma-separated halves of the match after the
-    11-char 'located at ' prefix."""
-    m = F.regexp_extract(F.col(text_col), GEO_PATTERN, 0)
-    body = F.substring(m, 12, 2_000_000)        # strip 'located at '
-    lat = F.substring_index(body, ",", 1)
-    lon = F.substring_index(body, ",", -1)
-    return (df.withColumn("lat", F.when(lat != "", lat.cast("double")))
-              .withColumn("lon", F.when(lon != "", lon.cast("double"))))
+    The regexp is evaluated ONCE per row, whatever filter is put on
+    the output later.  The two doubles are projected once as private
+    columns and re-emitted as ``lat``/``lon`` by a one-row generator,
+    ``stack(1, ...)``.  Catalyst cannot substitute a Generate's output
+    attributes into a predicate, so a filter on ``lat``, ``lon`` or
+    anything derived from them (the ``cell`` of
+    ``tiles.assign_cells``, a ``tile_stats(...).where(cell >= 0)``)
+    stops above the Generate and reads two doubles.  Without it the
+    filter is pushed below the Project and inlined with the whole
+    regexp chain, which then runs again in the Project."""
+    lat, lon = _geotags(F.col(text_col))
+    return (df.withColumns({"_geo_lat": lat, "_geo_lon": lon})
+              .select("*", F.expr("stack(1, _geo_lat, _geo_lon) AS (_geo_y, _geo_x)"))
+              .withColumns({"lat": F.col("_geo_y"), "lon": F.col("_geo_x")})
+              .drop("_geo_lat", "_geo_lon", "_geo_y", "_geo_x"))
 
 
 # ---------------------------------------------------------------------------
@@ -192,14 +212,18 @@ def salt_hot_cells(left: DataFrame, right: DataFrame, hot: DataFrame,
 
 def _page_pairs(pages: DataFrame, layer: DataFrame, res: int,
                 keep: list[str] | None = None) -> DataFrame:
-    """geocode → one lon/lat probe: ``keep`` columns + cell + polygon_id
+    """geotags → one lon/lat probe: ``keep`` columns + cell + polygon_id
     per (tagged page, polygon) hit — the one pair plan behind
     ``flagship`` and ``run_with_checkpoint``.  No isNotNull filter on
-    lon/lat: Catalyst would push it into the regexp chain and re-run
-    it per row; the probe drops NULL/NaN rows in the worker instead."""
+    lon/lat: the probe drops NULL/NaN rows in the worker itself.  The
+    tags are ``geocode``'s expressions without its generator: the
+    probe's ``mapInArrow`` already keeps any later filter away from
+    the regexp chain, so the Generate would only add per-row work."""
+    lat, lon = _geotags(F.col("text"))
     return SJ.broadcast_lonlat_join(
-        geocode(pages), layer, lon="lon", lat="lat", predicate="intersects",
-        right_geom="geom", right_id="polygon_id", cell_res=res, keep=keep)
+        pages.withColumns({"lat": lat, "lon": lon}), layer, lon="lon",
+        lat="lat", predicate="intersects", right_geom="geom",
+        right_id="polygon_id", cell_res=res, keep=keep)
 
 
 def flagship(pages: DataFrame, layer: DataFrame, res: int = 7) -> DataFrame:

@@ -37,7 +37,9 @@ def stream_tile_counts(pages_stream: DataFrame, res: int = 7,
                        window: str = "10 minutes",
                        watermark: str = "30 minutes") -> DataFrame:
     """Event-time windowed per-cell page counts with a late-data
-    watermark — the streaming form of tiles.tile_stats."""
+    watermark — the streaming form of tiles.tile_stats.  The
+    ``lon.isNotNull()`` filter reads the two geocoded doubles; it is
+    not pushed into the regexp chain (see ``pipeline.geocode``)."""
     pts = PL.geocode(pages_stream).where(F.col("lon").isNotNull())
     cells = pts.withColumn("cell", SG.st_cell_lonlat(F.col("lon"), F.col("lat"), res))
     return (cells.withWatermark("warc_ts", watermark)
@@ -54,7 +56,9 @@ def stream_region_counts(pages_stream: DataFrame, layer: DataFrame,
                          watermark: str = "30 minutes") -> DataFrame:
     """Streaming spatial join: the broadcast-STRtree probe works
     unchanged on a stream (mapInArrow is stream-capable), then
-    event-time windowed per-region counts."""
+    event-time windowed per-region counts.  The ``lon.isNotNull()``
+    filter reads the two geocoded doubles; it is not pushed into the
+    regexp chain (see ``pipeline.geocode``)."""
     from . import join as SJ
     pts = PL.geocode(pages_stream).where(F.col("lon").isNotNull())
     joined = SJ.broadcast_lonlat_join(

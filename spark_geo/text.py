@@ -530,7 +530,19 @@ def connected_components(pairs: DataFrame, src: str = "da", dst: str = "db",
     re-invoked with the same directory RESUMES from the last completed
     round instead of restarting (mirrors pipeline.run_with_checkpoint's
     manifest idiom); at 100 TB a multi-hour CC over billions of edges
-    needs exactly this."""
+    needs exactly this.
+
+    Cost per round, in-memory mode: four hash exchanges.  The
+    neighbor join shuffles the whole edges table by ``_s`` and the
+    whole labels table by ``node``, the min aggregate shuffles its
+    map-side partial minima by ``_d``, and the left join with the
+    previous labels shuffles those labels by ``node`` once more.  A ``localCheckpoint``
+    reports unknown partitioning under AQE, so neither the edges (the
+    same every round) nor the labels (produced by node) are reused
+    as partitioned.  AQE may turn either join into a broadcast join
+    afterwards, but only after those shuffles have run.  Seen in the
+    executed plan of one round on a 2,000-edge ring at 8 shuffle
+    partitions."""
     e = pairs.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     if checkpoint_dir is None:
         edges = e.union(e.select(F.col("_d").alias("_s"),

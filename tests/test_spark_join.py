@@ -662,14 +662,16 @@ def test_broadcast_join_validates_on_driver(spark):
 
 def test_cell_join_validates_on_driver(spark):
     """cell_spatial_join, on both paths, raises ValueError for dwithin
-    without a distance and for an unknown predicate when the join is
+    without a distance, for an unknown predicate and for the bbox-only
+    ``None`` (a cell join has no bbox-only mode) when the join is
     built, not in a worker."""
     left, points, _ = _parity_fixture(spark)
     wleft = left.select("left_id", "geom")
     for left_is_points in (True, False):
         for kw in (dict(predicate="dwithin"), dict(predicate="nearby"),
-                   dict(predicate="nearby", distance=1.0)):
-            with pytest.raises(ValueError, match="distance parameter|unknown predicate"):
+                   dict(predicate="nearby", distance=1.0), dict(predicate=None)):
+            with pytest.raises(ValueError,
+                               match="distance parameter|unknown predicate|bbox-only"):
                 SJ.cell_spatial_join(wleft, points, left_is_points=left_is_points, **kw)
 
 

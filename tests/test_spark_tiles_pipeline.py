@@ -34,10 +34,60 @@ def test_text_byte_identity(pages):
     assert PL.text_identity_violations(pages) == 0
 
 
-def test_geocode_roundtrip(pages):
+@pytest.fixture(scope="module")
+def odd_pages(spark):
+    """Geotag edge cases: tagged and untagged rows, NULL text, two tags
+    (the first wins), a tag without decimals (no match, NULL) and
+    negative coordinates."""
+    texts = ["Page reports on a site located at 12.5,-3.25 with notes.",
+             "no geotag in this page",
+             None,
+             "located at 1.5,2.5 then located at 3.5,4.5",
+             "located at 1,2",
+             "located at -33.8688,-151.2093",
+             "located at -0.0001,179.9999."]
+    return spark.createDataFrame(list(enumerate(texts)), "id long, text string")
+
+
+def _withcolumn_geocode(df):
+    """``geocode``'s expressions as two plain ``withColumn`` calls,
+    with no generator: the value oracle for ``geocode``."""
+    m = F.regexp_extract(F.col("text"), PL.GEO_PATTERN, 0)
+    body = F.substring(m, 12, 2_000_000)
+    lat = F.substring_index(body, ",", 1)
+    lon = F.substring_index(body, ",", -1)
+    return (df.withColumn("lat", F.when(lat != "", lat.cast("double")))
+              .withColumn("lon", F.when(lon != "", lon.cast("double"))))
+
+
+def _tiles_chain(pts):
+    stats = TL.tile_stats(TL.assign_cells(pts, "lon", "lat", 6)).where(F.col("cell") >= 0)
+    roll = TL.tile_rollup(stats, 3, aggs=[F.sum("n").alias("n")])
+    return TL.cells_to_polygons(roll, cell_col="parent_cell")
+
+
+def test_geocode_roundtrip(pages, odd_pages):
     g = PL.geocode(pages).select("lat", "lon", "text").collect()
     for r in g[:50]:
         assert f"located at {r['lat']:.4f},{r['lon']:.4f}" in r["text"]
+    # column names, order, types, nullability and every value equal
+    # the withColumn chain's, also over an input that already has
+    # lat/lon columns (replaced in place)
+    with_latlon = odd_pages.select("id", F.lit("x").alias("lon"), "text",
+                                   F.lit(0.0).alias("lat"))
+    for df in (odd_pages, with_latlon, pages):
+        got, want = PL.geocode(df), _withcolumn_geocode(df)
+        assert got.columns == want.columns
+        assert got.schema == want.schema       # types and nullability
+        assert got.collect() == want.collect()
+    rows = {r["id"]: (r["lat"], r["lon"]) for r in PL.geocode(odd_pages).collect()}
+    assert rows == {0: (12.5, -3.25), 1: (None, None), 2: (None, None),
+                    3: (1.5, 2.5), 4: (None, None),
+                    5: (-33.8688, -151.2093), 6: (-0.0001, 179.9999)}
+    # the filtered tiles chain answers the same (parent_cell, n) rows
+    tiles = [_tiles_chain(geo(pages)).select("parent_cell", "n").orderBy("parent_cell").collect()
+             for geo in (PL.geocode, _withcolumn_geocode)]
+    assert tiles[0] == tiles[1] and sum(r["n"] for r in tiles[0]) == 2000
 
 
 def test_flagship_counts(spark, pages):
@@ -202,18 +252,30 @@ def test_checkpoint_rejects_bad_num_parts(spark, pages, tmp_path, num_parts):
 
 def test_page_pairs_plan_shape(spark, pages):
     """Flagship and checkpoint share one pair plan: a single Python
-    crossing (the lon/lat probe's map node), no row-wise Python UDF, and no
-    Filter that re-evaluates the geocode regexp (a pushed isNotNull)."""
+    crossing (the lon/lat probe's map node) and no row-wise Python UDF.
+    In it and in every geocode consumer that filters on lon/lat or on
+    a cell derived from them (an isNotNull, the tiles chain's
+    ``cell >= 0``, the batch form of ``stream_tile_counts``), the
+    geocode regexp is evaluated in exactly one plan node and in no
+    Filter: the filter is not pushed into the regexp chain."""
     import re
+    from spark_geo import streaming as STR
     layer = PL.make_world_layer(spark)
     work = (pages.withColumn("part_id", F.pmod(F.xxhash64("url"), F.lit(8)))
             .where(F.col("part_id").isin([1, 2])))
     keep = ["part_id", "url", "lang"]
-    for df, cols in ((PL._page_pairs(pages, layer, 6), []),
-                     (PL._page_pairs(work, layer, 6, keep=keep), keep)):
+    pairs = [(PL._page_pairs(pages, layer, 6), []),
+             (PL._page_pairs(work, layer, 6, keep=keep), keep)]
+    for df, cols in pairs:
         assert df.columns == cols + ["cell", "polygon_id"]
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert len(re.findall(r"\b(MapInPandas|MapInArrow|PythonMapInArrow)\b", plan)) == 1, plan
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
-        for line in plan.splitlines():
-            assert not (re.search(r"\bFilter\b", line) and "regexp_extract" in line), plan
+    filtered = [PL.geocode(pages).where(F.col("lon").isNotNull()),
+                _tiles_chain(PL.geocode(pages)),
+                STR.stream_tile_counts(pages, res=6)]   # watermark is a no-op in batch
+    for df in [df for df, _ in pairs] + filtered:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        nodes = [line for line in plan.splitlines() if "regexp_extract" in line]
+        assert len(nodes) == 1, plan
+        assert not re.search(r"\bFilter\b", nodes[0]), plan
