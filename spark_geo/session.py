@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -12,11 +14,18 @@ from pyspark.sql import SparkSession
 def ship_package(spark: SparkSession) -> str:
     """Ship spark_geo to the executors' Python workers as a zip — the
     programmatic equivalent of ``spark-submit --py-files spark_geo.zip``
-    (north_star deployment requirement).  Idempotent per session."""
+    (north_star deployment requirement).  Idempotent per session.
+
+    Each session writes its zip into its own ``mkdtemp`` directory,
+    removed when the interpreter exits: a path shared between processes
+    lets one process overwrite the zip another is shipping, so a worker
+    could import a half-written zip or another checkout's spark_geo."""
     if getattr(spark, "_spark_geo_shipped", False):
         return ""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "spark_geo_pkg.zip")
+    zdir = tempfile.mkdtemp(prefix="spark_geo_pkg_")
+    atexit.register(shutil.rmtree, zdir, True)
+    zpath = os.path.join(zdir, "spark_geo_pkg.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg_dir):
             if "__pycache__" in root:
